@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.algos.{CDLP, PageRank, Triangles, WCC}
+import graft.engine.Engine
 import graft.graph.{GraphBuilder, LinkGraph}
 import graft.synth.{Synth, SynthSql, SynthSql2, SynthSql3}
 
@@ -135,14 +136,16 @@ object SparkEntry {
     "tg_pagerank_resume" -> ((s, dir) => {
       val g = graphFor(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-pr-resume").toString
-      val ckpt = Some(graft.engine.CheckpointConfig(
-        new graft.ingest.SnapshotStore(tmp), "pr", every = 1))
-      PageRank.run(g, PageRank.Config(0.85, 5), ckpt = ckpt)
-      val pr = PageRank.run(g, PageRank.Config(0.85, PrRounds), ckpt = ckpt)
-      val out = withOid(g, pr.select(col("id"), round(col("rank"), 6).as("pr")), "pr")
-        .localCheckpoint(true)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      out
+      try {
+        val ckpt = Some(graft.engine.CheckpointConfig(
+          new graft.ingest.SnapshotStore(tmp), "pr", every = 1))
+        PageRank.run(g, PageRank.Config(0.85, 5), ckpt = ckpt)
+        val pr = PageRank.run(g, PageRank.Config(0.85, PrRounds), ckpt = ckpt)
+        val out = Engine.checkpoint(
+          withOid(g, pr.select(col("id"), round(col("rank"), 6).as("pr")), "pr"))
+        out.rdd.count()
+        out
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }),
     // weighted PageRank (nx pagerank on the weighted transcript graph:
     // contributions split by edge weight / Σ out-weights)
@@ -157,18 +160,19 @@ object SparkEntry {
     }),
     // exact WCC checkpoint/resume (same contract as tg_pagerank_resume):
     // 5 HashMin rounds checkpointed per-round, fresh invocation resumes
-    // from the manifest and runs to the fixpoint. The resumed frontier
-    // restarts dense (full state) but HashMin is monotone/idempotent, so
-    // the fixpoint — and the hash vs the uninterrupted twin — is EXACT
+    // from the manifest (state with its changed-frontier flag) and runs
+    // to the fixpoint — the hash vs the uninterrupted twin is EXACT
     "tg_wcc_resume" -> ((s, dir) => {
       val g = graphFor(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-wcc-resume").toString
-      val ckpt = Some(graft.engine.CheckpointConfig(
-        new graft.ingest.SnapshotStore(tmp), "wcc", every = 1))
-      WCC.run(g, maxIter = 5, ckpt = ckpt)
-      val out = WCC.canonical(g, WCC.run(g, ckpt = ckpt)).localCheckpoint(true)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      out
+      try {
+        val ckpt = Some(graft.engine.CheckpointConfig(
+          new graft.ingest.SnapshotStore(tmp), "wcc", every = 1))
+        WCC.run(g, maxIter = 5, ckpt = ckpt)
+        val out = Engine.checkpoint(WCC.canonical(g, WCC.run(g, ckpt = ckpt)))
+        out.rdd.count()
+        out
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }),
     "tg_cdlp" -> ((s, dir) => {
       val g = graphFor(s, dir)
@@ -225,15 +229,15 @@ object SparkEntry {
       val csvDir = java.nio.file.Files.createTempDirectory("graft-csv").toString
       src.write.mode("overwrite")
         .option("header", "true").option("delimiter", "|").csv(csvDir)
-      val out = s.read
+      val out = Engine.checkpoint(s.read
         .option("header", "true").option("delimiter", "|")
         .schema(src.schema)
         .csv(csvDir)
         .select(col("c_mktsegment"), col("c_acctbal"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
-          dec(sum(dec(col("c_acctbal")))).cast("double").as("acctbal_sum"))
-        .localCheckpoint(true)
+          dec(sum(dec(col("c_acctbal")))).cast("double").as("acctbal_sum")))
+      out.rdd.count()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(csvDir))
       out
     }),
@@ -1419,11 +1423,11 @@ object SparkEntry {
         add = Seq(graft.schema.Vertex(10000000L, "added:x")).toDS(),
         delete = Seq(graft.schema.Vertex(delId, "tool:t0")).toDS(),
         store, "mod_vs", "mod_es")
-      val out = g2.vertices.toDF
+      val out = Engine.checkpoint(g2.vertices.toDF
         .join(g2.edges.toDF.groupBy(col("src").as("id")).agg(count(lit(1)).as("od")),
           Seq("id"), "left")
-        .select(col("oid"), coalesce(col("od"), lit(0L)).cast("long").as("out_deg"))
-        .localCheckpoint(true)
+        .select(col("oid"), coalesce(col("od"), lit(0L)).cast("long").as("out_deg")))
+      out.rdd.count()
       org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
       out
     }),
@@ -1445,11 +1449,11 @@ object SparkEntry {
         add = Seq(graft.schema.Edge(asstId, sysId, 99.0)).toDS(),
         delete = g.edges.toDF.where(col("src") === sysId).as[graft.schema.Edge],
         store, "mod_es2")
-      val out = g2.edges.toDF.groupBy(col("src"))
+      val out = Engine.checkpoint(g2.edges.toDF.groupBy(col("src"))
         .agg(count(lit(1)).cast("long").as("out_deg"), sum(col("weight")).as("w_sum"))
         .join(g.vertices.toDF.select(col("id").as("src"), col("oid")), "src")
-        .select(col("oid"), col("out_deg"), col("w_sum"))
-        .localCheckpoint(true)
+        .select(col("oid"), col("out_deg"), col("w_sum")))
+      out.rdd.count()
       org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
       out
     }),
@@ -1471,11 +1475,11 @@ object SparkEntry {
         "g.V().has('oid', 'tool:t3').drop()", store, "gmut_vs", "gmut_es")
       val vs = store.readLatest(s, "gmut_vs").get._2
       val es = store.readLatest(s, "gmut_es").get._2
-      val out = es
+      val out = Engine.checkpoint(es
         .join(vs.select(col("id").as("src"), col("oid").as("src_oid")), "src")
         .join(vs.select(col("id").as("dst"), col("oid").as("dst_oid")), "dst")
-        .select(col("src_oid"), col("dst_oid"), col("weight"))
-        .localCheckpoint(true)
+        .select(col("src_oid"), col("dst_oid"), col("weight")))
+      out.rdd.count()
       org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
       out
     }),
@@ -1486,7 +1490,8 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft-clear")
       val store = new graft.ingest.SnapshotStore(root.toString)
       val (g2, _) = graft.graph.GraphOps.clearEdges(g, store, "clear_es")
-      val out = graft.graph.GraphOps.report(g2).localCheckpoint(true)
+      val out = Engine.checkpoint(graft.graph.GraphOps.report(g2))
+      out.rdd.count()
       org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
       out
     }),
@@ -1604,9 +1609,9 @@ object SparkEntry {
       val m = store.readManifest("degrees", v)
       // eager checkpoint so the scratch snapshot dir can be deleted right
       // away — repeated driver runs would otherwise accumulate /tmp parquet
-      val out = back.withColumn("version", lit(v))
-        .withColumn("manifest_rows", lit(m.rows))
-        .localCheckpoint(true)
+      val out = Engine.checkpoint(back.withColumn("version", lit(v))
+        .withColumn("manifest_rows", lit(m.rows)))
+      out.rdd.count()
       org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
       out
     }),

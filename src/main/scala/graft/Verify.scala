@@ -1,6 +1,8 @@
 package graft
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -19,7 +21,7 @@ import java.nio.file.{Files, Paths}
   * threads on the shared session conf — become no-ops: AQE stays ON for
   * the whole run, exactly the sequential judge-run environment. (AQE
   * never changes results; and a graph cache materialized under AQE-off
-  * breaks cached-plan substitution for the persist-chained PageRank
+  * broke cached-plan substitution for the then persist-chained PageRank
   * states — measured 19.5 s → 6+ min — so ON is also the fast setting.)
   */
 object Verify {
@@ -74,7 +76,7 @@ object Verify {
       })
     }
     pool.shutdown()
-    pool.awaitTermination(4, TimeUnit.HOURS)
+    if (!pool.awaitTermination(4, TimeUnit.HOURS)) failures.add("(timed out)")
     System.err.println(f"[verify] ${todo.size - failures.size}/${todo.size} queries dumped " +
       f"in ${(System.nanoTime() - t0) / 1e9}%.1f s (par=$par, cpus=$cpus)")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -99,5 +101,9 @@ object Verify {
       .map { case (k, (a, b)) => s"${q(k)}: [${q(a)}, ${q(b)}]" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/convergence_sql.json"), conv)
     spark.stop()
+    if (!failures.isEmpty) {
+      System.err.println(s"[verify] FAILED: ${failures.asScala.toSeq.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

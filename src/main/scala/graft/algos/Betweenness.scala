@@ -28,29 +28,29 @@ object Betweenness {
   def run(g: LinkGraph, sourceOids: Seq[String]): DataFrame = {
     val spark = g.vertices.sparkSession
     Engine.withoutAQE(spark) {
-      val e = g.edges.toDF.select(col("src"), col("dst"))
-        .repartition(col("src")).localCheckpoint(true)
+      val e = Engine.checkpoint(g.edges.toDF.select(col("src"), col("dst"))
+        .repartition(col("src")))
       e.count()
-      val srcIds = g.vertices.toDF.where(col("oid").isin(sourceOids: _*))
-        .select(col("id").as("s")).localCheckpoint(true)
+      val srcIds = Engine.checkpoint(g.vertices.toDF.where(col("oid").isin(sourceOids: _*))
+        .select(col("id").as("s")))
       srcIds.count()
 
       // forward phase: per (source s, vertex v): level, sigma (#shortest
-      // paths). The per-level constant rides a broadcast 1-row frame
+      // paths). The per-level constant rides a 1-row frame
       // (Engine.scalarLong) so superstep codegen is identical per level.
-      var settled = Engine.materialize(
+      var settled = Engine.checkpoint(
         srcIds.select(col("s"), col("s").as("id"), lit(0L).as("level"), lit(1.0).as("sigma")))
       var frontier = settled
       var level = 0L
       var more = true
       while (more) {
         val nextLevel = level + 1L
-        val lvl = broadcast(Engine.scalarLong(spark, "__lvl", nextLevel))
+        val lvl = Engine.scalarLong(spark, "__lvl", nextLevel)
         val expanded = frontier
           .join(e.withColumnRenamed("src", "id"), Seq("id"))
           .groupBy(col("s"), col("dst").as("id"))
           .agg(sum(col("sigma")).as("sigma"))
-        val next = Engine.materialize(
+        val next = Engine.checkpoint(
           expanded.join(settled.select(col("s"), col("id"), lit(true).as("__seen")),
             Seq("s", "id"), "left")
             .where(col("__seen").isNull)
@@ -59,7 +59,7 @@ object Betweenness {
         val n = next.count()
         if (n == 0) more = false
         else {
-          settled = Engine.materialize(settled.unionByName(next.select("s", "id", "level", "sigma")))
+          settled = Engine.checkpoint(settled.unionByName(next.select("s", "id", "level", "sigma")))
           settled.count()
           frontier = next.select("s", "id", "level", "sigma")
           level = nextLevel
@@ -68,12 +68,12 @@ object Betweenness {
 
       // backward phase: delta(v) = Σ_{w: v→w, level(w)=level(v)+1} σ(v)/σ(w)·(1+δ(w))
       val all = settled // already a pinned checkpoint chain
-      var delta = Engine.materialize(
+      var delta = Engine.checkpoint(
         all.select(col("s"), col("id"), lit(0.0).as("delta")))
       var l = level
       while (l > 0) {
-        val lCur = broadcast(Engine.scalarLong(spark, "__l", l))
-        val lPrev = broadcast(Engine.scalarLong(spark, "__lp", l - 1))
+        val lCur = Engine.scalarLong(spark, "__l", l)
+        val lPrev = Engine.scalarLong(spark, "__lp", l - 1)
         val wLevel = all.crossJoin(lCur).where(col("level") === col("__l"))
           .join(delta, Seq("s", "id"))
           .select(col("s"), col("id").as("w"), col("sigma").as("sw"), col("delta").as("dw"))
@@ -81,7 +81,7 @@ object Betweenness {
           .join(wLevel.hint("shuffle_hash"), "w")
           .groupBy(col("s"), col("src").as("id"))
           .agg(sum((lit(1.0) + col("dw")) / col("sw")).as("cf"))
-        delta = Engine.materialize(
+        delta = Engine.checkpoint(
           delta.join(
             contrib.join(
               all.crossJoin(lPrev).where(col("level") === col("__lp"))

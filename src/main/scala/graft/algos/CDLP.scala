@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.engine.{Engine, IterationMetrics}
+import graft.engine.{Engine, Superstep}
 import graft.engine.Engine.MetricsLog
 import graft.graph.LinkGraph
 
@@ -32,40 +31,31 @@ object CDLP {
       g: LinkGraph,
       rounds: Int = 10,
       log: MetricsLog = new MetricsLog
-  ): DataFrame = {
-    Engine.withoutAQE(g.vertices.sparkSession) {
+  ): DataFrame = Superstep.run(g.vertices.sparkSession, rounds, log) {
     val dirEdges = g.edges.toDF.where(col("src") =!= col("dst"))
     // Neighbor multiset: u→v gives v the label of u AND u the label of v.
-    val nbrs = dirEdges.select(col("src").as("v"), col("dst").as("nbr"))
-      .unionAll(dirEdges.select(col("dst").as("v"), col("src").as("nbr")))
-      .repartition(col("nbr"))
-      .localCheckpoint(true)
+    val nbrs = Engine.checkpoint(
+      dirEdges.select(col("src").as("v"), col("dst").as("nbr"))
+        .unionAll(dirEdges.select(col("dst").as("v"), col("src").as("nbr")))
+        .repartition(col("nbr")))
     val nbrCount = nbrs.count()
-
-    var labels = Engine.materialize(
-      g.vertices.toDF.select(col("id"), col("id").as("label"))
-        .repartition(col("id")))
-
-    var iter = 0
-    while (iter < rounds) {
-      val t0 = System.nanoTime()
-      val newLabels = nbrs
-        .join(labels.select(col("id").as("nbr"), col("label").as("nl")).hint("shuffle_hash"), "nbr")
-        .groupBy(col("v"), col("nl"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("v").as("id"))
-        .agg(max(struct(col("cnt"), (-col("nl")).as("neg"), col("nl").as("lab"))).as("m"))
-        .select(col("id"), col("m.lab").as("new_label"))
-      val next = labels
-        .join(newLabels.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("new_label"), col("label")).as("label"))
-      labels = Engine.materialize(next)
-      labels.count() // CDLP has no convergence aggregate; one job per round
-      val secs = (System.nanoTime() - t0) / 1e9
-      log.record(IterationMetrics(iter, secs, 0.0, nbrCount))
-      iter += 1
-    }
-    labels
-    }
+    Superstep.Loop(
+      init = g.vertices.toDF.select(col("id"), col("id").as("label")).repartition(col("id")),
+      scalars = Map.empty,
+      step = (labels, _) => {
+        val newLabels = nbrs
+          .join(labels.select(col("id").as("nbr"), col("label").as("nl")).hint("shuffle_hash"), "nbr")
+          .groupBy(col("v"), col("nl"))
+          .agg(count(lit(1)).as("cnt"))
+          .groupBy(col("v").as("id"))
+          .agg(max(struct(col("cnt"), (-col("nl")).as("neg"), col("nl").as("lab"))).as("m"))
+          .select(col("id"), col("m.lab").as("new_label"))
+        labels
+          .join(newLabels.hint("shuffle_hash"), Seq("id"), "left")
+          .select(col("id"), coalesce(col("new_label"), col("label")).as("label"))
+      },
+      // CDLP has no convergence aggregate; the count is the round's job
+      stats = _.agg(count(lit(1))),
+      edges = nbrCount)
   }
 }

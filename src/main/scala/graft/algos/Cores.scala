@@ -20,17 +20,16 @@ object Cores {
     * drop vertices with degree < k until none qualify.
     */
   def kcore(g: LinkGraph, k: Int): DataFrame = {
-    var edges = Engine.materialize(
+    var edges = Engine.checkpoint(
       g.undirectedEdges.select(col("a"), col("b"))
         .unionAll(g.undirectedEdges.select(col("b").as("a"), col("a").as("b"))))
     var peeled = 1L
     while (peeled > 0) {
       val deg = edges.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-      val drop = deg.where(col("deg") < k).select(col("id"))
-        .localCheckpoint(true)
+      val drop = Engine.checkpoint(deg.where(col("deg") < k).select(col("id")))
       peeled = drop.count()
       if (peeled > 0) {
-        edges = Engine.materialize(
+        edges = Engine.checkpoint(
           edges
             .join(drop.select(col("id").as("a")), Seq("a"), "left_anti")
             .join(drop.select(col("id").as("b")), Seq("b"), "left_anti"))
@@ -46,7 +45,7 @@ object Cores {
   def kshell(g: LinkGraph): DataFrame = {
     val spark = g.vertices.sparkSession
     import spark.implicits._
-    var edges = Engine.materialize(
+    var edges = Engine.checkpoint(
       g.undirectedEdges.select(col("a"), col("b"))
         .unionAll(g.undirectedEdges.select(col("b").as("a"), col("a").as("b"))))
     edges.count()
@@ -62,11 +61,11 @@ object Cores {
         peeled = drop.count()
         if (peeled > 0) {
           // dropped vertices belong to shell k-1
-          shells = Engine.materialize(
+          shells = Engine.checkpoint(
             shells.join(drop.withColumn("__hit", lit(true)), Seq("id"), "left")
               .select(col("id"),
                 when(col("__hit"), lit(k - 1L)).otherwise(col("shell")).as("shell")))
-          edges = Engine.materialize(
+          edges = Engine.checkpoint(
             edges
               .join(drop.select(col("id").as("a")), Seq("a"), "left_anti")
               .join(drop.select(col("id").as("b")), Seq("b"), "left_anti"))
@@ -77,7 +76,7 @@ object Cores {
       live = remaining.count()
       if (live > 0) {
         // survivors at this k have shell >= k
-        shells = Engine.materialize(
+        shells = Engine.checkpoint(
           shells.join(remaining.withColumn("__live", lit(true)), Seq("id"), "left")
             .select(col("id"),
               when(col("__live"), lit(k)).otherwise(col("shell")).as("shell")))

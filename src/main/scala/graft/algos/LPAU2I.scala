@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.engine.Engine
+import graft.engine.{Engine, Superstep}
 import graft.graph.LinkGraph
 
 /** Bipartite user↔item weighted label-vector diffusion, semantics of the
@@ -27,19 +26,11 @@ object LPAU2I {
     * @return (id, labels) for every vertex after `rounds` u2i+i2u rounds.
     */
   def run(g: LinkGraph, uLabels: DataFrame, propNum: Int, rounds: Int): DataFrame = {
-    val spark = g.vertices.sparkSession
-    Engine.withoutAQE(spark) {
-      val e = g.edges.toDF.repartition(col("src")).localCheckpoint(true)
+    Superstep.run(g.vertices.sparkSession, rounds) {
+      val e = Engine.checkpoint(g.edges.toDF.repartition(col("src")))
       e.count()
       val zero = array((0 until propNum).map(_ => lit(0.0)): _*)
       val uSide = uLabels.select(col("id"), col("labels"))
-      var state = Engine.materialize(
-        g.vertices.toDF
-          .join(uSide, Seq("id"), "left")
-          .select(col("id"), coalesce(col("labels"), zero).as("labels"),
-            col("labels").isNotNull.as("isU"))
-          .repartition(col("id")))
-      state.count()
 
       // Hub-safe vector aggregation: explode by label position so the
       // shuffle carries (dst, pos) partial sums — map-side combine bounds
@@ -64,15 +55,18 @@ object LPAU2I {
             col("isU"))
       }
 
-      var iter = 0
-      while (iter < rounds) {
-        state = Engine.materialize(diffuse(state, fromU = true)) // u2i
-        state.count()
-        state = Engine.materialize(diffuse(state, fromU = false)) // i2u
-        state.count()
-        iter += 1
-      }
-      state.select(col("id"), col("labels"))
+      // a round is u2i then i2u; the u2i half is checkpointed because
+      // the i2u half reads it twice
+      Superstep.Loop(
+        init = g.vertices.toDF
+          .join(uSide, Seq("id"), "left")
+          .select(col("id"), coalesce(col("labels"), zero).as("labels"),
+            col("labels").isNotNull.as("isU"))
+          .repartition(col("id")),
+        scalars = Map.empty,
+        step = (st, _) => diffuse(Engine.checkpoint(diffuse(st, fromU = true)), fromU = false),
+        stats = _.agg(count(lit(1))),
+        result = (st, _) => st.select(col("id"), col("labels")))
     }
   }
 }

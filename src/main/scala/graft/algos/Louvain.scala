@@ -35,6 +35,24 @@ object Louvain {
         .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
       .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("w"))
 
+  /** [[Engine.checkpoint]] plus a stats reset, for states the next
+    * round's plan references MORE THAN ONCE (the community frame rides
+    * four joins per sweep round). A checkpoint seeds the new LogicalRDD's
+    * sizeInBytes from the child plan's stats, and Catalyst's join-stats
+    * visitor multiplies children — so a state with k self-references
+    * compounds sizeInBytes bits by k× PER ROUND (measured: a 30-round
+    * sweep wedged the driver for 20+ min in BigInteger.multiply around
+    * round ~25; states with one self-reference grow linearly and never hit
+    * this). Rebuilding the frame over the checkpointed RDD resets the
+    * stats to the session default each round. Join planning is unaffected
+    * — the sweep's joins are hinted — and the Row round-trip is bounded by
+    * the state's |V| rows.
+    */
+  private def checkpointReset(df: DataFrame): DataFrame = {
+    val ck = Engine.checkpoint(df)
+    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+  }
+
   /** One synchronous first-phase sweep pass over an explicit
     * (adjacency, degree) pair — shared by the flat [[run]] and the
     * coarsened levels of [[runMultiLevel]].
@@ -71,9 +89,9 @@ object Louvain {
       maxRounds: Int, resolution: Double
   ): DataFrame = {
     // comm rides FOUR joins per round — use the stats-resetting
-    // materialize or Catalyst's sizeInBytes product quadruples its bit
-    // length every round (see Engine.materializeReset)
-    var comm = Engine.materializeReset(
+    // checkpoint or Catalyst's sizeInBytes product quadruples its bit
+    // length every round (see checkpointReset)
+    var comm = checkpointReset(
       ids.select(col("id"), col("id").as("community")).repartition(col("id")))
     var round = 0
     var moved = 1L
@@ -95,11 +113,10 @@ object Louvain {
           (col("wvc") - lit(resolution) * col("kdeg") *
             (col("tot") - when(col("c") === col("community"), col("kdeg")).otherwise(0.0)) / m2)
             .as("gain"))
-      // round parity rides a broadcast 1-row frame, not a lit(): an
+      // round parity rides a 1-row frame, not a lit(): an
       // iteration-varying literal would recompile codegen every round
       // (project invariant; see Engine.scalar)
-      val parity = broadcast(
-        Engine.scalarLong(ids.sparkSession, "__par", (round % 2).toLong))
+      val parity = Engine.scalarLong(ids.sparkSession, "__par", (round % 2).toLong)
       val best = cand
         .groupBy(col("id"))
         .agg(max(struct(col("gain"), (-col("c")).as("negc"), col("c").as("cc"))).as("m"),
@@ -115,7 +132,7 @@ object Louvain {
         .join(best.hint("shuffle_hash"), Seq("id"), "left")
         .select(col("id"), coalesce(col("newc"), col("community")).as("community"),
           (col("newc").isNotNull && col("newc") =!= col("community")).as("changed"))
-      val nextM = Engine.materializeReset(next)
+      val nextM = checkpointReset(next)
       movedPrev = moved
       moved = {
         val r = nextM.agg(sum(when(col("changed"), 1L))).head()
@@ -131,13 +148,12 @@ object Louvain {
   def run(g: LinkGraph, maxRounds: Int = 10, resolution: Double = 1.0): DataFrame = {
     val spark = g.vertices.sparkSession
     Engine.withoutAQE(spark) {
-      val und = symmetrize(g).repartition(col("src")).localCheckpoint(true)
+      val und = Engine.checkpoint(symmetrize(g).repartition(col("src")))
       val m2 = und.agg(sum(col("w"))).head() match {
         case r if r.isNullAt(0) => 1.0
         case r => r.getDouble(0)
       }
-      val deg = und.groupBy(col("src").as("id")).agg(sum(col("w")).as("kdeg"))
-        .localCheckpoint(true)
+      val deg = Engine.checkpoint(und.groupBy(col("src").as("id")).agg(sum(col("w")).as("kdeg")))
       deg.count()
       val comm = sweep(g.vertices.toDF.select(col("id")), und, deg, m2, maxRounds, resolution)
       comm
@@ -161,13 +177,12 @@ object Louvain {
   ): DataFrame = {
     val spark = g.vertices.sparkSession
     Engine.withoutAQE(spark) {
-      var und = symmetrize(g).repartition(col("src")).localCheckpoint(true)
+      var und = Engine.checkpoint(symmetrize(g).repartition(col("src")))
       val m2 = und.agg(sum(col("w"))).head() match {
         case r if r.isNullAt(0) => 1.0
         case r => r.getDouble(0)
       }
-      var deg = und.groupBy(col("src").as("id")).agg(sum(col("w")).as("kdeg"))
-        .localCheckpoint(true)
+      var deg = Engine.checkpoint(und.groupBy(col("src").as("id")).agg(sum(col("w")).as("kdeg")))
       deg.count()
       var ids = g.vertices.toDF.select(col("id"))
       // orig vertex -> current community (composed across levels)
@@ -177,11 +192,11 @@ object Louvain {
         // coarsen: super-vertex = community id; kdeg aggregated over
         // members (keeps self-loop mass); adjacency between distinct
         // communities only
-        val cdeg = Engine.materializeReset(
+        val cdeg = checkpointReset(
           assign.join(deg, Seq("id"), "left")
             .groupBy(col("community").as("id"))
             .agg(sum(coalesce(col("kdeg"), lit(0.0))).as("kdeg")))
-        val cund = Engine.materializeReset(
+        val cund = checkpointReset(
           und
             .join(assign.select(col("id").as("src"), col("community").as("cs")).hint("shuffle_hash"), "src")
             .join(assign.select(col("id").as("dst"), col("community").as("cd")).hint("shuffle_hash"), "dst")
@@ -191,7 +206,7 @@ object Louvain {
         val cids = cdeg.select(col("id"))
         val cassign = sweep(cids, cund, cdeg, m2, roundsPerLevel, resolution)
         // compose: orig -> community -> super-community
-        assign = Engine.materializeReset(
+        assign = checkpointReset(
           assign.join(
             cassign.select(col("id").as("community"), col("community").as("cc")).hint("shuffle_hash"),
             Seq("community"))
@@ -205,12 +220,11 @@ object Louvain {
 
   /** Modularity of a community assignment. */
   def modularity(g: LinkGraph, comm: DataFrame, resolution: Double = 1.0): Double = {
-    val und = g.edges.toDF.where(col("src") =!= col("dst"))
+    val und = Engine.checkpoint(g.edges.toDF.where(col("src") =!= col("dst"))
       .select(col("src"), col("dst"), col("weight"))
       .unionAll(g.edges.toDF.where(col("src") =!= col("dst"))
         .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-      .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("w"))
-      .localCheckpoint(true)
+      .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("w")))
     val m2 = und.agg(sum(col("w"))).head().getDouble(0)
     val in = und
       .join(comm.select(col("id").as("src"), col("community").as("cs")), "src")

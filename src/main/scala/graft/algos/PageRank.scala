@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.engine.{CheckpointConfig, Engine, IterationMetrics}
+import graft.engine.{CheckpointConfig, Engine, Superstep}
 import graft.engine.Engine.MetricsLog
 import graft.graph.LinkGraph
 
@@ -20,12 +19,13 @@ import graft.graph.LinkGraph
   * **contribution form**: the only iterated state is the gather output
   * `c_k(v) = Σ_{u→v} rank_k(u)/outdeg(u)`; ranks are recovered inline as
   * `rank_k = base_k + d·c_k` with `base_k` a driver scalar. Each superstep
-  * is a single job: left-join the (src-partitioned, persisted) edge table
-  * with the previous contributions, partial+final `sum` per dst (map-side
-  * combine absorbs hub skew), then one pass over the static vertex table
-  * computing the L1 delta *and* the next dangling mass — the reference's
-  * cross-worker `Sum()` reduce (`pagerank.h:123-125`). Per-iteration
-  * scalars travel via broadcast 1-row frames ([[Engine.scalar]]) so the
+  * is a single [[Superstep]] job: left-join the (src-partitioned,
+  * checkpointed) edge table with the previous contributions, partial+final
+  * `sum` per dst (map-side combine absorbs hub skew), then one aggregate
+  * over the new contributions giving the next dangling mass (and, in tol
+  * mode, the L1 delta) — the reference's cross-worker `Sum()` reduce
+  * (`pagerank.h:123-125`). Per-iteration
+  * scalars travel via 1-row frames ([[Engine.scalar]]) so the
   * generated code is identical across supersteps (no per-iteration Janino
   * recompile), and driver work stays O(1).
   */
@@ -58,16 +58,7 @@ object PageRank {
       ckpt: Option[CheckpointConfig] = None
   ): DataFrame = {
     val spark = g.vertices.sparkSession
-    Engine.withoutAQE(spark) { runImpl(g, cfg, log, ckpt) }
-  }
-
-  private def runImpl(
-      g: LinkGraph,
-      cfg: Config,
-      log: MetricsLog,
-      ckpt: Option[CheckpointConfig]
-  ): DataFrame = {
-    val spark = g.vertices.sparkSession
+    Superstep.run(spark, cfg.maxIter, log, ckpt) {
     val n = g.numVertices
     require(n > 0, "empty graph")
     val d = cfg.damping
@@ -81,10 +72,8 @@ object PageRank {
       (if (cfg.weighted) sum(col("weight")) else count(lit(1)).cast("double"))
         .as("outdeg"))
 
-    // Static per-vertex facts: dangling = no out-edges. Pinned (private
-    // checkpoint, not persist) — see Engine.pin for the concurrent-
-    // driver rationale shared by every loop-invariant frame here.
-    val verts = Engine.pin(g.vertices.toDF
+    // Static per-vertex facts: dangling = no out-edges.
+    val verts = Engine.checkpoint(g.vertices.toDF
       .join(outDeg.select(col("src").as("id")).withColumn("__has_out", lit(true)), Seq("id"), "left")
       .select(col("id"), col("__has_out").isNull.as("dangling"))
       .repartition(col("id")))
@@ -98,115 +87,64 @@ object PageRank {
     // in; the flag rides the gather groupBy (same cardinality: dst →
     // (dst, dstDangling)) so fixed-round supersteps never touch the
     // vertex table.
-    val e = Engine.pin(simpleEdges
+    val e = Engine.checkpoint(simpleEdges
       .join(outDeg, "src")
       .join(verts.select(col("id").as("dst"), col("dangling").as("dstDangling")), "dst")
       .select(col("src"), col("dst"), (col("weight") / col("outdeg")).as("w"), col("dstDangling"))
       .repartition(col("src")))
     val edgeCount = e.count()
 
-    val emptyC = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      new org.apache.spark.sql.types.StructType()
-        .add("id", "long").add("c", "double"))
+    def baseNext(s: Superstep.Scalars): Double = (1.0 - d) / n + d * s("dsum") / n
 
     // rank_0 = 1/n  ⇔  base_0 = 1/n, c_0 ≡ 0; dsum_0 = |D|/n.
-    val resumed = ckpt.flatMap { c =>
-      c.store.latestVersion(c.table).map { v =>
-        val m = c.store.readManifest(c.table, v)
-        (c.store.read(spark, c.table, v), m.metrics("iter").toInt + 1,
-          m.metrics("base"), m.metrics("dsum"))
-      }
+    Superstep.Loop(
+      init = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row],
+        new org.apache.spark.sql.types.StructType()
+          .add("id", "long").add("dstDangling", "boolean").add("c", "double")),
+      scalars = Map("base" -> 1.0 / n, "dsum" -> danglingCount.toDouble / n,
+        "delta" -> Double.MaxValue),
+      step = (cPrev, s) => {
+        // gather: rank_{k}(u) = baseO + d·c_prev(u), inline on the edge join
+        val cNext = e
+          .join(cPrev.select(col("id").as("src"), col("c")).hint("shuffle_hash"), Seq("src"), "left")
+          .crossJoin(Engine.scalar(spark, "__baseO", s("base")))
+          .select(col("dst"), col("dstDangling"),
+            (col("w") * (col("__baseO") + lit(d) * coalesce(col("c"), lit(0.0)))).as("m"))
+          .groupBy(col("dst").as("id"), col("dstDangling"))
+          .agg(sum(col("m")).as("c"))
+        // Tol mode: the contribution frame's dst set is IDENTICAL every
+        // superstep (every vertex with ≥1 in-edge gets a row — the gather
+        // left-join emits a message for every edge), so the per-vertex L1
+        // term needs only a co-partitioned left join of consecutive
+        // contribution frames; the (n - inCount) zero-in-degree vertices
+        // are a driver-side constant in `fold`.
+        if (cfg.tol.isEmpty) cNext
+        else cNext
+          .join(cPrev.select(col("id"), col("c").as("cO")).hint("shuffle_hash"), Seq("id"), "left")
+          .crossJoin(Engine.scalar(spark, "__dBase", baseNext(s) - s("base")))
+          .select(col("id"), col("dstDangling"), col("c"),
+            abs(col("__dBase") + lit(d) * (col("c") - coalesce(col("cO"), lit(0.0)))).as("ad"))
+      },
+      // dsum = |D|·base + d·Σ_{dangling} c rides the same aggregate
+      stats = c => c.agg(
+        sum(when(col("dstDangling"), col("c"))),
+        if (cfg.tol.isEmpty) lit(-1.0) else sum(col("ad"))),
+      fold = (r, s) => {
+        val b = baseNext(s)
+        Map("base" -> b,
+          "dsum" -> (danglingCount * b + d * Superstep.orZero(r, 0)),
+          "delta" ->
+            (if (cfg.tol.isEmpty) -1.0
+            else Superstep.orZero(r, 1) + noInCount * math.abs(b - s("base"))))
+      },
+      halt = s => cfg.tol.exists(t => s("delta") < (if (cfg.tolTimesN) t * n else t)),
+      edges = edgeCount,
+      result = (c, s) => verts
+        .join(c.select(col("id"), col("c")), Seq("id"), "left")
+        .crossJoin(Engine.scalar(spark, "__base", s("base")))
+        .select(col("id"), (col("__base") + lit(d) * coalesce(col("c"), lit(0.0))).as("rank")))
     }
-    var cPrev = resumed.map(r => Engine.materialize(r._1)).getOrElse(emptyC)
-    var iter = resumed.map(_._2).getOrElse(0)
-    var base = resumed.map(_._3).getOrElse(1.0 / n)
-    var dsum = resumed.map(_._4).getOrElse(danglingCount.toDouble / n)
-    var delta = Double.MaxValue
-
-    def converged: Boolean =
-      cfg.tol.exists(t => delta < (if (cfg.tolTimesN) t * n else t))
-
-    while (iter < cfg.maxIter && !converged) {
-      val t0 = System.nanoTime()
-      val baseNext = (1.0 - d) / n + d * dsum / n
-      val scalars = Engine.scalar(spark, "__baseO", base)
-        .crossJoin(Engine.scalar(spark, "__baseN", baseNext))
-      // gather: rank_{k}(u) = baseO + d·c_prev(u), inline on the edge join
-      val cNext = e
-        .join(cPrev.select(col("id").as("src"), col("c")).hint("shuffle_hash"), Seq("src"), "left")
-        .crossJoin(broadcast(Engine.scalar(spark, "__baseO", base)))
-        .select(col("dst"), col("dstDangling"),
-          (col("w") * (col("__baseO") + lit(d) * coalesce(col("c"), lit(0.0)))).as("m"))
-        .groupBy(col("dst").as("id"), col("dstDangling"))
-        .agg(sum(col("m")).as("c"))
-      // Per-round state is an EAGER private checkpoint (Engine.pin):
-      // eager localCheckpoint retains the groupBy's hash partitioning
-      // (the lazy variant does not — PlanAudit `pagerank_superstep_pinned`)
-      // AND truncates lineage every round. The round-4 persist-chain
-      // (persist per round, unpersist at a 16-iter checkpoint window)
-      // stopped being cache-substituted once the loop-invariant edge
-      // table moved persist→pin for the concurrent-Verify races: with
-      // the chain rooted on a LogicalRDD, every round re-executed the
-      // whole window from the pinned edges — measured on an idle box,
-      // per-iteration wall grew LINEARLY (sf0.4, local[2]: 3.8 s →
-      // 60 s by round 10; local[8]: 3.3 s → 29 s), collapsing scaling
-      // efficiency to 0.46. Eager pin restores flat per-round cost:
-      // the checkpoint job does the superstep compute, the stats
-      // action re-reads ~|V| checkpointed rows (negligible). Tol mode
-      // keeps the lazy materialize: its stats join is the SAME action
-      // that first computes the state, so laziness saves a pass, and
-      // the |V|-row exchange the lazy form adds is one join's input.
-      val cNextM =
-        if (cfg.tol.isDefined) Engine.materialize(cNext)
-        else Engine.pin(cNext)
-      // Convergence/dangling stats without touching the vertex table:
-      // the contribution frame's dst set is IDENTICAL every superstep
-      // (every vertex with ≥1 in-edge gets a row — the gather left-join
-      // emits a message for every edge), so the L1 delta needs only a
-      // co-partitioned left join of consecutive contribution frames plus
-      // a driver-side constant for the (n - inCount) zero-in-degree
-      // vertices whose rank is exactly `base`. Dangling mass folds into
-      // the same aggregate via the baked dstDangling flag — tol mode now
-      // costs exactly ONE extra join per superstep over fixed-round.
-      val stats: Row =
-        if (cfg.tol.isDefined) {
-          cNextM
-            .join(cPrev.select(col("id"), col("c").as("cO")).hint("shuffle_hash"), Seq("id"), "left")
-            .crossJoin(broadcast(scalars))
-            .select(
-              (abs((col("__baseN") - col("__baseO")) +
-                lit(d) * (col("c") - coalesce(col("cO"), lit(0.0))))).as("ad"),
-              when(col("dstDangling"), col("c")).as("dc"))
-            .agg(sum(col("ad")), sum(col("dc"))).head()
-        } else {
-          // fixed-round: dsum = |D|·base + d·Σ_{dangling} c — a straight
-          // aggregate over the cached contributions, no joins at all
-          cNextM.agg(max(lit(-1.0)), sum(when(col("dstDangling"), col("c")))).head()
-        }
-      val sC = if (stats.isNullAt(1)) 0.0 else stats.getDouble(1)
-      dsum = danglingCount * baseNext + d * sC
-      delta =
-        if (cfg.tol.isDefined) {
-          val inDelta = if (stats.isNullAt(0)) 0.0 else stats.getDouble(0)
-          inDelta + noInCount * math.abs(baseNext - base)
-        } else if (stats.isNullAt(0)) 0.0 else stats.getDouble(0)
-      base = baseNext
-      cPrev = cNextM
-      val secs = (System.nanoTime() - t0) / 1e9
-      log.record(IterationMetrics(iter, secs, delta, edgeCount, Map("dsum" -> dsum, "base" -> base)))
-      ckpt.foreach { c =>
-        if (c.every > 0 && iter % c.every == 0)
-          c.store.write(c.table, cPrev,
-            Map("iter" -> iter.toDouble, "base" -> base, "dsum" -> dsum, "delta" -> delta))
-      }
-      iter += 1
-    }
-    val result = verts
-      .join(cPrev.select(col("id"), col("c")), Seq("id"), "left")
-      .crossJoin(broadcast(Engine.scalar(spark, "__base", base)))
-      .select(col("id"), (col("__base") + lit(d) * coalesce(col("c"), lit(0.0))).as("rank"))
-    result
   }
 
   /** Personalized PageRank — the `personalization=` mode of the
@@ -225,49 +163,50 @@ object PageRank {
     * message exchange (state re-hashed to `src`, partial-summed by
     * `dst`), the vertex join is co-partitioned with the gather output,
     * the seed indicator is a round-invariant lit, and the per-round
-    * dangling scalar rides a broadcast 1-row frame (never a lit).
+    * dangling scalar rides a 1-row frame (never a lit).
     * Returns (id, rank).
     */
   def personalized(
       g: LinkGraph, seedId: Long, rounds: Int, damping: Double = 0.85): DataFrame = {
     val spark = g.vertices.sparkSession
-    Engine.withoutAQE(spark) {
+    Superstep.run(spark, rounds) {
       val d = damping
       val simpleEdges = g.edges.toDF.select(col("src"), col("dst"))
       val outDeg = simpleEdges.groupBy("src").agg(count(lit(1)).as("od"))
-      // pinned, not persisted: tg_ppr and tg_ppr_sparse derive
-      // canonically-equal `e` frames — under the concurrent Verify
-      // driver a shared CacheManager entry would be unpersisted by
-      // whichever finishes first (see Engine.pin)
-      val e = Engine.pin(simpleEdges.join(outDeg, "src")
+      // checkpointed, not persisted: tg_ppr and tg_ppr_sparse derive
+      // canonically-equal `e` frames (see Engine.checkpoint)
+      val e = Engine.checkpoint(simpleEdges.join(outDeg, "src")
         .select(col("src"), col("dst"), (lit(1.0) / col("od")).as("w"))
         .repartition(col("src")))
-      val verts = Engine.pin(g.vertices.toDF
+      e.count()
+      val verts = Engine.checkpoint(g.vertices.toDF
         .join(outDeg.select(col("src").as("id")).withColumn("__h", lit(true)), Seq("id"), "left")
         .select(col("id"), (col("id") === seedId).as("p"), col("__h").isNull.as("dangling"))
         .repartition(col("id")))
-      var r = Engine.materialize(
-        verts.select(col("id"), when(col("p"), lit(1.0)).otherwise(lit(0.0)).as("r"),
-          col("dangling")))
-      (1 to rounds).foreach { _ =>
-        // dangling mass of the current state (flag baked into the frame —
-        // a straight aggregate, no join)
-        val dsRow = r.agg(sum(when(col("dangling"), col("r")))).head()
-        val b = (1.0 - d) + d * (if (dsRow.isNullAt(0)) 0.0 else dsRow.getDouble(0))
-        val contrib = e
-          .join(r.select(col("id").as("src"), col("r").as("rs")).hint("shuffle_hash"), Seq("src"))
-          .select(col("dst"), (col("w") * col("rs")).as("m"))
-          .groupBy(col("dst").as("id")).agg(sum(col("m")).as("c"))
-        val rNext = verts
-          .join(contrib.hint("shuffle_hash"), Seq("id"), "left")
-          .crossJoin(broadcast(Engine.scalar(spark, "__b", b)))
-          .select(col("id"),
-            (lit(d) * coalesce(col("c"), lit(0.0)) +
-              when(col("p"), col("__b")).otherwise(lit(0.0))).as("r"),
-            col("dangling"))
-        r = Engine.materialize(rNext)
-      }
-      Engine.materialize(r.select(col("id"), col("r").as("rank")))
+      // dangling mass of r_0 = 1[v=s]: exactly 1.0 iff the seed dangles
+      val ds0 = if (verts.where(col("p") && col("dangling")).count() > 0) 1.0 else 0.0
+      Superstep.Loop(
+        init = verts.select(col("id"), when(col("p"), lit(1.0)).otherwise(lit(0.0)).as("r"),
+          col("dangling")),
+        scalars = Map("b" -> ((1.0 - d) + d * ds0)),
+        step = (r, s) => {
+          val contrib = e
+            .join(r.select(col("id").as("src"), col("r").as("rs")).hint("shuffle_hash"), Seq("src"))
+            .select(col("dst"), (col("w") * col("rs")).as("m"))
+            .groupBy(col("dst").as("id")).agg(sum(col("m")).as("c"))
+          verts
+            .join(contrib.hint("shuffle_hash"), Seq("id"), "left")
+            .crossJoin(Engine.scalar(spark, "__b", s("b")))
+            .select(col("id"),
+              (lit(d) * coalesce(col("c"), lit(0.0)) +
+                when(col("p"), col("__b")).otherwise(lit(0.0))).as("r"),
+              col("dangling"))
+        },
+        // dangling mass of the new state (flag baked into the frame — a
+        // straight aggregate, no join) sets the next round's teleport
+        stats = _.agg(sum(when(col("dangling"), col("r")))),
+        fold = (row, _) => Map("b" -> ((1.0 - d) + d * Superstep.orZero(row, 0))),
+        result = (r, _) => r.select(col("id"), col("r").as("rank")))
     }
   }
 
@@ -295,51 +234,57 @@ object PageRank {
       g: LinkGraph, seedId: Long, rounds: Int, damping: Double = 0.85,
       stateProbe: Option[(Int, Long) => Unit] = None): DataFrame = {
     val spark = g.vertices.sparkSession
-    Engine.withoutAQE(spark) {
+    Superstep.run(spark, rounds) {
       val d = damping
       val simpleEdges = g.edges.toDF.select(col("src"), col("dst"))
-      val outDeg = Engine.pin(
+      val outDeg = Engine.checkpoint(
         simpleEdges.groupBy("src").agg(count(lit(1)).as("od")))
-      val e = Engine.pin(simpleEdges.join(outDeg, "src")
+      outDeg.count()
+      val e = Engine.checkpoint(simpleEdges.join(outDeg, "src")
         .select(col("src"), col("dst"), (lit(1.0) / col("od")).as("w"))
         .repartition(col("src")))
+      e.count()
       // dangling(id) from the out-degree table: touched ids join it once
       // when they ENTER the state, then carry the flag
       def withDangling(ids: DataFrame): DataFrame = ids
         .join(outDeg.select(col("src").as("id"), lit(true).as("__h")), Seq("id"), "left")
         .select(ids.columns.map(col) :+ col("__h").isNull.as("dangling"): _*)
-      var r = Engine.materialize(
-        withDangling(spark.range(1).select(lit(seedId).as("id"), lit(1.0).as("r"))))
-      (1 to rounds).foreach { k =>
-        // opt-in state-size probe (PlanAudit's frontier-vs-|V| evidence);
-        // the count is an EXTRA action, so production paths leave it off
-        stateProbe.foreach(f => f(k, r.count()))
-        val dsRow = r.agg(sum(when(col("dangling"), col("r")))).head()
-        val b = (1.0 - d) + d * (if (dsRow.isNullAt(0)) 0.0 else dsRow.getDouble(0))
-        // scatter along the frontier's out-edges only — |messages| =
-        // Σ_{u∈state} od(u), never |E|
-        val contrib = e
-          .join(r.select(col("id").as("src"), col("r").as("rs")).hint("shuffle_hash"), Seq("src"))
-          .select(col("dst"), (col("w") * col("rs")).as("m"))
-          .groupBy(col("dst").as("id")).agg(sum(col("m")).as("c"))
-        // full-outer keeps contrib-only ids AND inserts the seed when
-        // its in-mass is zero (no broadcast hint: BHJ can't full-outer;
-        // the 1-row side is trivial either way)
-        val seedRow = Engine.scalar(spark, "__b", b)
-          .select(lit(seedId).as("id"), col("__b"))
-        val rNext = withDangling(contrib
-          .join(seedRow, Seq("id"), "full_outer")
-          .select(col("id"),
-            (lit(d) * coalesce(col("c"), lit(0.0)) +
-              coalesce(col("__b"), lit(0.0))).as("r")))
-        r = Engine.materialize(rNext)
-      }
-      // re-densify once at exit: the contract (and the full-rank twin)
-      // is a rank for every vertex; untouched vertices are exact 0
-      Engine.materialize(
-        g.vertices.toDF.select(col("id"))
-          .join(r.select(col("id"), col("r")), Seq("id"), "left")
-          .select(col("id"), coalesce(col("r"), lit(0.0)).as("rank")))
+      // r_0 = 1[v=s]: its dangling mass is exactly 1.0 iff the seed dangles
+      val ds0 = if (outDeg.where(col("src") === seedId).count() == 0) 1.0 else 0.0
+      var k = 0
+      Superstep.Loop(
+        init = withDangling(spark.range(1).select(lit(seedId).as("id"), lit(1.0).as("r"))),
+        scalars = Map("b" -> ((1.0 - d) + d * ds0)),
+        step = (r, s) => {
+          k += 1
+          // opt-in state-size probe (PlanAudit's frontier-vs-|V| evidence);
+          // the count is an EXTRA action, so production paths leave it off
+          stateProbe.foreach(f => f(k, r.count()))
+          // scatter along the frontier's out-edges only — |messages| =
+          // Σ_{u∈state} od(u), never |E|
+          val contrib = e
+            .join(r.select(col("id").as("src"), col("r").as("rs")).hint("shuffle_hash"), Seq("src"))
+            .select(col("dst"), (col("w") * col("rs")).as("m"))
+            .groupBy(col("dst").as("id")).agg(sum(col("m")).as("c"))
+          // full-outer keeps contrib-only ids AND inserts the seed when
+          // its in-mass is zero (no broadcast hint: BHJ can't full-outer;
+          // the 1-row side is trivial either way)
+          val seedRow = Engine.scalar(spark, "__b", s("b"))
+            .select(lit(seedId).as("id"), col("__b"))
+          withDangling(contrib
+            .join(seedRow, Seq("id"), "full_outer")
+            .select(col("id"),
+              (lit(d) * coalesce(col("c"), lit(0.0)) +
+                coalesce(col("__b"), lit(0.0))).as("r")))
+        },
+        stats = _.agg(sum(when(col("dangling"), col("r")))),
+        fold = (row, _) => Map("b" -> ((1.0 - d) + d * Superstep.orZero(row, 0))),
+        // re-densify once at exit: the contract (and the full-rank twin)
+        // is a rank for every vertex; untouched vertices are exact 0
+        result = (r, _) => Engine.checkpoint(
+          g.vertices.toDF.select(col("id"))
+            .join(r.select(col("id"), col("r")), Seq("id"), "left")
+            .select(col("id"), coalesce(col("r"), lit(0.0)).as("rank"))))
     }
   }
 }

@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.engine.{Engine, IterationMetrics}
+import graft.engine.{Engine, Superstep}
 import graft.engine.Engine.MetricsLog
 import graft.graph.LinkGraph
 
@@ -15,8 +14,9 @@ import graft.graph.LinkGraph
   * re-relax), until no distance changes. Unreachable vertices report null.
   *
   * Spark shape mirrors WCC: frontier join on src (co-partitioned, no
-  * exchange) → `min(dist + w)` per dst (partial agg) → fused materialize +
-  * changed-count action.
+  * exchange on the edge side) → `min(dist + w)` per dst (partial agg) →
+  * one [[Superstep]] job that checkpoints the state and counts the
+  * changed vertices.
   */
 object SSSP {
 
@@ -25,44 +25,35 @@ object SSSP {
       g: LinkGraph,
       sourceOid: String,
       log: MetricsLog = new MetricsLog
-  ): DataFrame = {
-    val e = g.edges.toDF.select(col("src"), col("dst"), col("weight"))
-      .repartition(col("src"))
-      .localCheckpoint(true)
+  ): DataFrame = Superstep.run(g.vertices.sparkSession, log = log) {
+    val e = Engine.checkpoint(g.edges.toDF.select(col("src"), col("dst"), col("weight"))
+      .repartition(col("src")))
     val eCount = e.count()
-
-    val state0 = g.vertices.toDF
-      .select(col("id"), when(col("oid") === sourceOid, 0.0).otherwise(lit(null)).as("dist"))
-      .repartition(col("id"))
-
-    var state = Engine.materialize(state0)
-    var frontier = state.where(col("dist").isNotNull)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0) {
-      val t0 = System.nanoTime()
-      val msgs = e
-        .join(frontier.select(col("id").as("src"), col("dist").as("sd")).hint("shuffle_hash"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("sd") + col("weight")).as("nd"))
-      val next = state
-        .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
-        .select(
-          col("id"),
-          when(col("nd").isNotNull && (col("dist").isNull || col("nd") < col("dist")), col("nd"))
-            .otherwise(col("dist")).as("dist"),
-          (col("nd").isNotNull && (col("dist").isNull || col("nd") < col("dist"))).as("changed"))
-      val nextM = Engine.materialize(next)
-      changed = {
-        val r = nextM.agg(sum(when(col("changed"), 1L))).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
-      frontier = nextM.where(col("changed")).select(col("id"), col("dist"))
-      state = nextM.select(col("id"), col("dist"))
-      log.record(IterationMetrics(iter, (System.nanoTime() - t0) / 1e9, changed.toDouble, eCount))
-      iter += 1
-    }
-    state
+    // the state carries last round's `changed` flag; the frontier is the
+    // changed rows, initially the source
+    Superstep.Loop(
+      init = g.vertices.toDF
+        .select(col("id"), when(col("oid") === sourceOid, 0.0).otherwise(lit(null)).as("dist"))
+        .select(col("id"), col("dist"), col("dist").isNotNull.as("changed"))
+        .repartition(col("id")),
+      scalars = Superstep.UntilUnchanged.scalars,
+      step = (state, _) => {
+        val msgs = e
+          .join(state.where(col("changed"))
+            .select(col("id").as("src"), col("dist").as("sd")).hint("shuffle_hash"), "src")
+          .groupBy(col("dst").as("id"))
+          .agg(min(col("sd") + col("weight")).as("nd"))
+        val improved = col("nd").isNotNull && (col("dist").isNull || col("nd") < col("dist"))
+        state
+          .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+          .select(col("id"), when(improved, col("nd")).otherwise(col("dist")).as("dist"),
+            improved.as("changed"))
+      },
+      stats = Superstep.UntilUnchanged.stats,
+      fold = Superstep.UntilUnchanged.fold,
+      halt = Superstep.UntilUnchanged.halt,
+      edges = eCount,
+      result = (state, _) => state.select(col("id"), col("dist")))
   }
 
   /** Batched multi-source SSSP: ALL sources relax simultaneously with
@@ -85,46 +76,35 @@ object SSSP {
     */
   def multiSource(
       g: LinkGraph, sources: DataFrame, reversed: Boolean, log: MetricsLog
-  ): DataFrame = {
-    val spark = g.vertices.sparkSession
-    Engine.withoutAQE(spark) {
-      val e0 = g.edges.toDF
-      val e = (if (reversed)
-        e0.select(col("dst").as("src"), col("src").as("dst"), col("weight"))
-      else e0.select(col("src"), col("dst"), col("weight")))
-        .repartition(col("src"))
-        .localCheckpoint(true)
-      val eCount = e.count()
-      var state = Engine.materialize(
-        sources.select(col("s"), col("s").as("id"), lit(0.0).as("dist")))
-      var frontier = state
-      var changed = 1L
-      var iter = 0
-      while (changed > 0) {
-        val t0 = System.nanoTime()
+  ): DataFrame = Superstep.run(g.vertices.sparkSession, log = log) {
+    val e0 = g.edges.toDF
+    val e = Engine.checkpoint((if (reversed)
+      e0.select(col("dst").as("src"), col("src").as("dst"), col("weight"))
+    else e0.select(col("src"), col("dst"), col("weight")))
+      .repartition(col("src")))
+    val eCount = e.count()
+    Superstep.Loop(
+      init = sources.select(col("s"), col("s").as("id"), lit(0.0).as("dist"), lit(true).as("changed")),
+      scalars = Superstep.UntilUnchanged.scalars,
+      step = (state, _) => {
         val msgs = e
-          .join(frontier.select(col("s"), col("id").as("src"), col("dist").as("sd"))
+          .join(state.where(col("changed")).select(col("s"), col("id").as("src"), col("dist").as("sd"))
             .hint("shuffle_hash"), "src")
           .groupBy(col("s"), col("dst").as("id"))
           .agg(min(col("sd") + col("weight")).as("nd"))
-        val upd = Engine.materialize(
-          msgs.join(state.withColumnRenamed("dist", "old").hint("shuffle_hash"),
-            Seq("s", "id"), "left")
-            .where(col("old").isNull || col("nd") < col("old"))
-            .select(col("s"), col("id"), col("nd").as("dist")))
-        changed = upd.count()
-        if (changed > 0) {
-          state = Engine.materialize(
-            state.join(upd.select(col("s"), col("id")), Seq("s", "id"), "left_anti")
-              .unionByName(upd))
-          state.count()
-          frontier = upd
-        }
-        log.record(IterationMetrics(iter, (System.nanoTime() - t0) / 1e9, changed.toDouble, eCount))
-        iter += 1
-      }
-      state
-    }
+        // reached pairs only: the full outer join inserts newly reached
+        // (s, id) pairs and keeps the rest
+        val improved = col("nd").isNotNull && (col("dist").isNull || col("nd") < col("dist"))
+        state.select(col("s"), col("id"), col("dist"))
+          .join(msgs.hint("shuffle_hash"), Seq("s", "id"), "full_outer")
+          .select(col("s"), col("id"), when(improved, col("nd")).otherwise(col("dist")).as("dist"),
+            improved.as("changed"))
+      },
+      stats = Superstep.UntilUnchanged.stats,
+      fold = Superstep.UntilUnchanged.fold,
+      halt = Superstep.UntilUnchanged.halt,
+      edges = eCount,
+      result = (state, _) => state.select(col("s"), col("id"), col("dist")))
   }
 }
 
@@ -140,8 +120,8 @@ object BFSGeneric {
     * predecessor on a shortest path, null for the source.
     */
   def tree(g: LinkGraph, sourceOid: String): DataFrame = {
-    val lvl = BFS.run(g, sourceOid).where(col("level").isNotNull)
-      .localCheckpoint(true)
+    val lvl = Engine.checkpoint(BFS.run(g, sourceOid).where(col("level").isNotNull))
+    lvl.rdd.count()
     val parents = dagEdges(g, lvl)
       .groupBy(col("dst").as("id")).agg(min(col("src")).as("parent"))
     lvl.join(parents, Seq("id"), "left").select(col("id"), col("level"), col("parent"))
@@ -177,43 +157,35 @@ object BFS {
 
   def run(g: LinkGraph, sourceOid: String): DataFrame = {
     val spark = g.vertices.sparkSession
-    val e = g.edges.toDF.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    e.count()
-
-    val state0 = g.vertices.toDF
-      .select(col("id"), when(col("oid") === sourceOid, 0L).otherwise(lit(null)).as("level"))
-      .repartition(col("id"))
-
-    var state = Engine.materialize(state0)
-    var frontier = state.where(col("level").isNotNull)
-    var level = 0L
-    var advanced = 1L
-    while (advanced > 0) {
-      val nextLevel = level + 1L
-      // iteration-varying scalar via broadcast 1-row frame (identical
-      // codegen every superstep; see Engine.scalar)
-      val nl = broadcast(Engine.scalarLong(spark, "__nl", nextLevel))
-      val msgs = e
-        .join(frontier.select(col("id").as("src")).hint("shuffle_hash"), "src")
-        .select(col("dst").as("id")).distinct()
-      val next = state
-        .join(msgs.withColumn("__hit", lit(true)).hint("shuffle_hash"), Seq("id"), "left")
-        .crossJoin(nl)
-        .select(
-          col("id"),
-          when(col("level").isNull && col("__hit"), col("__nl")).otherwise(col("level")).as("level"),
-          (col("level").isNull && col("__hit").isNotNull && col("__hit")).as("changed"))
-      val nextM = Engine.materialize(next)
-      advanced = {
-        val r = nextM.agg(sum(when(col("changed"), 1L))).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
-      frontier = nextM.where(col("changed")).select(col("id"))
-      state = nextM.select(col("id"), col("level"))
-      level = nextLevel
+    Superstep.run(spark) {
+      val e = Engine.checkpoint(g.edges.toDF.select(col("src"), col("dst"))
+        .repartition(col("src")))
+      e.count()
+      Superstep.Loop(
+        init = g.vertices.toDF
+          .select(col("id"), when(col("oid") === sourceOid, 0L).otherwise(lit(null)).as("level"))
+          .select(col("id"), col("level"), col("level").isNotNull.as("changed"))
+          .repartition(col("id")),
+        scalars = Superstep.UntilUnchanged.scalars + ("level" -> 0.0),
+        step = (state, s) => {
+          // iteration-varying scalar via a 1-row frame (identical
+          // codegen every superstep; see Engine.scalar)
+          val nl = Engine.scalarLong(spark, "__nl", s("level").toLong + 1L)
+          val msgs = e
+            .join(state.where(col("changed")).select(col("id").as("src")).hint("shuffle_hash"), "src")
+            .select(col("dst").as("id")).distinct()
+          state
+            .join(msgs.withColumn("__hit", lit(true)).hint("shuffle_hash"), Seq("id"), "left")
+            .crossJoin(nl)
+            .select(
+              col("id"),
+              when(col("level").isNull && col("__hit"), col("__nl")).otherwise(col("level")).as("level"),
+              (col("level").isNull && col("__hit").isNotNull && col("__hit")).as("changed"))
+        },
+        stats = Superstep.UntilUnchanged.stats,
+        fold = (r, s) => Superstep.UntilUnchanged.fold(r, s) + ("level" -> (s("level") + 1)),
+        halt = Superstep.UntilUnchanged.halt,
+        result = (state, _) => state.select(col("id"), col("level")))
     }
-    state
   }
 }

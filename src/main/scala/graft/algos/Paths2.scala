@@ -29,7 +29,8 @@ object Paths2 {
     * achieving the final distance (deterministic).
     */
   def withParents(g: LinkGraph, sourceOid: String): DataFrame = {
-    val dist = SSSP.run(g, sourceOid).localCheckpoint(true)
+    val dist = Engine.checkpoint(SSSP.run(g, sourceOid))
+    dist.rdd.count()
     val e = g.edges.toDF
     val parents = e
       .join(dist.select(col("id").as("src"), col("dist").as("sd")), "src")
@@ -52,7 +53,8 @@ object Paths2 {
       g: LinkGraph, sourceOid: String, targetOid: String,
       maxHops: Int = 64, maxCollect: Long = 5000000L
   ): Option[Seq[String]] = {
-    val wp = withParents(g, sourceOid).localCheckpoint(true)
+    val wp = Engine.checkpoint(withParents(g, sourceOid))
+    wp.rdd.count()
     locally {
       val endpoints = g.vertices.toDF.where(col("oid").isin(sourceOid, targetOid))
         .select("oid", "id").collect().map(r => r.getString(0) -> r.getLong(1)).toMap

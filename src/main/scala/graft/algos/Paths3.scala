@@ -39,8 +39,7 @@ object Paths3 {
     val e = g.edges.toDF
       .join(attr.select(col("id").as("src"), col("cat").as("ca")), "src")
       .join(attr.select(col("id").as("dst"), col("cat").as("cb")), "dst")
-    val m = e.groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val m = Engine.checkpoint(e.groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("n")))
     val total = m.agg(sum(col("n"))).head().getLong(0).toDouble
     val trace = m.where(col("ca") === col("cb")).agg(sum(col("n"))).head() match {
       case r if r.isNullAt(0) => 0.0
@@ -125,17 +124,17 @@ object Paths3 {
     * general, bounded by the cutoff.
     */
   def allSimplePaths(g: LinkGraph, sourceOid: String, targetOid: String, cutoff: Int): DataFrame = {
-    val oidEdges = g.edges.toDF
+    val oidEdges = Engine.checkpoint(g.edges.toDF
       .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("a")), "src")
       .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("b")), "dst")
-      .select("a", "b")
-      .localCheckpoint(true)
+      .select("a", "b"))
+    oidEdges.rdd.count()
     var frontier = g.vertices.toDF.where(col("oid") === sourceOid)
       .select(array(col("oid")).as("path"), col("oid").as("tip"))
     var found = frontier.where(col("tip") === targetOid).select("path")
     var hops = 0
     while (hops < cutoff) {
-      frontier = Engine.materialize(
+      frontier = Engine.checkpoint(
         frontier.where(col("tip") =!= targetOid)
           .join(oidEdges.withColumnRenamed("a", "tip"), "tip")
           .where(!array_contains(col("path"), col("b")))
@@ -174,16 +173,16 @@ object Paths3 {
     */
   def samplingPaths(g: LinkGraph, startOids: Seq[String], steps: Int, seed: Long = 42L): DataFrame = {
     val spark = g.vertices.sparkSession
-    val oidEdges = g.edges.toDF
+    val oidEdges = Engine.checkpoint(g.edges.toDF
       .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("a")), "src")
       .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("b")), "dst")
-      .select("a", "b")
-      .localCheckpoint(true)
+      .select("a", "b"))
+    oidEdges.rdd.count()
     import spark.implicits._
     var walk = startOids.toDF("start")
       .select(col("start"), array(col("start")).as("path"), col("start").as("tip"))
     (0 until steps).foreach { step =>
-      walk = Engine.materialize(samplingStep(walk, oidEdges, step, seed))
+      walk = Engine.checkpoint(samplingStep(walk, oidEdges, step, seed))
     }
     walk.select(col("start").as("start_oid"), col("path"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.engine.Engine
 import graft.graph.LinkGraph
 
 /** Per-vertex triangle counting, semantics of the reference's
@@ -25,7 +26,8 @@ object Triangles {
 
   /** Returns (id: Long, triangles: Long) for every vertex. */
   def run(g: LinkGraph): DataFrame = {
-    val und = g.undirectedEdges.localCheckpoint(true) // (a,b), a<b, distinct
+    val und = Engine.checkpoint(g.undirectedEdges) // (a,b), a<b, distinct
+    und.rdd.count()
     val deg = und.select(col("a").as("v"))
       .unionAll(und.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
@@ -34,11 +36,11 @@ object Triangles {
       .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
     val lowerFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
-    val ore = withDeg.select(
+    val ore = Engine.checkpoint(withDeg.select(
       when(lowerFirst, col("a")).otherwise(col("b")).as("src"),
       when(lowerFirst, col("b")).otherwise(col("a")).as("dst"),
-      when(lowerFirst, col("db")).otherwise(col("da")).as("dstDeg"))
-      .localCheckpoint(true)
+      when(lowerFirst, col("db")).otherwise(col("da")).as("dstDeg")))
+    ore.rdd.count()
 
     val e1 = ore.select(col("src"), col("dst").as("v"), col("dstDeg").as("vd"))
     val e2 = ore.select(col("src"), col("dst").as("w"), col("dstDeg").as("wd"))

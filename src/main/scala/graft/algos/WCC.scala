@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.engine.{CheckpointConfig, Engine, IterationMetrics}
+import graft.engine.{CheckpointConfig, Engine, Superstep}
 import graft.engine.Engine.MetricsLog
 import graft.graph.LinkGraph
 
@@ -21,7 +20,8 @@ import graft.graph.LinkGraph
   * scatters from the *changed* frontier only (the reference's
   * `curr_modified` set) — a join of edges against the frontier, then
   * partial+final `min` per destination (hub skew absorbed by map-side
-  * combine), then one fused materialize+count action.
+  * combine), then one [[Superstep]] job that checkpoints the state and
+  * counts the changed vertices.
   */
 object WCC {
 
@@ -33,64 +33,39 @@ object WCC {
       maxIter: Int = Int.MaxValue,
       log: MetricsLog = new MetricsLog,
       ckpt: Option[CheckpointConfig] = None
-  ): DataFrame = {
-    Engine.withoutAQE(g.vertices.sparkSession) {
-    val und = g.edges.toDF
+  ): DataFrame = Superstep.run(g.vertices.sparkSession, maxIter, log, ckpt) {
+    val und = Engine.checkpoint(g.edges.toDF
       .where(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
       .unionAll(g.edges.toDF.where(col("src") =!= col("dst"))
         .select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(true)
+      .repartition(col("src")))
     val undCount = und.count()
-
-    val state0 = g.vertices.toDF.select(col("id"), col("id").as("comp"))
-      .repartition(col("id"))
-
-    val resumed = ckpt.flatMap { c =>
-      c.store.latestVersion(c.table).map { v =>
-        val m = c.store.readManifest(c.table, v)
-        (c.store.read(g.vertices.sparkSession, c.table, v), m.metrics("iter").toInt + 1)
-      }
-    }
-
-    var state = Engine.materialize(resumed.map(_._1).getOrElse(state0))
-    // Frontier = vertices whose comp changed last round; initially all.
-    var frontier = state.select(col("id"), col("comp"))
-    var iter = resumed.map(_._2).getOrElse(0)
-    var changed = 1L
-
-    while (changed > 0 && iter < maxIter) {
-      val t0 = System.nanoTime()
-      val msgs = und
-        .join(frontier.select(col("id").as("src"), col("comp").as("scomp")).hint("shuffle_hash"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("scomp")).as("mc"))
-      val next = state
-        .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
-        .select(
-          col("id"),
-          least(col("comp"), coalesce(col("mc"), col("comp"))).as("comp"),
-          (col("mc").isNotNull && col("mc") < col("comp")).as("changed"))
-      val nextM = Engine.materialize(next)
-      changed = {
-        val r = nextM.agg(sum(when(col("changed"), 1L))).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
-      frontier = nextM.where(col("changed")).select(col("id"), col("comp"))
-      state = nextM.select(col("id"), col("comp"))
-      val secs = (System.nanoTime() - t0) / 1e9
-      log.record(IterationMetrics(iter, secs, changed.toDouble, undCount,
-        Map("changed" -> changed.toDouble)))
-      ckpt.foreach { c =>
-        if (c.every > 0 && iter % c.every == 0)
-          c.store.write(c.table, state, Map("iter" -> iter.toDouble, "changed" -> changed.toDouble))
-      }
-      iter += 1
-    }
-    state
-    }
+    // The state carries last round's `changed` flag: the frontier is the
+    // changed rows, initially all.
+    Superstep.Loop(
+      init = g.vertices.toDF.select(col("id"), col("id").as("comp"), lit(true).as("changed"))
+        .repartition(col("id")),
+      scalars = Superstep.UntilUnchanged.scalars,
+      step = (state, _) => {
+        val msgs = und
+          .join(state.where(col("changed"))
+            .select(col("id").as("src"), col("comp").as("scomp")).hint("shuffle_hash"), "src")
+          .groupBy(col("dst").as("id"))
+          .agg(min(col("scomp")).as("mc"))
+        state
+          .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+          .select(
+            col("id"),
+            least(col("comp"), coalesce(col("mc"), col("comp"))).as("comp"),
+            (col("mc").isNotNull && col("mc") < col("comp")).as("changed"))
+      },
+      stats = Superstep.UntilUnchanged.stats,
+      fold = Superstep.UntilUnchanged.fold,
+      halt = Superstep.UntilUnchanged.halt,
+      edges = undCount,
+      result = (state, _) => state.select(col("id"), col("comp")))
   }
 
   /** Canonicalized output for cross-engine comparison: component labeled

@@ -28,67 +28,46 @@ final case class IterationMetrics(
 final case class CheckpointConfig(store: SnapshotStore, table: String, every: Int = 1)
 
 /** Driver-side helpers for the BSP-style fixpoint loops (Catalyst has no
-  * iterative operator; this mirrors the reference's worker loop
-  * `core/worker/default_worker.h:87-130`: PEval once, IncEval until no
-  * change). Key mechanics:
-  *
-  *  - `materialize` eagerly evaluates each superstep's state and
-  *    truncates lineage via `localCheckpoint` — without it the logical
-  *    plan grows linearly with iterations and analysis/planning time
-  *    dominates (SURVEY.md §7.3).
-  *  - per-iteration driver work is O(1) (scalar aggregates only), keeping
-  *    the job shuffle-bound so parallelism scaling stays near-linear.
+  * iterative operator; [[Superstep]] is the one loop driver, mirroring the
+  * reference's worker loop `core/worker/default_worker.h:87-130`: PEval
+  * once, IncEval until no change). Per-round driver work is O(1) (scalar
+  * aggregates only), keeping the job shuffle-bound so parallelism scaling
+  * stays near-linear.
   */
 object Engine {
 
-  /** Mark a superstep's state for materialization + lineage truncation.
-    * Lazy (`localCheckpoint(false)`): the caller's next action — typically
-    * the fused convergence aggregate — computes the state, caches it, and
-    * truncates lineage in a single job, so each superstep costs exactly
-    * one Spark job instead of checkpoint-then-aggregate.
+  /** The one checkpoint call: a LAZY private `localCheckpoint`.
+    *
+    * Rule: every frame that is read more than once — a loop-invariant
+    * input, a round's state, a result read by several branches — goes
+    * through `checkpoint`, and the next action on it does the work. That
+    * action computes the frame, caches it and cuts its lineage in one
+    * job, so "eager" is just `checkpoint` followed by the action the
+    * caller runs anyway. Where it runs none, it calls `rdd.count()`: one
+    * job with AQE on or off, where a DataFrame `count()` plans an
+    * aggregate whose exchange AQE runs as a job of its own.
+    *
+    *  - Lineage: without the cut a loop's logical plan grows with every
+    *    round and analysis/planning dominates (SURVEY.md §7.3).
+    *  - Privacy: never `persist()` a loop input. Persist entries live in
+    *    the session-global CacheManager keyed by CANONICAL PLAN, so two
+    *    concurrent queries that derive the same frame (tg_pagerank vs the
+    *    Gremlin pageRank step; tg_ppr vs tg_ppr_sparse) share one entry
+    *    and the first to finish unpersists it under the other's loop
+    *    (measured under the concurrent Verify driver: four co-scheduled
+    *    fixpoints 812 s vs ~90 s standalone; one race over-peeled kcore to
+    *    a wrong 2736-row core). A checkpoint is a private,
+    *    content-immutable RDD; the ContextCleaner frees it once the frame
+    *    is unreferenced.
+    *  - Partitioning: with AQE off ([[withoutAQE]]) the checkpoint keeps
+    *    the plan's hash partitioning, lazy and eager alike, so a
+    *    `repartition(col("src"))` edge table feeds a co-partitioned
+    *    superstep join with no exchange on its side. With AQE on both
+    *    variants lose it. A state grouped by more keys than the next join
+    *    uses (PageRank's `(dst, dstDangling)`) is re-hashed every round
+    *    either way.
     */
-  def materialize(df: DataFrame): DataFrame = df.localCheckpoint(false)
-
-  /** Pin a loop-invariant frame (edge/degree/neighbor tables a fixpoint
-    * loop reads every round) as an EAGER private checkpoint instead of
-    * `persist()`. Learned from the concurrent Verify driver (round 5):
-    * `persist()` entries live in the session-global CacheManager keyed
-    * by CANONICAL PLAN, so two concurrently-running queries that derive
-    * the same frame from the shared graph (tg_pagerank vs the Gremlin
-    * pageRank step; tg_ppr vs tg_ppr_sparse) SHARE one entry — the
-    * first to finish unpersists it out from under the survivor's loop
-    * (measured: four co-scheduled fixpoints took 812 s vs ~90 s
-    * standalone, each round recomputing its "cached" edges from
-    * source; one such race also over-peeled a kcore run to a wrong
-    * 2736-row core). A checkpoint is a private, content-immutable RDD:
-    * no cross-thread uncache can drop or swap it mid-loop, so the frame
-    * a loop counted is bit-identical to the frame its joins read.
-    * Partitioning survives (the LogicalRDD keeps outputPartitioning),
-    * so co-partitioned superstep joins still plan zero input exchanges.
-    * No unpersist needed — blocks are freed by the ContextCleaner once
-    * the frame is unreferenced.
-    */
-  def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-  /** [[materialize]] + stats reset, for superstep states the next
-    * round's plan references MORE THAN ONCE (e.g. Louvain's community
-    * frame rides four joins per sweep round). `localCheckpoint` seeds
-    * the new LogicalRDD's sizeInBytes from the child plan's stats, and
-    * Catalyst's join-stats visitor multiplies children — so a state with
-    * k self-references compounds sizeInBytes bits by k× PER ROUND.
-    * Exponential bit growth turns the driver's stats BigInt arithmetic
-    * into the bottleneck (measured: a 30-round Louvain sweep wedged the
-    * driver for 20+ min in BigInteger.multiply around round ~25; states
-    * with one self-reference, like PageRank's, grow linearly and never
-    * hit this). Rebuilding the frame over the checkpointed RDD resets
-    * propagated stats to the session default each round. Join planning
-    * is unaffected — superstep joins are explicitly hinted — and the
-    * Row round-trip cost is bounded by the state's |V| rows.
-    */
-  def materializeReset(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(false)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
+  def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(false)
 
   /** Run `f` with AQE disabled, restoring the previous setting after.
     *
@@ -105,7 +84,7 @@ object Engine {
     * pairs from parallel queries would flip AQE at arbitrary points in
     * other queries' planning — and a session whose graph cache
     * materializes under AQE-off loses cached-plan substitution for the
-    * persist-chained fixed-round PageRank states (measured: every
+    * then persist-chained fixed-round PageRank states (measured: every
     * superstep re-derived the graph from the synth source; 19.5 s →
     * 6+ min for tg_pagerank at sf0.01). At verify scale the forgone
     * AQE-off saving is ~0.1 s per superstep — noise.
@@ -119,7 +98,7 @@ object Engine {
     finally spark.conf.set(key, old)
   }
 
-  /** A per-iteration scalar as a broadcast 1-row DataFrame column.
+  /** A per-iteration scalar as a 1-row DataFrame column, to `crossJoin`.
     *
     * Embedding an iteration-dependent value with `lit(x)` changes the
     * generated whole-stage code every superstep, forcing a fresh Janino
@@ -127,15 +106,21 @@ object Engine {
     * multi-core scaling completely. Routing the value through a
     * LocalRelation keeps the plan (and the codegen cache key) identical
     * across iterations; only the row data changes.
+    *
+    * Do not wrap it in `broadcast()`: broadcasting collects the local
+    * scan through a Spark job of its own, one extra job per round per
+    * scalar. The frame carries a `shuffle_replicate_nl` hint instead, so
+    * the cross join plans as a CartesianProduct against the one-partition
+    * local scan, inside the job that consumes it.
     */
   def scalar(spark: org.apache.spark.sql.SparkSession, name: String, value: Double): DataFrame = {
     import spark.implicits._
-    Seq(value).toDF(name)
+    Seq(value).toDF(name).hint("shuffle_replicate_nl")
   }
 
   def scalarLong(spark: org.apache.spark.sql.SparkSession, name: String, value: Long): DataFrame = {
     import spark.implicits._
-    Seq(value).toDF(name)
+    Seq(value).toDF(name).hint("shuffle_replicate_nl")
   }
 
   /** Collects per-iteration metrics for the bench report. */
@@ -145,9 +130,5 @@ object Engine {
     def all: Seq[IterationMetrics] = buf.toSeq
     def iterations: Int = buf.size
     def totalSeconds: Double = buf.map(_.seconds).sum
-    def totalEdges: Long = buf.map(_.edgesProcessed).sum
-    /** Mean of per-superstep edges/sec (the BASELINE metric). */
-    def edgesPerSecPerSuperstep: Double =
-      if (buf.isEmpty) 0.0 else buf.map(_.edgesPerSec).sum / buf.size
   }
 }

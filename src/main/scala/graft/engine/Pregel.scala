@@ -1,8 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.graph.LinkGraph
 
@@ -27,7 +26,7 @@ import graft.graph.LinkGraph
   *  - halting: fixed `maxIter`, or converged when no state changed.
   *
   * Driver aggregators (the reference's Sum/Min/... aggregators) are the
-  * fused scalar aggregate each superstep already performs.
+  * fused scalar aggregate each [[Superstep]] round already performs.
   */
 object Pregel {
 
@@ -41,35 +40,29 @@ object Pregel {
   )
 
   /** Runs the program; returns (id, state). */
-  def run(g: LinkGraph, prog: Program): DataFrame = {
-    val spark = g.vertices.sparkSession
-    Engine.withoutAQE(spark) {
-      val e = g.edges.toDF.repartition(col("src")).localCheckpoint(true)
+  def run(g: LinkGraph, prog: Program): DataFrame =
+    Superstep.run(g.vertices.sparkSession, prog.maxIter) {
+      val e = Engine.checkpoint(g.edges.toDF.repartition(col("src")))
       e.count()
-      var state = Engine.materialize(
-        g.vertices.toDF.select(col("id"), prog.init.as("state")).repartition(col("id")))
-      var iter = 0
-      var changed = 1L
-      while (iter < prog.maxIter && changed > 0) {
-        val msgs = e
-          .join(state.select(col("id").as("src"), col("state")).hint("shuffle_hash"), "src")
-          .select(col("src"), col("dst"), col("weight"), prog.message.as("__m"))
-          .groupBy(col("dst").as("id"))
-          .agg(prog.combine(col("__m")).as("msg"))
-        val next = state
-          .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
-          .select(col("id"), prog.update.as("__new"), col("state").as("__old"))
-        val nextM = Engine.materialize(next)
-        changed =
-          if (prog.haltOnNoChange) {
-            val r: Row = nextM.agg(
-              sum(when(not(col("__new") <=> col("__old")), 1L))).head()
-            if (r.isNullAt(0)) 0L else r.getLong(0)
-          } else { nextM.count(); 1L }
-        state = nextM.select(col("id"), col("__new").as("state"))
-        iter += 1
-      }
-      state
+      Superstep.Loop(
+        init = g.vertices.toDF.select(col("id"), prog.init.as("state"), lit(true).as("changed"))
+          .repartition(col("id")),
+        scalars = Superstep.UntilUnchanged.scalars,
+        step = (state, _) => {
+          val msgs = e
+            .join(state.select(col("id").as("src"), col("state")).hint("shuffle_hash"), "src")
+            .select(col("src"), col("dst"), col("weight"), prog.message.as("__m"))
+            .groupBy(col("dst").as("id"))
+            .agg(prog.combine(col("__m")).as("msg"))
+          state
+            .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
+            .select(col("id"), prog.update.as("__new"), col("state").as("__old"))
+            .select(col("id"), col("__new").as("state"),
+              not(col("__new") <=> col("__old")).as("changed"))
+        },
+        stats = Superstep.UntilUnchanged.stats,
+        fold = Superstep.UntilUnchanged.fold,
+        halt = s => prog.haltOnNoChange && Superstep.UntilUnchanged.halt(s),
+        result = (state, _) => state.select(col("id"), col("state")))
     }
-  }
 }

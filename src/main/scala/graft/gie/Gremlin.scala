@@ -373,7 +373,7 @@ object Gremlin {
   private[gie] def mathCol(s: String, underscore: Column): Column = {
     var i = 0
     def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    def peek: Char = { ws(); if (i < s.length) s(i) else ' ' }
+    def peek: Char = { ws(); if (i < s.length) s(i) else '\u0000' }
     def fail(m: String): Nothing =
       throw new IllegalArgumentException(s"math parse error at $i: $m in: $s")
     def expr(): Column = {

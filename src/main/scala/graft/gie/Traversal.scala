@@ -122,7 +122,7 @@ final class Traversal private[gie] (
     * scale the set is ≤|V| rows regardless of traverser multiplicity.
     */
   def aggregateTag(tag: String): Traversal = {
-    val bulk = Engine.materialize(
+    val bulk = Engine.checkpoint(
       df.groupBy(col("__v").as("__agg_v")).agg(count(lit(1)).as("__bulk")))
     new Traversal(g, df, track, sideEffects + (tag -> bulk))
   }
@@ -616,19 +616,19 @@ final class Traversal private[gie] (
     }
     while (round < times && live > 0) {
       round += 1
-      cur = next(Engine.materialize(body(cur).df))
+      cur = next(Engine.checkpoint(body(cur).df))
       until match {
         case Some(u) if round < times =>
           val origin = next(
             cur.df.select(col("__v")).distinct().withColumn("__origin", col("__v")))
-          val hits = Engine.materialize(
+          val hits = Engine.checkpoint(
             u(origin).df.select(col("__origin").as("__v")).distinct())
           val exits = cur.df.join(hits, Seq("__v"), "left_semi")
           if (emit)
             outFrames += exits.unionAll(
               emittedOf(cur.df.join(hits, Seq("__v"), "left_anti")))
           else outFrames += exits
-          cur = next(Engine.materialize(cur.df.join(hits, Seq("__v"), "left_anti")))
+          cur = next(Engine.checkpoint(cur.df.join(hits, Seq("__v"), "left_anti")))
           live = cur.df.count()
           if (live == 0 && !emit) () // exit frame already captured above
         case _ =>
@@ -645,7 +645,7 @@ final class Traversal private[gie] (
     val common = outFrames.map(_.columns.toSet).reduce(_ intersect _)
     require(common.contains("__v"), "repeat() body must stay vertex-typed")
     val cols = outFrames.head.columns.filter(common.contains).toSeq.map(col)
-    next(Engine.materialize(outFrames.map(_.select(cols: _*)).reduce(_ unionAll _)))
+    next(Engine.checkpoint(outFrames.map(_.select(cols: _*)).reduce(_ unionAll _)))
   }
 
   /** Weighted ShortestPathExpand (`algebra.proto:302` with the weight
@@ -658,7 +658,7 @@ final class Traversal private[gie] (
     */
   def weightedShortestPathExpand(maxRounds: Int = 64): Traversal = {
     val rel = edges.select(col("src").as("__v"), col("dst"), col("weight"))
-    var state = Engine.materialize(
+    var state = Engine.checkpoint(
       df.select(col("__v")).distinct().withColumn("__dist", lit(0.0)))
     var frontier = state
     var changed = 1L
@@ -668,14 +668,14 @@ final class Traversal private[gie] (
       val msgs = frontier.join(rel, Seq("__v"))
         .groupBy(col("dst").as("__v"))
         .agg(min(col("__dist") + col("weight")).as("nd"))
-      val upd = Engine.materialize(
+      val upd = Engine.checkpoint(
         msgs.join(state.withColumnRenamed("__dist", "old").hint("shuffle_hash"),
           Seq("__v"), "left")
           .where(col("old").isNull || col("nd") < col("old"))
           .select(col("__v"), col("nd").as("__dist")))
       changed = upd.count()
       if (changed > 0) {
-        state = Engine.materialize(
+        state = Engine.checkpoint(
           state.join(upd.select(col("__v")), Seq("__v"), "left_anti").unionByName(upd))
         state.count()
         frontier = upd
@@ -711,13 +711,13 @@ final class Traversal private[gie] (
   def matchPattern(sentences: Seq[(String, Traversal => Traversal, String)]): Traversal = {
     require(sentences.nonEmpty, "match() needs at least one sentence")
     val first = sentences.head._1
-    val seed = Engine.materialize(df.select(col("__v")).distinct())
+    val seed = Engine.checkpoint(df.select(col("__v")).distinct())
     val rels = sentences.map { case (a, body, b) =>
       require(a != b, s"match sentence must bind two distinct tags ($a, $b)")
       val start = if (a == first) new Traversal(g, seed) else G.V(g)
       val r = body(start.as_(a)).as_(b)
       val rel = r.df.select(col(a), col(b))
-      Engine.materialize(
+      Engine.checkpoint(
         if (b == first) rel.join(seed.select(col("__v").as(b)), Seq(b), "left_semi")
         else rel)
     }
@@ -743,14 +743,14 @@ final class Traversal private[gie] (
     */
   def coalesce(fs: (Traversal => Traversal)*): Traversal = {
     require(fs.nonEmpty, "coalesce() needs at least one branch")
-    var remaining = Engine.materialize(df.select(col("__v")).distinct())
+    var remaining = Engine.checkpoint(df.select(col("__v")).distinct())
     val pieces = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     fs.foreach { f =>
       if (!remaining.isEmpty) {
         val origin = new Traversal(g, remaining.withColumn("__origin", col("__v")))
-        val res = Engine.materialize(f(origin).df)
+        val res = Engine.checkpoint(f(origin).df)
         pieces += res
-        remaining = Engine.materialize(remaining.join(
+        remaining = Engine.checkpoint(remaining.join(
           res.select(col("__origin").as("__v")).distinct(), Seq("__v"), "left_anti"))
       }
     }
@@ -781,7 +781,7 @@ final class Traversal private[gie] (
       yes: Traversal => Traversal,
       no: Traversal => Traversal): Traversal = {
     val origin = next(df.select(col("__v")).distinct().withColumn("__origin", col("__v")))
-    val hits = Engine.materialize(
+    val hits = Engine.checkpoint(
       pred(origin).df.select(col("__origin").as("__v")).distinct())
     val branches = Seq(
       yes(next(df.join(hits, Seq("__v"), "left_semi"))).df,
@@ -862,7 +862,7 @@ final class Traversal private[gie] (
     * current traverser *set* falls in [lower, upper], with that
     * distance as `__hops`. Level-synchronous first-visit expansion —
     * each hop is one frontier join + anti-join, materialized
-    * ([[Engine.materialize]]) to keep lineage flat. `dir` is the base
+    * ([[Engine.checkpoint]]) to keep lineage flat. `dir` is the base
     * EdgeExpand direction (out/in/both).
     */
   def pathExpand(
@@ -870,15 +870,15 @@ final class Traversal private[gie] (
   ): Traversal = {
     require(lower >= 0 && upper >= lower, "need 0 <= lower <= upper")
     val rel = expandRel(dir, label)
-    var reached = Engine.materialize(
+    var reached = Engine.checkpoint(
       df.select(col("__v")).distinct().withColumn("__hops", lit(0L)))
     var frontier = reached.select(col("__v"))
     var h = 0
     var live = frontier.count()
     while (h < upper && live > 0) {
       h += 1
-      val hopsDf = broadcast(Engine.scalarLong(g.vertices.sparkSession, "__h", h.toLong))
-      val nxt = Engine.materialize(
+      val hopsDf = Engine.scalarLong(g.vertices.sparkSession, "__h", h.toLong)
+      val nxt = Engine.checkpoint(
         frontier.join(rel, Seq("__v"))
           .select(col("dst").as("__v")).distinct()
           .join(reached.select(col("__v")), Seq("__v"), "left_anti")
@@ -886,7 +886,7 @@ final class Traversal private[gie] (
           .select(col("__v"), col("__h").as("__hops")))
       live = nxt.count()
       if (live > 0) {
-        reached = Engine.materialize(reached.unionByName(nxt))
+        reached = Engine.checkpoint(reached.unionByName(nxt))
         frontier = nxt.select(col("__v"))
       }
     }
@@ -914,7 +914,7 @@ final class Traversal private[gie] (
       lower: Int, upper: Int, simple: Boolean = true, dir: String = "out"): Traversal = {
     require(lower >= 0 && upper >= lower, "need 0 <= lower <= upper")
     val rel = expandRel(dir)
-    var cur = Engine.materialize(
+    var cur = Engine.checkpoint(
       df.select(col("__v")).withColumn("__path", array(col("__v"))))
     var acc = if (lower == 0) cur else cur.limit(0)
     var h = 0
@@ -924,7 +924,7 @@ final class Traversal private[gie] (
       var nxt = cur
         .join(rel, Seq("__v"))
       if (simple) nxt = nxt.where(!array_contains(col("__path"), col("dst")))
-      cur = Engine.materialize(
+      cur = Engine.checkpoint(
         nxt.select(col("dst").as("__v"), concat(col("__path"), array(col("dst"))).as("__path")))
       live = cur.count()
       if (h >= lower && live > 0) acc = acc.unionByName(cur)
@@ -933,7 +933,7 @@ final class Traversal private[gie] (
     // materialize it so downstream operators (pathOids joins the frame
     // against a mapping derived from itself) see one flat leaf instead
     // of a plan that grows with `upper`
-    next(Engine.materialize(acc))
+    next(Engine.checkpoint(acc))
   }
 
   /** Materialize `__path` (vertex ids) as an oid string `path_str` —

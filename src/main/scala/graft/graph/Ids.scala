@@ -37,18 +37,18 @@ object Ids {
     // 50M-row generation+distinct ran twice — measured ~25 s of pure
     // waste). The distinct key set is small; checkpoint it once and let
     // the sampling pass read the materialized rows.
-    val distinctKeys = df.select(col(keyCol)).distinct()
-      .localCheckpoint(true)
-      .repartitionByRange(parts, col(keyCol))
+    val keys = graft.engine.Engine.checkpoint(df.select(col(keyCol)).distinct())
+    keys.rdd.count()
+    val distinctKeys = keys.repartitionByRange(parts, col(keyCol))
     // Materialize the pid-stamped frame before branching: the offsets
     // collect and the final join must see the SAME partition assignment,
     // but repartitionByRange samples with a per-execution seed (rdd.id) —
     // two lazy re-executions can disagree on boundaries, which silently
     // corrupts the ids (duplicate/shifted ranks). Caught by the DuckDB
     // oracle at sf0.01.
-    val withPid = distinctKeys
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+    val withPid = graft.engine.Engine.checkpoint(distinctKeys
+      .withColumn("__pid", spark_partition_id()))
+    withPid.rdd.count()
     val localRank = withPid.withColumn(
       "__rank",
       row_number().over(Window.partitionBy(col("__pid")).orderBy(col(keyCol))).cast("long") - 1L

@@ -1,7 +1,7 @@
 package graft.ingest
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,14 +39,17 @@ final case class Manifest(
   * root/<table>/_latest            ("1")
   * }}}
   * Commits are atomic at the `_latest` pointer: data + manifest are fully
-  * written before the pointer moves, so a crashed writer leaves the
+  * written before the pointer moves, and the pointer moves by renaming a
+  * fully written temp file over `_latest`, so a crashed writer leaves the
   * previous version readable — this is what "resumable from checkpoint
   * with per-partition lineage + metrics" (north rule) hangs off.
   */
-final class SnapshotStore(val root: String) {
+class SnapshotStore(val root: String) {
   implicit private val fmts: Formats = DefaultFormats
 
-  private def conf = new Configuration()
+  // one Configuration per store: a fresh one re-parses the Hadoop
+  // default resources on first use, and every file-system call needs one
+  private val conf = new Configuration()
   private def fs(p: Path): FileSystem = p.getFileSystem(conf)
 
   private def tableDir(table: String) = new Path(root, table)
@@ -108,10 +111,20 @@ final class SnapshotStore(val root: String) {
     try out.write(Serialization.write(manifest).getBytes("UTF-8"))
     finally out.close()
     val lp = latestPath(table)
-    val lout = fs(lp).create(lp, true)
+    val tmp = new Path(tableDir(table), s"._latest.${java.util.UUID.randomUUID()}.tmp")
+    val lout = fs(tmp).create(tmp, false)
     try lout.write(v.toString.getBytes("UTF-8"))
     finally lout.close()
+    try movePointer(tmp, lp)
+    finally if (fs(tmp).exists(tmp)) fs(tmp).delete(tmp, false)
     v
+  }
+
+  /** Atomically replaces `to` with `from` (rename with overwrite). */
+  protected def movePointer(from: Path, to: Path): Unit = {
+    val f = fs(to)
+    val (src, dst) = (f.makeQualified(from), f.makeQualified(to))
+    FileContext.getFileContext(dst.toUri, conf).rename(src, dst, Options.Rename.OVERWRITE)
   }
 
   private def footerRowCount(p: Path): Long = {

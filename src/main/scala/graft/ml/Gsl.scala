@@ -118,7 +118,7 @@ object Gsl {
           case other => throw new IllegalArgumentException(
             s"unsupported GSL strategy: $other")
         }
-        val out = graft.engine.Engine.materialize(picked
+        val out = graft.engine.Engine.checkpoint(picked
           .select(col("seed").as("seed_oid"), lit(h + 1).as("hop"),
             col("parent").as("parent_oid"), col("child").as("child_oid"),
             col("pos"), lit("nbr").as("kind")))
@@ -142,7 +142,7 @@ object Gsl {
           })
           .select(col("seed_oid").as("parent"), col("slot").as("pos"),
             col("neg_oid").as("child_oid"))
-        graft.engine.Engine.materialize(frontier.join(negs, Seq("parent"))
+        graft.engine.Engine.checkpoint(frontier.join(negs, Seq("parent"))
           .select(col("seed").as("seed_oid"), lit(h + 1).as("hop"),
             col("parent").as("parent_oid"), col("child_oid"),
             col("pos"), lit("neg").as("kind")))

@@ -40,7 +40,7 @@ object KMeans {
         round(Similarity.cosine(col("v"), col("cv")), 5).as("sim"))
       .groupBy(col("id"))
       .agg(max_by(col("cid"), struct(col("sim"), (-col("cid")).as("nc"))).as("cid"))
-    var cents = Engine.materialize(
+    var cents = Engine.checkpoint(
       vecs.where(pmod(col("id"), lit(step)) === 0)
         .orderBy(col("id")).limit(k)
         .select(col("id").as("cid"), col("v").as("cv")))
@@ -51,7 +51,7 @@ object KMeans {
         .agg(round(avg(col("x")), 6).as("m"))
         .groupBy(col("cid"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)").as("cv"))
-      cents = Engine.materialize(
+      cents = Engine.checkpoint(
         cents.select(col("cid"), col("cv").as("prev"))
           .join(means, Seq("cid"), "left")
           .select(col("cid"), coalesce(col("cv"), col("prev")).as("cv")))

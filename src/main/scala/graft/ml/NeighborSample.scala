@@ -52,11 +52,14 @@ object NeighborSample {
   /** The oid-keyed adjacency (parent, child, weight), eagerly
     * checkpointed — the shared hop input for every sampler family.
     */
-  private[ml] def oidEdges(g: LinkGraph): DataFrame = g.edges.toDF
-    .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
-    .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
-    .select(col("parent"), col("child"), col("weight"))
-    .localCheckpoint(true)
+  private[ml] def oidEdges(g: LinkGraph): DataFrame = {
+    val e = Engine.checkpoint(g.edges.toDF
+      .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
+      .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
+      .select(col("parent"), col("child"), col("weight")))
+    e.rdd.count()
+    e
+  }
 
   /** Returns (seed_oid, hop, parent_oid, child_oid, slot) — hop is
     * 1-based; dead-end parents simply contribute no rows.
@@ -77,7 +80,7 @@ object NeighborSample {
       // deterministic argmin per slot; ties on the raw hash break to the
       // lexicographically smaller child (same portable tie rule as
       // samplingStep / its row_number twin)
-      val picked = Engine.materialize(
+      val picked = Engine.checkpoint(
         cand.groupBy(col("seed"), col("parent"), col("slot"))
           .agg(min_by(col("child"), struct(col("__pick"), col("child"))).as("child")))
       frontier = picked.select(col("seed"), col("child").as("parent")).distinct()
@@ -86,7 +89,7 @@ object NeighborSample {
     }
     // force the lazy per-hop checkpoints while the pinned edge frame is
     // hot, so the caller's first action is a checkpoint read
-    val out = Engine.materialize(hops.reduce(_ unionByName _))
+    val out = Engine.checkpoint(hops.reduce(_ unionByName _))
     out.count()
     out
   }
@@ -130,13 +133,13 @@ object NeighborSample {
       val ord =
         if (byWeight) struct(negate(col("weight")), col("child"))
         else struct(pickHash(col("parent"), col("child"), salt, lit(0)), col("child"))
-      val picked = Engine.materialize(graft.engine.Skew.saltedTopK(
+      val picked = Engine.checkpoint(graft.engine.Skew.saltedTopK(
         cand, Seq("seed", "parent"), "child", ord, f, saltFrom = "child"))
       frontier = picked.select(col("seed"), col("child").as("parent")).distinct()
       picked.select(col("seed").as("seed_oid"), lit(h + 1).as("hop"),
         col("parent").as("parent_oid"), col("child").as("child_oid"), col("rank"))
     }
-    val out = Engine.materialize(hops.reduce(_ unionByName _))
+    val out = Engine.checkpoint(hops.reduce(_ unionByName _))
     out.count()
     out
   }
@@ -205,14 +208,14 @@ object NeighborSample {
       val picks = proportionalPicks(oidEdges,
         frontier.select(col("parent")).distinct(), f, salt, byInDegree,
         subBuckets, binW)
-      val out = Engine.materialize(frontier.join(picks, Seq("parent"))
+      val out = Engine.checkpoint(frontier.join(picks, Seq("parent"))
         .select(col("seed").as("seed_oid"), lit(h + 1).as("hop"),
           col("parent").as("parent_oid"), col("child").as("child_oid"), col("slot")))
       frontier = out.select(col("seed_oid").as("seed"), col("child_oid").as("parent"))
         .distinct()
       out
     }
-    val out = Engine.materialize(hops.reduce(_ unionByName _))
+    val out = Engine.checkpoint(hops.reduce(_ unionByName _))
     out.count()
     out
   }

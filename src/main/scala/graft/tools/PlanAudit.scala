@@ -70,11 +70,11 @@ object PlanAudit {
       // checkpoint the edge input so the audited plan is the STEP alone
       // (the derivation subtree legitimately contains the reply-lag
       // Window and would false-positive the assertion)
-      val oidEdges = g0.edges.toDF
+      val oidEdges = graft.engine.Engine.checkpoint(g0.edges.toDF
         .join(g0.vertices.toDF.select(col("id").as("src"), col("oid").as("a")), "src")
         .join(g0.vertices.toDF.select(col("id").as("dst"), col("oid").as("b")), "dst")
-        .select("a", "b")
-        .localCheckpoint(true)
+        .select("a", "b"))
+      oidEdges.rdd.count()
       import spark.implicits._
       val walk0 = Seq("system").toDF("start")
         .select(col("start"), array(col("start")).as("path"), col("start").as("tip"))
@@ -227,13 +227,14 @@ object PlanAudit {
     {
       val gm = SparkEntry.graphFor(spark, sfDir)
       import spark.implicits._
+      val oidE = graft.engine.Engine.checkpoint(gm.edges.toDF
+        .join(gm.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
+        .join(gm.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
+        .select(col("parent"), col("child"), col("weight")))
+      oidE.rdd.count()
       val cand = Seq("system").toDF("seed")
         .select(col("seed"), col("seed").as("parent"))
-        .join(gm.edges.toDF
-          .join(gm.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
-          .join(gm.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
-          .select(col("parent"), col("child"), col("weight"))
-          .localCheckpoint(true), Seq("parent"))
+        .join(oidE, Seq("parent"))
       val plan = graft.engine.Skew.saltedTopK(
         cand, Seq("seed", "parent"), "child",
         struct(negate(col("weight")), col("child")), 3, saltFrom = "child")
@@ -252,9 +253,10 @@ object PlanAudit {
     {
       val gm = SparkEntry.graphFor(spark, sfDir)
       import spark.implicits._
-      val gp = graft.graph.LinkGraph(
-        gm.vertices.toDF.localCheckpoint(true).as[graft.schema.Vertex],
-        gm.edges.toDF.localCheckpoint(true).as[graft.schema.Edge])
+      val (vs, es) = (graft.engine.Engine.checkpoint(gm.vertices.toDF),
+        graft.engine.Engine.checkpoint(gm.edges.toDF))
+      vs.rdd.count(); es.rdd.count()
+      val gp = graft.graph.LinkGraph(vs.as[graft.schema.Vertex], es.as[graft.schema.Edge])
       val plan = graft.ml.NegativeSample.sample(
         gp, Seq("system", "assistant"), f = 4).queryExecution.executedPlan.toString
       println("==== negative_sample ====")
@@ -276,11 +278,11 @@ object PlanAudit {
     {
       val gm = SparkEntry.graphFor(spark, sfDir)
       import spark.implicits._
-      val oidE = gm.edges.toDF
+      val oidE = graft.engine.Engine.checkpoint(gm.edges.toDF
         .join(gm.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
         .join(gm.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
-        .select(col("parent"), col("child"), col("weight"))
-        .localCheckpoint(true)
+        .select(col("parent"), col("child"), col("weight")))
+      oidE.rdd.count()
       val parents = Seq("system", "assistant").toDF("parent")
       val plan = graft.ml.NeighborSample.proportionalPicks(
         oidE, parents, 3, 42L, byInDegree = false)
@@ -293,20 +295,21 @@ object PlanAudit {
         s"exchanges=${countOf(plan, "Exchange")}")
     }
 
-    // pinned-edge superstep (Engine.pin = eager localCheckpoint): the
+    // checkpointed-edge superstep (Engine.checkpoint under AQE off): the
     // checkpointed LogicalRDD must RETAIN hashpartitioning(src) so the
     // co-partitioned shuffle_hash join still plans zero input exchanges
-    // — if pin dropped partitioning this plan would show 3 exchanges,
-    // not 1, and every superstep would re-shuffle the edge table.
+    // — if the checkpoint dropped partitioning this plan would show 3
+    // exchanges, not 1, and every superstep would re-shuffle the edges.
     {
       val gm = SparkEntry.graphFor(spark, sfDir)
       graft.engine.Engine.withoutAQE(spark) {
-        val e = graft.engine.Engine.pin(
+        val e = graft.engine.Engine.checkpoint(
           gm.edges.toDF.select(col("src"), col("dst"), lit(1.0).as("w"))
             .repartition(col("src")))
-        val cPrev = graft.engine.Engine.pin(
+        val cPrev = graft.engine.Engine.checkpoint(
           gm.vertices.toDF.select(col("id"), lit(0.0).as("c"))
             .repartition(col("id")))
+        e.count(); cPrev.count()
         val superstep = e
           .join(cPrev.select(col("id").as("src"), col("c")).hint("shuffle_hash"), Seq("src"), "left")
           .select(col("dst"), (col("w") * col("c")).as("m"))

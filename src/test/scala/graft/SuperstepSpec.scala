@@ -1,0 +1,160 @@
+package graft
+
+import java.nio.file.Files
+import java.util.UUID
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.algos.{CDLP, PageRank, WCC}
+import graft.engine.CheckpointConfig
+import graft.engine.Engine.MetricsLog
+import graft.graph.LinkGraph
+import graft.ingest.SnapshotStore
+
+/** The superstep driver's contract: one Spark job per round, a gather
+  * join with no exchange on the checkpointed edge side, one snapshot per
+  * round at `every = 1`, resume that logs only the rounds it ran, and an
+  * atomic `_latest` commit.
+  */
+class SuperstepSpec extends SparkSpec {
+
+  // 300 vertices each: random edges for PageRank/CDLP, and a chain for
+  // WCC, which then needs ~300 rounds and never converges inside a test
+  private lazy val g: LinkGraph = graphFrom(300, randomEdges(300, 1200))
+  private lazy val chain: LinkGraph = graphFrom(300, (0 until 299).map(i => (i, i + 1)))
+
+  /** Runs `f` and returns the Spark jobs it started. Marker jobs before
+    * and after bracket the listener's view, so events still queued from
+    * earlier work are not counted and all of `f`'s events are.
+    */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    val (m1, m2) = (s"marker-${UUID.randomUUID()}", s"marker-${UUID.randomUUID()}")
+    val done = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        seen.add(d)
+        if (d == m2) done.countDown()
+      }
+    }
+    def marker(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker(m1); f; marker(m2)
+      assert(done.await(60, TimeUnit.SECONDS), "listener never saw the closing marker")
+      seen.asScala.toSeq.dropWhile(_ != m1).drop(1).takeWhile(_ != m2).size
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Jobs per round: the difference between two calls that differ only
+    * in their round count, so set-up jobs cancel out.
+    */
+  private def jobsPerRound(name: String)(call: Int => Unit): Double = {
+    val (a, b) = (jobsOf(call(1)), jobsOf(call(3)))
+    val perRound = (b - a) / 2.0
+    info(f"$name: $a jobs for 1 round, $b for 3 → $perRound%.2f per round")
+    perRound
+  }
+
+  test("one Spark job per round: PageRank fixed and tol, WCC, CDLP") {
+    val fixed = jobsPerRound("pagerank fixed") { k =>
+      PageRank.run(g, PageRank.Config(maxIter = k)).collect() }
+    val tol = jobsPerRound("pagerank tol") { k =>
+      PageRank.run(g, PageRank.Config(maxIter = k, tol = Some(1e-15), tolTimesN = false)).collect() }
+    val wcc = jobsPerRound("wcc") { k => WCC.run(chain, maxIter = k).collect() }
+    val cdlp = jobsPerRound("cdlp") { k => CDLP.run(g, rounds = k).collect() }
+    assert((fixed, tol, wcc, cdlp) == ((1.0, 1.0, 1.0, 1.0)))
+  }
+
+  test("a round's gather join plans no exchange on the checkpointed edge side") {
+    val plans = new ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val marker = s"marker_${UUID.randomUUID().toString.replace('-', '_')}"
+    val done = new CountDownLatch(1)
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(funcName -> qe.executedPlan)
+        if (qe.analyzed.output.exists(_.name == marker)) done.countDown()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      PageRank.run(g, PageRank.Config(maxIter = 2)).collect()
+      WCC.run(chain, maxIter = 2).collect()
+      spark.range(1).toDF(marker).collect()
+      assert(done.await(60, TimeUnit.SECONDS), "listener never saw the closing marker")
+    } finally spark.listenerManager.unregister(l)
+    // the edge side of a gather join: a child carrying both endpoints
+    def edgeSides(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case j: ShuffledHashJoinExec => j.children.filter(c =>
+        Set("src", "dst").subsetOf(c.output.map(_.name).toSet))
+    }.flatten
+    val sides = plans.asScala.toSeq.flatMap { case (_, p) => edgeSides(p) }
+    // PageRank and WCC each plan one gather join per round
+    assert(sides.size >= 4, s"found ${sides.size} gather joins")
+    sides.foreach { s =>
+      assert(s.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"exchange on the edge side of a gather join:\n$s")
+    }
+  }
+
+  private def manifests(dir: String, table: String): Int =
+    Option(new java.io.File(s"$dir/$table/_manifests").listFiles()).toSeq.flatten
+      .count(_.getName.matches("v\\d+\\.json"))
+
+  test("every = 1 writes one manifest per round; a resumed every = 0 call writes none") {
+    def check(table: String)(call: (Int, Option[CheckpointConfig], MetricsLog) => Unit): Unit = {
+      val dir = Files.createTempDirectory(s"graft-$table").toString
+      try {
+        val store = new SnapshotStore(dir)
+        val (l1, l2) = (new MetricsLog, new MetricsLog)
+        call(3, Some(CheckpointConfig(store, table, every = 1)), l1)
+        assert(manifests(dir, table) == 3 && l1.iterations == 3)
+        call(5, Some(CheckpointConfig(store, table, every = 0)), l2)
+        assert(manifests(dir, table) == 3)
+        assert(l2.all.map(_.iter) == Seq(3, 4))
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+    check("pr") { (k, c, log) => PageRank.run(g, PageRank.Config(maxIter = k), log, c).collect() }
+    check("wcc") { (k, c, log) => WCC.run(chain, k, log, c).collect() }
+  }
+
+  test("a commit that stops before the pointer moves leaves the previous version latest") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-commit").toString
+    try {
+      val ok = new SnapshotStore(dir)
+      ok.write("t", Seq((1L, 0.5)).toDF("id", "rank"), Map("iter" -> 0.0))
+      ok.write("t", Seq((1L, 0.6)).toDF("id", "rank"), Map("iter" -> 1.0))
+      val crashing = new SnapshotStore(dir) {
+        override protected def movePointer(from: Path, to: Path): Unit =
+          throw new java.io.IOException("stopped before the rename")
+      }
+      intercept[java.io.IOException] {
+        crashing.write("t", Seq((1L, 0.7)).toDF("id", "rank"), Map("iter" -> 2.0))
+      }
+      assert(ok.latestVersion("t").contains(1))
+      assert(ok.read(spark, "t", 1).head().getDouble(1) == 0.6)
+      val left = Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.contains("tmp")).toList
+      assert(left.isEmpty, s"temp files left behind: $left")
+      // the next good commit moves past the abandoned version
+      assert(ok.write("t", Seq((1L, 0.8)).toDF("id", "rank"), Map("iter" -> 3.0)) == 2)
+      assert(ok.latestVersion("t").contains(2))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+}
