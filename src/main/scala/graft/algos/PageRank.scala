@@ -3,7 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{CheckpointConfig, Engine, Superstep}
+import graft.engine.{CheckpointConfig, CsrEdges, CsrGather, Engine, Superstep}
 import graft.engine.Engine.MetricsLog
 import graft.graph.LinkGraph
 
@@ -17,17 +17,17 @@ import graft.graph.LinkGraph
   *
   * Spark shape (north rule "hash-partitioned sparse gather-scatter"), in
   * **contribution form**: the only iterated state is the gather output
-  * `c_k(v) = Σ_{u→v} rank_k(u)/outdeg(u)`; ranks are recovered inline as
-  * `rank_k = base_k + d·c_k` with `base_k` a driver scalar. Each superstep
-  * is a single [[Superstep]] job: left-join the (src-partitioned,
-  * checkpointed) edge table with the previous contributions, partial+final
-  * `sum` per dst (map-side combine absorbs hub skew), then one aggregate
-  * over the new contributions giving the next dangling mass (and, in tol
-  * mode, the L1 delta) — the reference's cross-worker `Sum()` reduce
-  * (`pagerank.h:123-125`). Per-iteration
-  * scalars travel via 1-row frames ([[Engine.scalar]]) so the
-  * generated code is identical across supersteps (no per-iteration Janino
-  * recompile), and driver work stays O(1).
+  * `c_k(v) = Σ_{u→v} rank_k(u)/outdeg(u)`, keyed by `id`; ranks are
+  * recovered inline as `rank_k = base_k + d·c_k` with `base_k` a driver
+  * scalar. The set-up packs the edge table once into CSR blocks
+  * ([[CsrEdges]]) co-partitioned with the state, and each superstep is
+  * one [[CsrGather]] node in a single [[Superstep]] job: each block
+  * gathers from its own state partition, the partial sums per dst go
+  * through one shuffle, and one aggregate over the new contributions
+  * gives the next dangling mass (and, in tol mode, the L1 delta) — the
+  * reference's cross-worker `Sum()` reduce (`pagerank.h:123-125`). The
+  * round's scalars are fields of the node, so there is no per-edge
+  * scalar join and nothing to recompile, and driver work stays O(1).
   */
 object PageRank {
 
@@ -84,15 +84,13 @@ object PageRank {
     val noInCount = n - simpleEdges.select(col("dst")).distinct().count()
 
     // Edge table with 1/outdeg and the destination's dangling flag baked
-    // in; the flag rides the gather groupBy (same cardinality: dst →
-    // (dst, dstDangling)) so fixed-round supersteps never touch the
-    // vertex table.
-    val e = Engine.checkpoint(simpleEdges
+    // in, packed once into CSR blocks co-partitioned with the state, so
+    // fixed-round supersteps never touch the vertex table.
+    val edges = CsrEdges.pack(simpleEdges
       .join(outDeg, "src")
       .join(verts.select(col("id").as("dst"), col("dangling").as("dstDangling")), "dst")
-      .select(col("src"), col("dst"), (col("weight") / col("outdeg")).as("w"), col("dstDangling"))
-      .repartition(col("src")))
-    val edgeCount = e.count()
+      .select(col("src"), col("dst"), (col("weight") / col("outdeg")).as("w"), col("dstDangling")),
+      spark.sessionState.conf.numShufflePartitions)
 
     def baseNext(s: Superstep.Scalars): Double = (1.0 - d) / n + d * s("dsum") / n
 
@@ -104,28 +102,12 @@ object PageRank {
           .add("id", "long").add("dstDangling", "boolean").add("c", "double")),
       scalars = Map("base" -> 1.0 / n, "dsum" -> danglingCount.toDouble / n,
         "delta" -> Double.MaxValue),
-      step = (cPrev, s) => {
-        // gather: rank_{k}(u) = baseO + d·c_prev(u), inline on the edge join
-        val cNext = e
-          .join(cPrev.select(col("id").as("src"), col("c")).hint("shuffle_hash"), Seq("src"), "left")
-          .crossJoin(Engine.scalar(spark, "__baseO", s("base")))
-          .select(col("dst"), col("dstDangling"),
-            (col("w") * (col("__baseO") + lit(d) * coalesce(col("c"), lit(0.0)))).as("m"))
-          .groupBy(col("dst").as("id"), col("dstDangling"))
-          .agg(sum(col("m")).as("c"))
-        // Tol mode: the contribution frame's dst set is IDENTICAL every
-        // superstep (every vertex with ≥1 in-edge gets a row — the gather
-        // left-join emits a message for every edge), so the per-vertex L1
-        // term needs only a co-partitioned left join of consecutive
-        // contribution frames; the (n - inCount) zero-in-degree vertices
-        // are a driver-side constant in `fold`.
-        if (cfg.tol.isEmpty) cNext
-        else cNext
-          .join(cPrev.select(col("id"), col("c").as("cO")).hint("shuffle_hash"), Seq("id"), "left")
-          .crossJoin(Engine.scalar(spark, "__dBase", baseNext(s) - s("base")))
-          .select(col("id"), col("dstDangling"), col("c"),
-            abs(col("__dBase") + lit(d) * (col("c") - coalesce(col("cO"), lit(0.0)))).as("ad"))
-      },
+      // Tol mode: the state's id set is IDENTICAL every superstep (every
+      // vertex with ≥1 in-edge gets a row), so the per-vertex L1 term
+      // needs only the co-partitioned previous state; the (n - inCount)
+      // zero-in-degree vertices are a driver-side constant in `fold`.
+      step = (cPrev, s) => CsrGather.frame(cPrev, CsrGather.Params(edges, s("base"), d,
+        cfg.tol.map(_ => baseNext(s) - s("base")))),
       // dsum = |D|·base + d·Σ_{dangling} c rides the same aggregate
       stats = c => c.agg(
         sum(when(col("dstDangling"), col("c"))),
@@ -139,7 +121,7 @@ object PageRank {
             else Superstep.orZero(r, 1) + noInCount * math.abs(b - s("base"))))
       },
       halt = s => cfg.tol.exists(t => s("delta") < (if (cfg.tolTimesN) t * n else t)),
-      edges = edgeCount,
+      edges = edges.edgeCount,
       result = (c, s) => verts
         .join(c.select(col("id"), col("c")), Seq("id"), "left")
         .crossJoin(Engine.scalar(spark, "__base", s("base")))

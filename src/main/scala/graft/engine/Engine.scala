@@ -64,8 +64,7 @@ object Engine {
     *    `repartition(col("src"))` edge table feeds a co-partitioned
     *    superstep join with no exchange on its side. With AQE on both
     *    variants lose it. A state grouped by more keys than the next join
-    *    uses (PageRank's `(dst, dstDangling)`) is re-hashed every round
-    *    either way.
+    *    uses is re-hashed every round either way.
     */
   def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(false)
 

@@ -108,13 +108,6 @@ object Gremlin {
       i += 1
       out
     }
-    def numLit(): Long = {
-      ws()
-      val j = i
-      while (i < s.length && s(i).isDigit) i += 1
-      if (i == j) fail("expected number")
-      s.substring(j, i).toLong
-    }
     /** Numeric literal with an optional fraction (P.gt(0.5)), raw text. */
     def numberLit(): String = {
       ws()
@@ -316,9 +309,9 @@ object Gremlin {
   }
 
   /** Lower a has()/where() predicate over a concrete column. String
-    * predicates compare raw; the numeric family (`expr.proto:61-98` LT/
-    * LE/GT/GE + TinkerPop between/inside) parses its literals as
-    * doubles. `between(a,b)` is TinkerPop's [a, b); `inside(a,b)` is
+    * predicates compare raw; the ordered family (`expr.proto:61-98` LT/
+    * LE/GT/GE + TinkerPop between/inside) reads each literal through
+    * [[ordCmp]]. `between(a,b)` is TinkerPop's [a, b); `inside(a,b)` is
     * (a, b).
     */
   /** A P-predicate literal: Right(double) when numeric, Left(raw
@@ -351,8 +344,8 @@ object Gremlin {
     case Pred("gte", Seq(v)) => ordCmp(v).fold(s => c >= s, n => c >= n)
     case Pred("lt", Seq(v)) => ordCmp(v).fold(s => c < s, n => c < n)
     case Pred("lte", Seq(v)) => ordCmp(v).fold(s => c <= s, n => c <= n)
-    case Pred("between", Seq(a, b)) => c >= a.toDouble && c < b.toDouble
-    case Pred("inside", Seq(a, b)) => c > a.toDouble && c < b.toDouble
+    case Pred("between", Seq(a, b)) => predOn(c, Pred("gte", Seq(a))) && predOn(c, Pred("lt", Seq(b)))
+    case Pred("inside", Seq(a, b)) => predOn(c, Pred("gt", Seq(a))) && predOn(c, Pred("lt", Seq(b)))
     case other => throw new IllegalArgumentException(s"unsupported has predicate: $other")
   }
 

@@ -629,12 +629,12 @@ final class Traversal private[gie] (
               emittedOf(cur.df.join(hits, Seq("__v"), "left_anti")))
           else outFrames += exits
           cur = next(Engine.checkpoint(cur.df.join(hits, Seq("__v"), "left_anti")))
-          live = cur.df.count()
+          live = cur.df.rdd.count()
           if (live == 0 && !emit) () // exit frame already captured above
         case _ =>
           // final round (times reached: every survivor exits) or pure
           // until-less emit loop — no split needed
-          live = cur.df.count()
+          live = cur.df.rdd.count()
           if (live > 0) {
             if (round == times) outFrames += cur.df
             else if (emit) outFrames += emittedOf(cur.df)
@@ -673,11 +673,11 @@ final class Traversal private[gie] (
           Seq("__v"), "left")
           .where(col("old").isNull || col("nd") < col("old"))
           .select(col("__v"), col("nd").as("__dist")))
-      changed = upd.count()
+      changed = upd.rdd.count()
       if (changed > 0) {
         state = Engine.checkpoint(
           state.join(upd.select(col("__v")), Seq("__v"), "left_anti").unionByName(upd))
-        state.count()
+        state.rdd.count()
         frontier = upd
       }
     }
@@ -874,7 +874,7 @@ final class Traversal private[gie] (
       df.select(col("__v")).distinct().withColumn("__hops", lit(0L)))
     var frontier = reached.select(col("__v"))
     var h = 0
-    var live = frontier.count()
+    var live = frontier.rdd.count()
     while (h < upper && live > 0) {
       h += 1
       val hopsDf = Engine.scalarLong(g.vertices.sparkSession, "__h", h.toLong)
@@ -884,7 +884,7 @@ final class Traversal private[gie] (
           .join(reached.select(col("__v")), Seq("__v"), "left_anti")
           .crossJoin(hopsDf)
           .select(col("__v"), col("__h").as("__hops")))
-      live = nxt.count()
+      live = nxt.rdd.count()
       if (live > 0) {
         reached = Engine.checkpoint(reached.unionByName(nxt))
         frontier = nxt.select(col("__v"))
@@ -918,7 +918,7 @@ final class Traversal private[gie] (
       df.select(col("__v")).withColumn("__path", array(col("__v"))))
     var acc = if (lower == 0) cur else cur.limit(0)
     var h = 0
-    var live = cur.count()
+    var live = cur.rdd.count()
     while (h < upper && live > 0) {
       h += 1
       var nxt = cur
@@ -926,7 +926,7 @@ final class Traversal private[gie] (
       if (simple) nxt = nxt.where(!array_contains(col("__path"), col("dst")))
       cur = Engine.checkpoint(
         nxt.select(col("dst").as("__v"), concat(col("__path"), array(col("dst"))).as("__path")))
-      live = cur.count()
+      live = cur.rdd.count()
       if (h >= lower && live > 0) acc = acc.unionByName(cur)
     }
     // acc is a chain of unions over the per-hop checkpointed frames —

@@ -28,12 +28,6 @@ import graft.schema.{Edge, Vertex}
   */
 final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 
-  def vertexLabels: Seq[String] =
-    vertices.select("label").distinct().collect().map(_.getString(0)).sorted.toSeq
-
-  def edgeLabelNames: Seq[String] =
-    edges.select("label").distinct().collect().map(_.getString(0)).sorted.toSeq
-
   /** PROJECT_TO_SIMPLE: keep the given vertex/edge labels; edges are
     * induced (both endpoints must survive the vertex-label selection).
     */

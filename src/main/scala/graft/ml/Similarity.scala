@@ -65,18 +65,6 @@ object Similarity {
     v.cast("double") / 500000.0 - 1.0
   }
 
-  /** Sign-LSH bucket key from `nPlanes` pseudo-random hyperplanes. */
-  def lshBucket(vec: Column, nPlanes: Int): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(p, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1L) * (1L << p)).otherwise(0L)
-    }
-    bits.reduce(_ + _)
-  }
-
   /** Bare (id, table, key) bucket table for `nTables` independent plane
     * sets (table t uses planes t·nPlanes .. t·nPlanes+nPlanes-1). The
     * vector payload is deliberately NOT carried: candidates ride the

@@ -295,52 +295,6 @@ object PlanAudit {
         s"exchanges=${countOf(plan, "Exchange")}")
     }
 
-    // checkpointed-edge superstep (Engine.checkpoint under AQE off): the
-    // checkpointed LogicalRDD must RETAIN hashpartitioning(src) so the
-    // co-partitioned shuffle_hash join still plans zero input exchanges
-    // — if the checkpoint dropped partitioning this plan would show 3
-    // exchanges, not 1, and every superstep would re-shuffle the edges.
-    {
-      val gm = SparkEntry.graphFor(spark, sfDir)
-      graft.engine.Engine.withoutAQE(spark) {
-        val e = graft.engine.Engine.checkpoint(
-          gm.edges.toDF.select(col("src"), col("dst"), lit(1.0).as("w"))
-            .repartition(col("src")))
-        val cPrev = graft.engine.Engine.checkpoint(
-          gm.vertices.toDF.select(col("id"), lit(0.0).as("c"))
-            .repartition(col("id")))
-        e.count(); cPrev.count()
-        val superstep = e
-          .join(cPrev.select(col("id").as("src"), col("c")).hint("shuffle_hash"), Seq("src"), "left")
-          .select(col("dst"), (col("w") * col("c")).as("m"))
-          .groupBy(col("dst")).agg(sum(col("m")).as("c"))
-        val plan = superstep.queryExecution.executedPlan.toString
-        println("==== pagerank_superstep_pinned ====")
-        println(plan.take(1500))
-        println(s"---- pagerank_superstep_pinned summary: exchanges=${countOf(plan, "Exchange")} " +
-          s"shuffleHash=${countOf(plan, "ShuffledHashJoin")}")
-      }
-    }
-
-    // one PageRank superstep plan: build graph and show the gather job
-    val g = SparkEntry.graphFor(spark, sfDir)
-    graft.engine.Engine.withoutAQE(spark) {
-      val e = g.edges.toDF.select(col("src"), col("dst"), lit(1.0).as("w"))
-        .repartition(col("src")).persist()
-      e.count()
-      val cPrev = g.vertices.toDF.select(col("id"), lit(0.0).as("c"))
-        .repartition(col("id")).persist()
-      cPrev.count()
-      val superstep = e
-        .join(cPrev.select(col("id").as("src"), col("c")).hint("shuffle_hash"), Seq("src"), "left")
-        .select(col("dst"), (col("w") * col("c")).as("m"))
-        .groupBy(col("dst")).agg(sum(col("m")).as("c"))
-      val plan = superstep.queryExecution.executedPlan.toString
-      println("==== pagerank_superstep ====")
-      println(plan.take(4000))
-      println(s"---- pagerank_superstep summary: exchanges=${countOf(plan, "Exchange")} " +
-        s"wholeStageCodegen=${countOf(plan, "WholeStageCodegen")}")
-    }
     spark.stop()
   }
 }

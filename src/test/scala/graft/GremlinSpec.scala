@@ -118,6 +118,27 @@ class GremlinSpec extends SparkSpec {
     assert(rows(Gremlin.run(g, "g.V().has('oid', P.neq('t0')).count()")) == Set("4"))
   }
 
+  test("between / inside with string literals equal their gte/gt/lt forms") {
+    def oids(q: String) = rows(Gremlin.run(g, q))
+    val between = oids("g.V().has('oid', P.between('u0', 'u1')).values('oid')")
+    assert(between == oids("g.V().has('oid', P.gte('u0')).has('oid', P.lt('u1')).values('oid')"))
+    assert(between == Set("u0"))
+    val inside = oids("g.V().has('oid', P.inside('a0', 'u0')).values('oid')")
+    assert(inside == oids("g.V().has('oid', P.gt('a0')).has('oid', P.lt('u0')).values('oid')"))
+    assert(inside == Set("a1", "t0"))
+  }
+
+  test("hop loops test liveness with one job per hop") {
+    // u0's frontier stays live for three hops of both loops
+    val repeat = jobsPerRound("repeat(out()).times(k)") { k =>
+      Gremlin.run(g, s"g.V().has('oid', 'u0').repeat(__.out()).times($k).count()").collect() }
+    val expand = jobsPerRound("out('1..k') pathExpand") { k =>
+      Gremlin.run(g, s"g.V().has('oid', 'u0').out('1..$k').hops()").collect() }
+    // rdd.count() on the checkpointed hop: with AQE on, a DataFrame
+    // count() there costs pathExpand one job more per hop (5.5)
+    assert((repeat, expand) == ((1.0, 4.5)))
+  }
+
   test("dedup collapses multiplicity; as/select jump tags") {
     val viaText = Gremlin.run(g,
       "g.V().has('oid', TextP.startingWith('u')).out().out().dedup().values('oid')")

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +25,45 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   locally { spark.sparkContext.setLogLevel("ERROR") }
+
+  /** Runs `f` and returns the Spark jobs it started. Marker jobs before
+    * and after bracket the listener's view, so events still queued from
+    * earlier work are not counted and all of `f`'s events are.
+    */
+  protected def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    val (m1, m2) = (s"marker-${UUID.randomUUID()}", s"marker-${UUID.randomUUID()}")
+    val done = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        seen.add(d)
+        if (d == m2) done.countDown()
+      }
+    }
+    def marker(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker(m1); f; marker(m2)
+      assert(done.await(60, TimeUnit.SECONDS), "listener never saw the closing marker")
+      seen.asScala.toSeq.dropWhile(_ != m1).drop(1).takeWhile(_ != m2).size
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Jobs per round: the difference between two calls that differ only
+    * in their round count, so set-up jobs cancel out.
+    */
+  protected def jobsPerRound(name: String)(call: Int => Unit): Double = {
+    val (a, b) = (jobsOf(call(1)), jobsOf(call(3)))
+    val perRound = (b - a) / 2.0
+    info(f"$name: $a jobs for 1 round, $b for 3 → $perRound%.2f per round")
+    perRound
+  }
 
   /** A LinkGraph over vertices 0..n-1 (oid = zero-padded index so dense
     * ranks coincide with indices) from an explicit edge list.

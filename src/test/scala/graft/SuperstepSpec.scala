@@ -7,20 +7,20 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.algos.{CDLP, PageRank, WCC}
-import graft.engine.CheckpointConfig
+import graft.engine.{CheckpointConfig, CsrGatherExec}
 import graft.engine.Engine.MetricsLog
 import graft.graph.LinkGraph
 import graft.ingest.SnapshotStore
 
-/** The superstep driver's contract: one Spark job per round, a gather
-  * join with no exchange on the checkpointed edge side, one snapshot per
+/** The superstep driver's contract: one Spark job per round, no
+  * exchange on the checkpointed edge side of a gather (WCC's join, and
+  * below PageRank's CSR node after its first round), one snapshot per
   * round at `every = 1`, resume that logs only the rounds it ran, and an
   * atomic `_latest` commit.
   */
@@ -30,45 +30,6 @@ class SuperstepSpec extends SparkSpec {
   // WCC, which then needs ~300 rounds and never converges inside a test
   private lazy val g: LinkGraph = graphFrom(300, randomEdges(300, 1200))
   private lazy val chain: LinkGraph = graphFrom(300, (0 until 299).map(i => (i, i + 1)))
-
-  /** Runs `f` and returns the Spark jobs it started. Marker jobs before
-    * and after bracket the listener's view, so events still queued from
-    * earlier work are not counted and all of `f`'s events are.
-    */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]()
-    val (m1, m2) = (s"marker-${UUID.randomUUID()}", s"marker-${UUID.randomUUID()}")
-    val done = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        seen.add(d)
-        if (d == m2) done.countDown()
-      }
-    }
-    def marker(d: String): Unit = {
-      sc.setJobDescription(d)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(l)
-    try {
-      marker(m1); f; marker(m2)
-      assert(done.await(60, TimeUnit.SECONDS), "listener never saw the closing marker")
-      seen.asScala.toSeq.dropWhile(_ != m1).drop(1).takeWhile(_ != m2).size
-    } finally sc.removeSparkListener(l)
-  }
-
-  /** Jobs per round: the difference between two calls that differ only
-    * in their round count, so set-up jobs cancel out.
-    */
-  private def jobsPerRound(name: String)(call: Int => Unit): Double = {
-    val (a, b) = (jobsOf(call(1)), jobsOf(call(3)))
-    val perRound = (b - a) / 2.0
-    info(f"$name: $a jobs for 1 round, $b for 3 → $perRound%.2f per round")
-    perRound
-  }
 
   test("one Spark job per round: PageRank fixed and tol, WCC, CDLP") {
     val fixed = jobsPerRound("pagerank fixed") { k =>
@@ -80,7 +41,10 @@ class SuperstepSpec extends SparkSpec {
     assert((fixed, tol, wcc, cdlp) == ((1.0, 1.0, 1.0, 1.0)))
   }
 
-  test("a round's gather join plans no exchange on the checkpointed edge side") {
+  /** Runs `f` and returns the executed plans of the queries it ran, in
+    * order (a lazy checkpoint reports its plan as `localCheckpoint`).
+    */
+  private def plansOf(f: => Unit): Seq[(String, SparkPlan)] = {
     val plans = new ConcurrentLinkedQueue[(String, SparkPlan)]()
     val marker = s"marker_${UUID.randomUUID().toString.replace('-', '_')}"
     val done = new CountDownLatch(1)
@@ -93,22 +57,37 @@ class SuperstepSpec extends SparkSpec {
     }
     spark.listenerManager.register(l)
     try {
-      PageRank.run(g, PageRank.Config(maxIter = 2)).collect()
-      WCC.run(chain, maxIter = 2).collect()
+      f
       spark.range(1).toDF(marker).collect()
       assert(done.await(60, TimeUnit.SECONDS), "listener never saw the closing marker")
     } finally spark.listenerManager.unregister(l)
+    plans.asScala.toSeq
+  }
+
+  private def exchanges(p: SparkPlan): Seq[ShuffleExchangeExec] =
+    p.collect { case e: ShuffleExchangeExec => e }
+
+  test("a round's gather join plans no exchange on the checkpointed edge side") {
+    val plans = plansOf(WCC.run(chain, maxIter = 2).collect())
     // the edge side of a gather join: a child carrying both endpoints
     def edgeSides(p: SparkPlan): Seq[SparkPlan] = p.collect {
       case j: ShuffledHashJoinExec => j.children.filter(c =>
         Set("src", "dst").subsetOf(c.output.map(_.name).toSet))
     }.flatten
-    val sides = plans.asScala.toSeq.flatMap { case (_, p) => edgeSides(p) }
-    // PageRank and WCC each plan one gather join per round
-    assert(sides.size >= 4, s"found ${sides.size} gather joins")
-    sides.foreach { s =>
-      assert(s.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-        s"exchange on the edge side of a gather join:\n$s")
+    val sides = plans.flatMap { case (_, p) => edgeSides(p) }
+    // WCC plans one gather join per round
+    assert(sides.size >= 2, s"found ${sides.size} gather joins")
+    sides.foreach(s => assert(exchanges(s).isEmpty, s"exchange on the edge side of a gather join:\n$s"))
+  }
+
+  test("a PageRank round plans the CSR node, with no exchange below it after round 1") {
+    for (tol <- Seq(None, Some(1e-15))) {
+      val plans = plansOf(PageRank.run(g,
+        PageRank.Config(maxIter = 3, tol = tol, tolTimesN = false)).collect())
+      val rounds = plans.flatMap { case (_, p) => p.collect { case c: CsrGatherExec => c } }
+      assert(rounds.size == 3, s"found ${rounds.size} CSR gather nodes")
+      // round 1 reads the empty initial state, which is not yet placed by id
+      rounds.tail.foreach(r => assert(exchanges(r).isEmpty, s"exchange below the CSR node:\n$r"))
     }
   }
 
