@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 import graft.algos.{CDLP, PageRank, Triangles, WCC}
@@ -34,9 +36,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions",
         (if (partitions > 0) partitions else cpus).toString)
       .config("spark.sql.adaptive.enabled", "true")
-      // shuffle on tmpfs: at 38M+ edge messages per superstep the local
-      // disk becomes the bottleneck and flattens core scaling
-      .config("spark.local.dir", "/dev/shm/graft-spark")
+      .config("spark.local.dir", localDir)
       // with shuffle files already in RAM, LZ4 is pure CPU overhead on
       // the superstep hot path (measured at sf0.4, 32 partitions: 12.2M
       // → 14.2M e/s/superstep at 8 cores with compression off); on a
@@ -48,6 +48,32 @@ object Bench {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Shuffle on tmpfs where the host has a writable `/dev/shm`: at 38M+
+    * edge messages per superstep the local disk becomes the bottleneck
+    * and flattens core scaling. Elsewhere, under `java.io.tmpdir`.
+    */
+  private val localDir: String = {
+    val shm = Paths.get("/dev/shm")
+    val root = if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+      else Paths.get(System.getProperty("java.io.tmpdir"))
+    root.resolve("graft-spark").toString
+  }
+
+  /** Facts about the machine and build a run was measured on, as JSON. */
+  private def hostJson(cpus: Int): String = {
+    def read(path: String): Seq[String] =
+      scala.util.Try(Files.readAllLines(Paths.get(path)).asScala.toSeq).getOrElse(Nil)
+    val memKb = read("/proc/meminfo").collectFirst {
+      case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong
+    }.getOrElse(-1L)
+    val load = read("/proc/loadavg").headOption.map(_.split(" ").take(3).mkString(",")).getOrElse("")
+    val sha = scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD")).!!.trim)
+      .getOrElse("unknown")
+    f"""{"nproc":${Runtime.getRuntime.availableProcessors},"cpus":$cpus,"mem_total_kb":$memKb,""" +
+      f""""load":[$load],"jdk":"${System.getProperty("java.version")}",""" +
+      f""""spark":"${org.apache.spark.SPARK_VERSION}","git_sha":"$sha","local_dir":"$localDir"}"""
   }
 
   private def loadGraph(spark: SparkSession, dir: String): LinkGraph = {
@@ -78,7 +104,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     // Bench graph is BENCH_MULT× the verification-scale graph: the scaling
     // criterion needs supersteps whose parallel work dominates the ~0.7s
     // fixed per-superstep latency (stage scheduling + scalar round trips).
@@ -87,6 +114,7 @@ object Bench {
     val lowCpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_LOW", "2").toInt
     val highCpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_HIGH", (lowCpus * 4).toString).toInt
     val tmp = Files.createTempDirectory("graft-bench").toString
+    val host = hostJson(cpus)
     val q = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // Process-CPU + load sampling, shared by the headline phase and the
     // scaling runs (all executor threads live in this JVM, so
@@ -259,6 +287,7 @@ object Bench {
         f""""util":${r.util}%.2f,"load":${r.load}%.1f}""").mkString("[", ",", "]")
     val json =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qJson,"sf":"$sfDir",""" +
+        f""""host":$host,""" +
         f""""sf_mult":$mult%.1f,"sf_effective":$sf%.3f,""" +
         f""""headline_runs":$auxJson,""" +
         f""""headline_multi":$multiJson,""" +

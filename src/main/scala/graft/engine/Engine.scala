@@ -2,7 +2,7 @@ package graft.engine
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftDatasets}
 
 import graft.ingest.SnapshotStore
 
@@ -65,8 +65,14 @@ object Engine {
     *    superstep join with no exchange on its side. With AQE on both
     *    variants lose it. A state grouped by more keys than the next join
     *    uses is re-hashed every round either way.
+    *  - Statistics: the checkpoint carries the size estimate of the plan
+    *    it cut, capped at `spark.sql.defaultSizeInBytes`. Uncapped, a step
+    *    that joins its state twice squares the estimate every round (SSSP
+    *    and WCC reached ~10^230 after 80 rounds) until planning stalls on
+    *    the arithmetic.
     */
-  def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(false)
+  def checkpoint(df: DataFrame): DataFrame =
+    GraftDatasets.capSizeEstimate(df.localCheckpoint(false))
 
   /** Run `f` with AQE disabled, restoring the previous setting after.
     *

@@ -3,7 +3,7 @@ package graft.gie
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Engine
+import graft.engine.{Adjacency, Engine}
 import graft.graph.{LinkGraph, PropertyGraph}
 
 /** Graph handle for the traversal plane. Plain graphs come from
@@ -17,13 +17,13 @@ import graft.graph.{LinkGraph, PropertyGraph}
   * ([[Traversal.hasLabel]], label-filtered expands) require `labeled`.
   */
 final case class GGraph private[gie] (
-    vertices: DataFrame, edges: DataFrame, labeled: Boolean)
+    vertices: DataFrame, edges: DataFrame, labeled: Boolean, adjacency: Adjacency)
 
 object GGraph {
   def apply(g: LinkGraph): GGraph =
-    GGraph(g.vertices.toDF, g.edges.toDF, labeled = false)
+    GGraph(g.vertices.toDF, g.edges.toDF, labeled = false, Adjacency.of(g))
   def apply(pg: PropertyGraph): GGraph =
-    GGraph(pg.vertices, pg.edges, labeled = true)
+    GGraph(pg.vertices, pg.edges, labeled = true, Adjacency.of(pg))
 }
 
 private[gie] object GGraphOps {
@@ -270,28 +270,25 @@ final class Traversal private[gie] (
     * (traverser, out-edge) — multiplicity = path count. Stale
     * per-vertex columns (oid/__hops) are dropped.
     */
-  def out(): Traversal = expand(edges, col("src"), col("dst"))
+  def out(): Traversal = expand("out", Nil)
 
   /** EdgeExpand IN + GetV START. */
-  def in(): Traversal = expand(edges, col("dst"), col("src"))
+  def in(): Traversal = expand("in", Nil)
 
   /** EdgeExpand BOTH. */
-  def both(): Traversal = bothOver(edges)
+  def both(): Traversal = expand("both", Nil)
 
   /** Label-filtered EdgeExpand (`algebra.proto:254` QueryParams.tables —
     * the per-edge-label expand of the reference's labeled dataflow):
     * the label predicate lands on the edge scan (partition pruning on a
-    * label-partitioned edge table at scale), then the same single
-    * equi-join. Requires a labeled graph.
+    * label-partitioned edge table at scale), then the same single hop
+    * ([[hop]]). Requires a labeled graph.
     */
-  def out(label: String, more: String*): Traversal =
-    expand(labeledEdges(label +: more), col("src"), col("dst"))
+  def out(label: String, more: String*): Traversal = expand("out", label +: more)
 
-  def in(label: String, more: String*): Traversal =
-    expand(labeledEdges(label +: more), col("dst"), col("src"))
+  def in(label: String, more: String*): Traversal = expand("in", label +: more)
 
-  def both(label: String, more: String*): Traversal =
-    bothOver(labeledEdges(label +: more))
+  def both(label: String, more: String*): Traversal = expand("both", label +: more)
 
   private def labeledEdges(label: String): DataFrame = labeledEdges(Seq(label))
 
@@ -305,18 +302,41 @@ final class Traversal private[gie] (
     edges.where(col("label").isin(labels: _*))
   }
 
-  private def bothOver(e: DataFrame): Traversal = {
-    val sym = e.select(col("src"), col("dst"))
-      .unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-    next(pathAppend(carried
-      .join(sym.withColumnRenamed("src", "__v"), Seq("__v"))
-      .withColumn("__v", col("dst")).drop("dst")))
-  }
-
-  private def expand(e: DataFrame, from: Column, to: Column): Traversal =
-    next(pathAppend(carried
-      .join(e.select(from.as("__v"), to.as("__to")), Seq("__v"))
+  private def expand(dir: String, labels: Seq[String]): Traversal =
+    next(pathAppend(hop(carried, dir, labels, hopRel(dir, labels))
       .withColumn("__v", col("__to")).drop("__to")))
+
+  /** The frame `d` with each row repeated once per edge row leaving its
+    * `__v` along `dir` (out/in/both) over `labels`' edges (all edges when
+    * empty), the neighbour as `__to`; columns `(__v, d's others, __to)`.
+    * While the edge side is small enough for Catalyst to broadcast, the
+    * hop reads the graph's adjacency index (an `explode` of a broadcast
+    * CSR lookup: no join, no exchange, no per-query broadcast build);
+    * otherwise it is an equi-join of `d` with the hop relation `rel`.
+    */
+  private def hop(d: DataFrame, dir: String, labels: Seq[String], rel: => DataFrame): DataFrame =
+    g.adjacency.index(labels)(edgesOf(labels).select(col("src"), col("dst"))) match {
+      case Some(ix) =>
+        d.select((col("__v") +: d.columns.filter(_ != "__v").toSeq.map(col)) :+
+          explode(ix.neighbours(dir, col("__v"))).as("__to"): _*)
+      case None => d.join(rel, Seq("__v"))
+    }
+
+  private def edgesOf(labels: Seq[String]): DataFrame =
+    if (labels.isEmpty) edges else labeledEdges(labels)
+
+  /** Hop relation `(__v, __to)`, one row per edge row along `dir` — the
+    * GIE EdgeExpand direction (`algebra.proto:254` Direction OUT/IN/BOTH).
+    */
+  private def hopRel(dir: String, labels: Seq[String]): DataFrame = {
+    val e = edgesOf(labels)
+    dir match {
+      case "out" => e.select(col("src").as("__v"), col("dst").as("__to"))
+      case "in" => e.select(col("dst").as("__v"), col("src").as("__to"))
+      case "both" => hopRel("out", labels).unionAll(hopRel("in", labels))
+      case other => throw new IllegalArgumentException(s"unknown expand direction: $other")
+    }
+  }
 
   /** In tracked mode, append the post-move position to `__path`. */
   private def pathAppend(d: DataFrame): DataFrame =
@@ -839,21 +859,13 @@ final class Traversal private[gie] (
     next(branches.map(_.select(cols: _*)).reduce(_ unionAll _))
   }
 
-  /** Hop relation (__v → dst) for a PathExpand direction — the GIE
-    * PathExpand `base` EdgeExpand direction (`algebra.proto:254`
-    * Direction OUT/IN/BOTH).
+  /** Hop relation `(__v, __to)` of a PathExpand — the GIE PathExpand
+    * `base` EdgeExpand. A labeled edge table holds one row per (pair,
+    * label); the hop relation of a path/shortest expand is the distinct
+    * pair set.
     */
-  private def expandRel(dir: String, label: Option[String] = None): DataFrame = {
-    val e = label.map(labeledEdges).getOrElse(edges)
-    val rel = dir match {
-      case "out" => e.select(col("src").as("__v"), col("dst"))
-      case "in" => e.select(col("dst").as("__v"), col("src").as("dst"))
-      case "both" => e.select(col("src").as("__v"), col("dst"))
-        .unionAll(e.select(col("dst").as("__v"), col("src").as("dst")))
-      case other => throw new IllegalArgumentException(s"unknown expand direction: $other")
-    }
-    // a labeled edge table holds one row per (pair, label) — the hop
-    // relation of a path/shortest expand is the distinct pair set
+  private def expandRel(dir: String, labels: Seq[String]): DataFrame = {
+    val rel = hopRel(dir, labels)
     if (g.labeled) rel.distinct() else rel
   }
 
@@ -861,15 +873,17 @@ final class Traversal private[gie] (
     * Dedup: the set of vertices whose shortest hop distance from the
     * current traverser *set* falls in [lower, upper], with that
     * distance as `__hops`. Level-synchronous first-visit expansion —
-    * each hop is one frontier join + anti-join, materialized
+    * each hop is one frontier [[hop]] + anti-join, materialized
     * ([[Engine.checkpoint]]) to keep lineage flat. `dir` is the base
-    * EdgeExpand direction (out/in/both).
+    * EdgeExpand direction (out/in/both). The reached set is a set, so a
+    * hop may read the adjacency index's per-edge-row lists even on a
+    * labeled graph.
     */
   def pathExpand(
       lower: Int, upper: Int, dir: String = "out", label: Option[String] = None
   ): Traversal = {
     require(lower >= 0 && upper >= lower, "need 0 <= lower <= upper")
-    val rel = expandRel(dir, label)
+    lazy val rel = expandRel(dir, label.toSeq)
     var reached = Engine.checkpoint(
       df.select(col("__v")).distinct().withColumn("__hops", lit(0L)))
     var frontier = reached.select(col("__v"))
@@ -879,8 +893,8 @@ final class Traversal private[gie] (
       h += 1
       val hopsDf = Engine.scalarLong(g.vertices.sparkSession, "__h", h.toLong)
       val nxt = Engine.checkpoint(
-        frontier.join(rel, Seq("__v"))
-          .select(col("dst").as("__v")).distinct()
+        hop(frontier, dir, label.toSeq, rel)
+          .select(col("__to").as("__v")).distinct()
           .join(reached.select(col("__v")), Seq("__v"), "left_anti")
           .crossJoin(hopsDf)
           .select(col("__v"), col("__h").as("__hops")))
@@ -906,14 +920,15 @@ final class Traversal private[gie] (
     * inclusive) and `__v` = the walk's end. `simple = true` is
     * path_opt SIMPLE (prune walks revisiting a vertex); false is
     * ARBITRARY. Walk counts are exponential in general — bound `upper`.
-    * Each hop is one equi-join against the edge table; the path rides
-    * the shuffle as a long array (ids only — oid materialization is a
-    * sink-side concern, [[pathOids]]).
+    * Each hop is one [[hop]] on a plain graph and one equi-join against
+    * the distinct pair set on a labeled one; the path rides the shuffle
+    * as a long array (ids only — oid materialization is a sink-side
+    * concern, [[pathOids]]).
     */
   def pathExpandPaths(
       lower: Int, upper: Int, simple: Boolean = true, dir: String = "out"): Traversal = {
     require(lower >= 0 && upper >= lower, "need 0 <= lower <= upper")
-    val rel = expandRel(dir)
+    lazy val rel = expandRel(dir, Nil)
     var cur = Engine.checkpoint(
       df.select(col("__v")).withColumn("__path", array(col("__v"))))
     var acc = if (lower == 0) cur else cur.limit(0)
@@ -921,11 +936,10 @@ final class Traversal private[gie] (
     var live = cur.rdd.count()
     while (h < upper && live > 0) {
       h += 1
-      var nxt = cur
-        .join(rel, Seq("__v"))
-      if (simple) nxt = nxt.where(!array_contains(col("__path"), col("dst")))
+      var nxt = if (g.labeled) cur.join(rel, Seq("__v")) else hop(cur, dir, Nil, rel)
+      if (simple) nxt = nxt.where(!array_contains(col("__path"), col("__to")))
       cur = Engine.checkpoint(
-        nxt.select(col("dst").as("__v"), concat(col("__path"), array(col("dst"))).as("__path")))
+        nxt.select(col("__to").as("__v"), concat(col("__path"), array(col("__to"))).as("__path")))
       live = cur.rdd.count()
       if (h >= lower && live > 0) acc = acc.unionByName(cur)
     }

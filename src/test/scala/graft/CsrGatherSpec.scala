@@ -99,4 +99,18 @@ class CsrGatherSpec extends SparkSpec {
       } finally sys.props.remove("graft.aqe.freeze")
     }
   }
+
+  test("a DataFrame tol run that joins its state twice converges in bounded time") {
+    // the step joins cNext with cPrev; before checkpoints capped their
+    // size estimate, planning stalled on the squared estimates
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val cfg = PageRank.Config(maxIter = 400, tol = Some(1e-10), tolTimesN = false)
+    val log = new MetricsLog
+    val t0 = System.nanoTime()
+    val got = Future(DataFramePageRank.run(g, cfg, log).cache())(ExecutionContext.global)
+    assertClose(Await.result(got, 5.minutes), PageRank.run(g, cfg))
+    info(f"${log.iterations} rounds in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    assert(log.iterations < cfg.maxIter)
+  }
 }

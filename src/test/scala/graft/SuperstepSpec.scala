@@ -67,6 +67,19 @@ class SuperstepSpec extends SparkSpec {
   private def exchanges(p: SparkPlan): Seq[ShuffleExchangeExec] =
     p.collect { case e: ShuffleExchangeExec => e }
 
+  test("a checkpoint caps its size estimate: SSSP and WCC after 80 rounds on a path") {
+    val path = graphFrom(80, (0 until 79).map(i => (i, i + 1)))
+    val cap = org.apache.spark.sql.GraftDatasets.conf(spark).defaultSizeInBytes
+    val (sssp, wcc) = (new MetricsLog, new MetricsLog)
+    for ((name, log, df) <- Seq(
+        ("sssp", sssp, graft.algos.SSSP.run(path, "v000000", sssp)),
+        ("wcc", wcc, WCC.run(path, log = wcc)))) {
+      val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      info(s"$name: ${log.iterations} rounds, estimate $size bytes")
+      assert(log.iterations >= 79 && size <= cap, name)
+    }
+  }
+
   test("a round's gather join plans no exchange on the checkpointed edge side") {
     val plans = plansOf(WCC.run(chain, maxIter = 2).collect())
     // the edge side of a gather join: a child carrying both endpoints
