@@ -3,27 +3,29 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.algos.{CDLP, PageRank, Triangles, WCC}
-import graft.engine.Engine
+import graft.algos.PageRank
+import graft.cases.{DataCases, GraphCases, GremlinCases, MediaCases, RelationalCases, VectorCases}
 import graft.graph.{GraphBuilder, LinkGraph}
-import graft.synth.{Synth, SynthSql, SynthSql2, SynthSql3}
+import graft.synth.Synth
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Query surface, two planes:
   *  - `tg_*`: the north-rule core — transcripts are synthesized
   *    deterministically ([[Synth]]) at the scale factor implied by the
   *    data dir, the link graph is derived, and the GraphScope-equivalent
   *    algorithms run on it. The DuckDB oracles re-generate the identical
-  *    table in SQL ([[SynthSql]]) and unroll the same recurrences, so
-  *    these are full-value checks, not rows-only.
+  *    table in SQL ([[graft.synth.SynthSql]]) and unroll the same
+  *    recurrences, so these are full-value checks, not rows-only.
   *  - `q_*`: relational/dataflow plane over the driver's parquet tables —
   *    the GIE operator algebra mapped to Spark (SURVEY.md §2.C: Scan,
   *    Select, Project, GroupBy aggregates, OrderBy+TopK, Dedup, Unfold,
   *    Join kinds, Apply), each with an ANSI-SQL oracle.
+  *
+  * Each query is declared once, as a [[Case]] in one of the per-plane
+  * files under `graft.cases`; [[registry]] collects them, and `queries`,
+  * `oracleSql` and `convergenceSql` are views over it.
   *
   * Cross-engine float discipline: money aggregates go through
   * DECIMAL(18,4) (exact, order-independent) and only the final value is
@@ -33,32 +35,12 @@ import graft.synth.{Synth, SynthSql, SynthSql2, SynthSql3}
 object SparkEntry {
 
   /** Verification scale — the driver's DuckDB stage runs on sf0.01; the
-    * static oracle SQL below is generated for the same sf the Spark side
+    * static oracle SQL is generated for the same sf the Spark side
     * derives from the dir name.
     */
-  private val OracleSf = 0.01
-  private val PrRounds = 10
-  private val CdlpRounds = 10
-  private val KcoreK = 30
-
-  /** Literal probe sets for the has_path / is_simple_path driver queries
-    * (the reference apps answer one query per run). Mix of reachable and
-    * unreachable pairs / valid and invalid walks at the oracle sf.
-    */
-  private val HasPathPairs = Seq(
-    ("assistant", "system"),    // system has no in-edges → false
-    ("system", "assistant"),    // true
-    ("assistant", "tool:t4"))   // true
-  private val SimplePathCases = Seq(
-    Seq("assistant", "u1", "assistant:794"), // both hops are edges → true
-    Seq("u1", "assistant", "u1"),            // repeated vertex → false
-    Seq("assistant", "system"))              // no such edge → false
-
-  /** Domain-mixture keep rates for `d_mixture_sample` (exact per-10000
-    * thresholds; sources not listed fall to the default).
-    */
-  private val MixtureRates = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25)
-  private val MixtureDefaultRate = 0.1
+  private[graft] val OracleSf = 0.01
+  private[graft] val PrRounds = 10
+  private[graft] val CdlpRounds = 10
 
   private val graphCache = TrieMap.empty[(SparkSession, Double), LinkGraph]
 
@@ -80,2003 +62,20 @@ object SparkEntry {
     })
   }
 
-  private def withOid(g: LinkGraph, result: DataFrame, valueCols: String*): DataFrame =
-    result.join(g.vertices.toDF, Seq("id"))
-      .select(col("oid") +: valueCols.map(col): _*)
-
   /** Flagship query on sf=0.001-equivalent scale; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val g = graphFor(spark, "sf0.001")
-    withOid(g, PageRank.run(g, PageRank.Config(0.85, PrRounds)).withColumnRenamed("rank", "pr"), "pr")
+    Case.withOid(g, PageRank.run(g, PageRank.Config(0.85, PrRounds)).withColumnRenamed("rank", "pr"), "pr")
   }
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  lazy val registry: Registry = new Registry(
+    GraphCases.cases ++ RelationalCases.cases ++ GremlinCases.cases ++
+      DataCases.cases ++ VectorCases.cases ++ MediaCases.cases)
 
-  /** Money-exact aggregation helper: DECIMAL(18,4) in, double out. */
-  private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,4)")
+  def queries: Map[String, (SparkSession, String) => DataFrame] = registry.byName.map { case (n, c) => n -> c.run }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- north-rule graph plane (SURVEY.md §2.B) ----
-    "tg_edges" -> ((s, dir) =>
-      GraphBuilder.oidEdges(Synth.transcripts(s, Synth.sfOfDir(dir)).toDF)),
-    "tg_degrees" -> ((s, dir) =>
-      graphFor(s, dir).degrees.select("oid", "out_deg", "in_deg")),
-    // explicit hub-skew salting over the mega-hub tool vertices: salted
-    // two-phase sum + salted collect (length) must equal the plain
-    // groupBy aggregates — the north rule's "explicit salting/splitting
-    // of hub-vertex skew", driver-checked against an unsalted twin
-    "tg_salted_hub" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val e = g.edges.toDF
-      val sums = graft.engine.Skew.saltedSum(e, "dst", "weight", saltFrom = "src")
-      val lens = graft.engine.Skew
-        .saltedCollectSorted(e.select(col("dst"), col("src")), "dst", "src", saltFrom = "src")
-        .select(col("dst"), size(col("src")).as("n_in"))
-      sums.join(lens, "dst")
-        .join(g.vertices.toDF.select(col("id").as("dst"), col("oid")), Seq("dst"))
-        .where(col("oid").like("tool:%"))
-        .select(col("oid"), round(col("weight"), 6).as("w_in"), col("n_in"))
-    }),
-    "tg_pagerank" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val pr = PageRank.run(g, PageRank.Config(0.85, PrRounds))
-      withOid(g, pr.select(col("id"), round(col("rank"), 6).as("pr")), "pr")
-    }),
-    // exact checkpoint/resume on the driver surface (north rule:
-    // "per-iteration state checkpointed to snapshots carrying
-    // per-partition lineage and metrics for exact resume"): phase 1
-    // runs 5 rounds writing a versioned snapshot + manifest per round
-    // into a per-invocation SnapshotStore, phase 2 is a FRESH
-    // invocation that resumes from the latest manifest (iteration,
-    // base, dangling mass) and finishes the remaining rounds — the
-    // result must hash-match the UNINTERRUPTED PrRounds oracle (same
-    // SQL twin as tg_pagerank), proving the resumed arithmetic is
-    // bit-identical, not merely close
-    "tg_pagerank_resume" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft-pr-resume").toString
-      try {
-        val ckpt = Some(graft.engine.CheckpointConfig(
-          new graft.ingest.SnapshotStore(tmp), "pr", every = 1))
-        PageRank.run(g, PageRank.Config(0.85, 5), ckpt = ckpt)
-        val pr = PageRank.run(g, PageRank.Config(0.85, PrRounds), ckpt = ckpt)
-        val out = Engine.checkpoint(
-          withOid(g, pr.select(col("id"), round(col("rank"), 6).as("pr")), "pr"))
-        out.rdd.count()
-        out
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }),
-    // weighted PageRank (nx pagerank on the weighted transcript graph:
-    // contributions split by edge weight / Σ out-weights)
-    "tg_pagerank_w" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val pr = PageRank.run(g, PageRank.Config(0.85, PrRounds, weighted = true))
-      withOid(g, pr.select(col("id"), round(col("rank"), 6).as("pr")), "pr")
-    }),
-    "tg_wcc" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      WCC.canonical(g, WCC.run(g))
-    }),
-    // exact WCC checkpoint/resume (same contract as tg_pagerank_resume):
-    // 5 HashMin rounds checkpointed per-round, fresh invocation resumes
-    // from the manifest (state with its changed-frontier flag) and runs
-    // to the fixpoint — the hash vs the uninterrupted twin is EXACT
-    "tg_wcc_resume" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft-wcc-resume").toString
-      try {
-        val ckpt = Some(graft.engine.CheckpointConfig(
-          new graft.ingest.SnapshotStore(tmp), "wcc", every = 1))
-        WCC.run(g, maxIter = 5, ckpt = ckpt)
-        val out = Engine.checkpoint(WCC.canonical(g, WCC.run(g, ckpt = ckpt)))
-        out.rdd.count()
-        out
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }),
-    "tg_cdlp" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      CDLP.run(g, CdlpRounds)
-        .join(g.vertices.toDF, Seq("id"))
-        .join(g.vertices.toDF.select(col("id").as("label"), col("oid").as("label_oid")), Seq("label"))
-        .select("oid", "label_oid")
-    }),
-    // the Pregel vertex-program UDF surface (engine/Pregel.scala) driven
-    // through the SAME HashMin-WCC oracle as tg_wcc — a second engine
-    // path must reach the identical fixpoint
-    "tg_pregel_wcc" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val sess = s; import sess.implicits._
-      val und = g.edges.toDF.where(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"))
-        .unionAll(g.edges.toDF.where(col("src") =!= col("dst"))
-          .select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .select(col("src"), col("dst"), lit(1.0).as("weight"))
-        .as[graft.schema.Edge]
-      val comps = graft.engine.Pregel.run(
-        graft.graph.LinkGraph(g.vertices, und),
-        graft.engine.Pregel.Program(
-          init = col("id"),
-          message = col("state"),
-          combine = c => min(c),
-          update = least(col("state"), coalesce(col("msg"), col("state"))),
-          maxIter = 100))
-      graft.algos.WCC.canonical(g, comps.withColumnRenamed("state", "comp"))
-    }),
-    "tg_triangles" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, Triangles.run(g), "triangles")
-    }),
+  def oracleSql: Map[String, String] = registry.byName.map { case (n, c) => n -> c.twin.sql }
 
-    // ---- relational plane (SURVEY.md §2.C → Spark) ----
-    // Scan + Select + Project (+ pushdown: filter & pruning reach parquet)
-    "q_scan_filter" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .where(col("l_quantity") > 45 && col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))),
-    // CSV loader surface (`loader.py:44-88`: delimiter/header/column
-    // selection): round-trip customer through pipe-delimited CSV with an
-    // explicit schema (no inference scan), select a column subset, and
-    // aggregate — the oracle aggregates the parquet source directly, so
-    // any loader-option mishandling breaks the hash
-    "q_csv_load" -> ((s, dir) => {
-      val src = t(s, dir, "customer")
-      // per-invocation scratch dir (a fixed path raced concurrent drivers
-      // on overwrite-vs-read and leaked into /tmp); eager checkpoint so
-      // the dir can be deleted before returning — same hygiene as
-      // q_snapshot_sink
-      val csvDir = java.nio.file.Files.createTempDirectory("graft-csv").toString
-      src.write.mode("overwrite")
-        .option("header", "true").option("delimiter", "|").csv(csvDir)
-      val out = Engine.checkpoint(s.read
-        .option("header", "true").option("delimiter", "|")
-        .schema(src.schema)
-        .csv(csvDir)
-        .select(col("c_mktsegment"), col("c_acctbal"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"),
-          dec(sum(dec(col("c_acctbal")))).cast("double").as("acctbal_sum")))
-      out.rdd.count()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(csvDir))
-      out
-    }),
-    // GroupBy aggregates: sum/min/max/count/countDistinct/avg
-    "q_group_agg" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          dec(sum(dec(col("l_extendedprice")))).cast("double").as("sum_price"),
-          min(col("l_discount")).as("min_disc"),
-          max(col("l_tax")).as("max_tax"),
-          count(lit(1)).as("n"),
-          countDistinct(col("l_orderkey")).as("n_orders"))),
-    // OrderBy + limit ⇒ TopK (TakeOrderedAndProject)
-    "q_topk" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .limit(10)),
-    // multi-way join + broadcast dims + grouped money agg
-    "q_join_agg" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(dec(sum(dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,4)") - dec(col("l_discount")))))
-          .cast("double").as("revenue"))
-    }),
-    // Join kinds: SEMI (exists) / ANTI (not exists)
-    "q_semi" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").select(col("o_custkey").as("c_custkey")), Seq("c_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))),
-    // ANTI against a restricted order set (customers with no order above
-    // the threshold) — non-vacuous: every customer has *some* order in
-    // this data, so the unfiltered anti-join would pass trivially on 0
-    // rows.
-    "q_anti" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").where(col("o_totalprice") > 400000)
-          .select(col("o_custkey").as("c_custkey")), Seq("c_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))),
-    // Join FULL OUTER: per-nation customer vs supplier counts over
-    // deliberately misaligned nation ranges (nulls on both sides)
-    "q_outer" -> ((s, dir) => {
-      val c = t(s, dir, "customer").where(col("c_nationkey") < 13)
-        .groupBy(col("c_nationkey").as("nk")).agg(count(lit(1)).as("nc"))
-      val p = t(s, dir, "supplier").where(col("s_nationkey") > 10)
-        .groupBy(col("s_nationkey").as("nk")).agg(count(lit(1)).as("ns"))
-      c.join(p, Seq("nk"), "full_outer").select(col("nk"), col("nc"), col("ns"))
-    }),
-    // Join TIMES (GIE JoinKind TIMES = cartesian product)
-    "q_cross" -> ((s, dir) =>
-      t(s, dir, "region").select(col("r_name"))
-        .crossJoin(t(s, dir, "nation").select(col("n_name")))),
-    // Dedup (distinct on keys)
-    "q_dedup" -> ((s, dir) =>
-      t(s, dir, "customer").select(col("c_nationkey"), col("c_mktsegment")).distinct()),
-    // Window: top order per customer (row_number over partition)
-    "q_window" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-    }),
-    // Unfold / explode
-    "q_explode" -> ((s, dir) =>
-      t(s, dir, "part")
-        .select(explode(split(col("p_name"), " ")).as("word"))
-        .groupBy(col("word")).agg(count(lit(1)).as("n"))),
-    // Union + dedup across sources
-    "q_union" -> ((s, dir) =>
-      t(s, dir, "customer").select(col("c_nationkey").as("nk"))
-        .unionAll(t(s, dir, "supplier").select(col("s_nationkey").as("nk")))
-        .groupBy(col("nk")).agg(count(lit(1)).as("n"))),
-    // Apply/correlated subquery shape: orders above their customer's avg
-    "q_apply" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val avgPerCust = o.groupBy(col("o_custkey"))
-        .agg(avg(col("o_totalprice")).as("avg_price"))
-      o.join(avgPerCust, Seq("o_custkey"))
-        .where(col("o_totalprice") > col("avg_price") * 2)
-        .select(col("o_orderkey"), col("o_custkey"))
-    }),
-    // events: gap-based session windows (session_window aggregate — the
-    // batch form of the streaming sessionization; value pre-cast to
-    // DECIMAL so per-session sums are order-exact cross-engine)
-    "q_event_sessions" -> ((s, dir) =>
-      graft.streaming.EventStream.sessionWindows(
-        t(s, dir, "events").withColumn("value", dec(col("value"))), gap = "30 minutes")
-        .select(col("user_id"),
-          unix_timestamp(col("session_start")).as("sess_start"),
-          col("n_events"),
-          dec(col("total_value")).cast("double").as("total_value"))),
-    // events: tumbling-window aggregation (batch form of the streaming op)
-    "q_event_window" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(
-          (unix_timestamp(col("ts")) - pmod(unix_timestamp(col("ts")), lit(3600))).as("win_start"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          dec(sum(dec(col("value")))).cast("double").as("total"))),
-    // hopping (sliding) windows — Catalyst window() with slide < length,
-    // each event lands in length/slide = 2 overlapping windows
-    "q_event_hopping" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("w.start")).as("win_start"), col("event_type"), col("n"))),
-
-    // ---- graph plane, wave 2 (SURVEY.md §2.B table) ----
-    "tg_sssp" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.SSSP.run(g, "assistant")
-        .select(col("id"), round(col("dist"), 6).as("dist")), "dist")
-    }),
-    "tg_bfs" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.BFS.run(g, "assistant"), "level")
-    }),
-    // bfs_generic tree mode (apps/bfs/bfs_generic.h): level + min-id
-    // shortest-path parent per reachable vertex
-    "tg_bfs_tree" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.BFSGeneric.tree(g, "assistant")
-        .join(g.vertices.toDF, Seq("id"))
-        .join(g.vertices.toDF.select(col("id").as("parent"), col("oid").as("parent_oid")),
-          Seq("parent"), "left")
-        .select(col("oid"), col("level"), col("parent_oid"))
-    }),
-    // NetworkX-tolerance PageRank (pagerank_networkx.h:135-147): iterate
-    // until sum(|dr|) < tol*N — the driver-checked twin self-selects the
-    // same converged round
-    "tg_pagerank_tol" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val pr = PageRank.run(g, PageRank.Config(0.85, 100, Some(1e-6), tolTimesN = true))
-      withOid(g, pr.select(col("id"), round(col("rank"), 6).as("pr")), "pr")
-    }),
-    // personalized PageRank (nx pagerank personalization=, random walk
-    // with restart): teleport + dangling mass pinned to the mega-hub
-    // tool vertex; rank decays outward from the seed
-    "tg_ppr" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val seed = g.vertices.toDF.where(col("oid") === "tool:t0")
-        .select(col("id")).head().getLong(0)
-      val pr = PageRank.personalized(g, seed, rounds = 65)
-      withOid(g, pr.select(col("id"), round(col("rank"), 6).as("ppr")), "ppr")
-    }),
-    // frontier-sparse PPR: same recurrence and seed as tg_ppr but the
-    // state holds only touched vertices (messages track the frontier,
-    // not |V|) — green against the SAME full-rank twin proves
-    // sparse ≡ dense at 6 dp
-    "tg_ppr_sparse" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val seed = g.vertices.toDF.where(col("oid") === "tool:t0")
-        .select(col("id")).head().getLong(0)
-      val pr = PageRank.personalizedSparse(g, seed, rounds = 65)
-      withOid(g, pr.select(col("id"), round(col("rank"), 6).as("ppr")), "ppr")
-    }),
-    "tg_hits" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.HITS.run(g, maxIter = 5, tol = 0.0)
-        .select(col("id"), round(col("auth"), 6).as("auth"), round(col("hub"), 6).as("hub")),
-        "auth", "hub")
-    }),
-    "tg_degcent" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.Centrality.degree(g, "both")
-        .select(col("id"), round(col("centrality"), 6).as("centrality")), "centrality")
-    }),
-    // in_/out_degree_centrality (nx builtin.py wrappers over the same
-    // DegreeCentrality app with DegreeType IN/OUT)
-    "tg_degcent_in" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.Centrality.degree(g, "in")
-        .select(col("id"), round(col("centrality"), 6).as("centrality")), "centrality")
-    }),
-    "tg_degcent_out" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.Centrality.degree(g, "out")
-        .select(col("id"), round(col("centrality"), 6).as("centrality")), "centrality")
-    }),
-    // numeric assortativity (gs::AttributeAssortativity numeric=true):
-    // Pearson over endpoint numeric values; length(oid) as the attribute
-    "tg_numeric_assort" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.Paths3.numericAssortativityDf(g,
-        g.vertices.toDF.select(col("id"), length(col("oid")).cast("double").as("x")))
-    }),
-    "tg_lcc" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.Clustering.lcc(g)
-        .select(col("id"), round(col("lcc"), 6).as("lcc")), "lcc")
-    }),
-    // eigenvector / Katz centrality, fixed-round mode (tol=0) so the
-    // unrolled SQL twins match round-for-round
-    "tg_eigen" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.Centrality.eigenvector(g, maxIter = 15, tol = 0.0)
-        .select(col("id"), round(col("centrality"), 6).as("centrality")), "centrality")
-    }),
-    "tg_katz" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.Centrality.katz(g, alpha = 0.005, beta = 1.0, maxIter = 10, tol = 0.0)
-        .select(col("id"), round(col("centrality"), 6).as("centrality")), "centrality")
-    }),
-    // node boundary of the tool vertex set
-    "tg_boundary" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val tools = g.vertices.toDF.where(col("oid").like("tool:%")).select(col("id"))
-      graft.algos.Assortativity.nodeBoundary(g, tools)
-        .join(g.vertices.toDF, Seq("id"))
-        .select(col("oid"))
-    }),
-    // graph-level clustering scalars (gs::AvgClustering / gs::Transitivity)
-    "tg_transitivity" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val sess = s; import sess.implicits._
-      Seq(graft.algos.Clustering.transitivity(g)).toDF("transitivity")
-        .select(round(col("transitivity"), 6).as("transitivity"))
-    }),
-    "tg_avgclustering" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val sess = s; import sess.implicits._
-      Seq(graft.algos.Clustering.avgClustering(g)).toDF("avg_clustering")
-        .select(round(col("avg_clustering"), 6).as("avg_clustering"))
-    }),
-    // all-pairs shortest path lengths for the hub source set (batched
-    // multi-source SSSP)
-    "tg_apsp" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.Paths3.apspLengths(g, Seq("assistant", "tool:t0", "system"))
-        .select(col("src_oid"), col("oid"), round(col("dist"), 6).as("dist"))
-    }),
-    // attribute assortativity over the participant-kind category
-    "tg_attr_assort" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val sess = s; import sess.implicits._
-      val attr = g.vertices.toDF.select(col("id"),
-        graft.graph.PropertyGraph.labelOf(col("oid")).as("cat"))
-      Seq(graft.algos.Paths3.attributeAssortativity(g, attr)).toDF("attr_assortativity")
-        .select(round(col("attr_assortativity"), 6).as("attr_assortativity"))
-    }),
-    // edge boundary of the tool vertex set
-    "tg_edge_boundary" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val tools = g.vertices.toDF.where(col("oid").like("tool:%")).select(col("id"))
-      graft.algos.Assortativity.edgeBoundary(g, tools)
-        .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("src_oid")), "src")
-        .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("dst_oid")), "dst")
-        .select(col("src_oid"), col("dst_oid"))
-    }),
-    "tg_avgdegconn" -> ((s, dir) =>
-      graft.algos.Assortativity.averageDegreeConnectivity(graphFor(s, dir))
-        .select(col("degree"), round(col("avg_nbr_degree"), 6).as("avg_nbr_degree"))),
-    "tg_assortativity" -> ((s, dir) =>
-      graft.algos.Assortativity.degreeAssortativityDf(graphFor(s, dir))),
-    // GIE Pattern (algebra.proto:350): user → assistant replica → tool
-    "tg_pattern" -> ((s, dir) => {
-      val oe = GraphBuilder.oidEdges(Synth.transcripts(s, Synth.sfOfDir(dir)).toDF)
-      oe.as("e1").join(oe.as("e2"), col("e1.dst_oid") === col("e2.src_oid"))
-        .where(col("e1.src_oid").like("u%") && col("e1.dst_oid").like("assistant%") &&
-          col("e2.dst_oid").like("tool:%"))
-        .groupBy(col("e2.dst_oid").as("tool_oid"))
-        .agg(count(lit(1)).as("n_paths"))
-    }),
-    // GIE PathExpand (algebra.proto:287): 1..2 hops from tool:t0
-    "tg_pathexpand" -> ((s, dir) => {
-      val oe = GraphBuilder.oidEdges(Synth.transcripts(s, Synth.sfOfDir(dir)).toDF)
-      val h1 = oe.where(col("src_oid") === "tool:t0").select(col("dst_oid").as("oid")).distinct()
-      val h2 = oe.join(h1.select(col("oid").as("src_oid")), Seq("src_oid"), "left_semi")
-        .select(col("dst_oid").as("oid")).distinct()
-      h1.select(col("oid"), lit(1).as("hops"))
-        .unionAll(h2.select(col("oid"), lit(2).as("hops")))
-        .where(col("oid") =!= "tool:t0")
-        .groupBy(col("oid")).agg(min(col("hops")).cast("long").as("hops"))
-    }),
-
-    // ---- multi-label property-graph plane (ArrowFragment analog) ----
-    // WCC over PROJECT(non-tool vertex labels, reply edges) — the
-    // per-label project + algorithm path of the reference
-    "tg_ml_wcc_reply" -> ((s, dir) => {
-      val pg = graft.graph.PropertyGraph.fromTranscripts(
-        Synth.transcripts(s, Synth.sfOfDir(dir)).toDF)
-      val g2 = pg.project(Seq("user", "assistant", "agent", "system"), Seq("reply"))
-      graft.algos.WCC.canonical(g2, graft.algos.WCC.run(g2))
-    }),
-    // invoke-label projection: per-assistant out-degree + invoked weight
-    "tg_ml_invoke_deg" -> ((s, dir) => {
-      val pg = graft.graph.PropertyGraph.fromTranscripts(
-        Synth.transcripts(s, Synth.sfOfDir(dir)).toDF)
-      val g3 = pg.project(Seq("assistant", "tool"), Seq("invoke"))
-      g3.edges.toDF.groupBy(col("src"))
-        .agg(count(lit(1)).as("out_deg"), sum(col("weight")).as("w_out"))
-        .join(g3.vertices.toDF.select(col("id").as("src"), col("oid")), "src")
-        .select(col("oid"), col("out_deg"), col("w_out"))
-    }),
-
-    // ---- composable GIE traversal DSL (graft.gie.Traversal, §2.C) ----
-    // 2-hop EdgeExpand chain with mid-hop Select; path-multiplicity
-    // groupCount (traverser multiplicity preserved, as in Gremlin)
-    "tg_gie_2hop" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.G.V(g, col("oid").like("u%"))
-        .out().has(col("oid").like("agent:%")).out()
-        .auxilia().groupCount("oid")
-    }),
-    // PathExpand 1..3 (Dedup-fused min-hop) from the system vertex
-    "tg_gie_pathexpand" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.G.V(g, col("oid") === "system").pathExpand(1, 3)
-        .auxilia().df.select(col("oid"), col("__hops").as("hops"))
-    }),
-    // ShortestPathExpand + Auxilia + Select: hop distance from tool:t0
-    // to every tool vertex
-    "tg_gie_shortest" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.G.V(g, col("oid") === "tool:t0").shortestPathExpand(15)
-        .auxilia().where(col("oid").like("tool:%"))
-        .df.select(col("oid"), col("__hops").as("hops"))
-    }),
-    // Apply-SEMI sub-traversal: users with at least one agent out-neighbor
-    "tg_gie_exists" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.G.V(g, col("oid").like("u%"))
-        .whereExists(_.out().has(col("oid").like("agent:%")))
-        .auxilia().values("oid")
-    }),
-    // groupCount + OrderBy + limit => TopK (TakeOrderedAndProject)
-    "tg_gie_topk" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.G.V(g).out().auxilia().groupCount("oid")
-        .orderBy(col("n").desc, col("oid").asc).limit(10)
-    }),
-    // PathExpand result_opt=ALL_V (path_start.rs/path_end.rs): SIMPLE
-    // walks 1..2 hops from system, materialized as oid path strings at
-    // the sink (ids-only arrays ride the expansion shuffles), then a
-    // per-end-vertex walk summary
-    "tg_gie_paths" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.G.V(g, col("oid") === "system")
-        .pathExpandPaths(1, 2, simple = true)
-        .pathOids().auxilia()
-        .df.groupBy(col("oid"))
-        .agg(count(lit(1)).as("n_walks"), min(col("path_str")).as("min_path"))
-    }),
-    // SegmentApply (algebra.proto:341): per-agent top-2 out-edges by
-    // weight — edge-positioned expand + windowed segment ranking
-    "tg_gie_segment" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.G.V(g, col("oid").like("agent:%")).outE()
-        .segmentTopK("__src", 2, col("__w").desc, col("__v").asc)
-        .auxilia().df
-        .join(g.vertices.toDF.select(col("id").as("__src"), col("oid").as("src_oid")), "__src")
-        .select(col("src_oid"), col("oid").as("dst_oid"), col("__w").as("w"))
-    }),
-    // Gremlin *string* front-end (the reference's interactive entry
-    // point — antlr Gremlin → IR; here graft.gie.Gremlin's recursive
-    // descent → the same Traversal algebra, so these share the GIE
-    // DSL queries' SQL twins): text in, frame out
-    "tg_gremlin_2hop" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u'))" +
-          ".out().has('oid', TextP.startingWith('agent:')).out()" +
-          ".groupCount().by('oid')")),
-    "tg_gremlin_pathexpand" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'system').out('1..3').hops()")),
-    "tg_gremlin_exists" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u'))" +
-          ".where(__.out().has('oid', TextP.startingWith('agent:')))" +
-          ".values('oid')")),
-    "tg_gremlin_topk" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().out().groupCount().by('oid')" +
-          ".order().by('n', desc).by('oid', asc).limit(10)")),
-    // simplePath().path() lowers to pathExpandPaths + sink-side oid
-    // decode: the first 50 materialized walk strings in path order
-    "tg_gremlin_paths" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'system').out('1..2').simplePath().path()" +
-          ".values('path_str').order().by('path_str', asc).limit(50)")),
-    // both('1..2'): PathExpand with base EdgeExpand direction BOTH —
-    // undirected min-hop ring around a tool vertex
-    "tg_gremlin_both" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'tool:t0').both('1..2').hops()")),
-    // edge-positioned BOTH expand + EdgeOtherVertex (TinkerPop
-    // bothE().otherV()): far endpoint per incident edge per direction
-    "tg_gremlin_bothe" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u')).bothE().otherV().groupCount().by('oid')")),
-    // local-scope collection ops (CountLocal/RangeLocal family):
-    // fold to a sorted list, slice locally, explode back
-    "tg_gremlin_local" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'assistant').out().values('oid').fold().limit(local, 3).unfold()")),
-    // Union (algebra.proto:74): three branch sub-traversals merged with
-    // bag semantics, then groupCount + ordered top-k
-    "tg_gremlin_union" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'system')" +
-          ".union(__.out(), __.in(), __.out().out())" +
-          ".groupCount().by('oid')" +
-          ".order().by('n', desc).by('oid', asc).limit(20)")),
-    // condition-bounded repeat (pegasus iterate_emit_until,
-    // iteration/mod.rs:31-44; compiler RepeatTreeNode): each round
-    // expands + dedups, emits the frontier, and retires traversers that
-    // reached tool:t0 — until() prunes the frontier before times() ends
-    // the loop
-    "tg_gremlin_repeat" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'system').repeat(__.out().dedup())" +
-          ".emit().until(__.has('oid', 'tool:t0')).times(4)" +
-          ".groupCount().by('oid')")),
-    // value aggregation (aggregate.rs accumulators / GroupTreeNode):
-    // group().by(end-vertex oid).by(values('weight').sum()) over the
-    // out-edges of user vertices
-    "tg_gremlin_group" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u')).outE()" +
-          ".group().by('oid').by(__.values('weight').sum())")),
-    // numeric predicate (expr.proto GE/LT) on the edge weight property,
-    // then GetV(END) + groupCount
-    "tg_gremlin_numeric" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().outE().has('weight', P.between(2, 5)).inV().groupCount().by('oid')")),
-    // boolean combinator tree (AndTreeNode/OrTreeNode): or(and(...), has)
-    "tg_gremlin_bool" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().or(__.and(__.out().has('oid', TextP.startingWith('tool:'))," +
-          " __.in().has('oid', TextP.startingWith('u'))), __.has('oid', 'system'))" +
-          ".values('oid')")),
-    // declarative match() (patmat.rs NaiveStrategy): two as-tagged
-    // sentences joined left-deep — same result as the hand-lowered
-    // tg_pattern self-join
-    "tg_gremlin_match" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().match(__.as('a').has('oid', TextP.startingWith('u')).out().as('b')," +
-          " __.as('b').has('oid', TextP.startingWith('assistant')).out().as('c'))" +
-          ".select('c').has('oid', TextP.startingWith('tool:'))" +
-          ".groupCount().by('oid')")),
-    // multi-tag Sink projection + tag-comparison predicate: the match()
-    // result consumed as (a, c) oid pairs with structural distinctness
-    "tg_gremlin_select" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().match(__.as('a').has('oid', TextP.startingWith('u')).out().as('b')," +
-          " __.as('b').has('oid', TextP.startingWith('assistant')).out().as('c'))" +
-          ".where('a', P.neq('c')).select('a', 'c')" +
-          ".order().by('a', asc).by('c', asc).limit(50)")),
-    // deterministic sample(n): the 7 user vertices smallest under the
-    // portable pick hash (MetapathSample analog, resume-safe)
-    "tg_gremlin_sample" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u')).sample(7).values('oid')")),
-    // subgraph() sink: the edge-induced subgraph of agent out-edges as
-    // a new graph, emitted as oid-decoded (src_oid, dst_oid, weight)
-    "tg_gremlin_subgraph" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('agent:'))" +
-          ".outE().subgraph('sg').cap('sg')")),
-    // ToDistinctCount accumulator: per tool, how many DISTINCT
-    // assistants invoke it (tag values deduped inside the group)
-    "tg_gremlin_distinct" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('assistant')).as('a')" +
-          ".out().has('oid', TextP.startingWith('tool:'))" +
-          ".group().by('oid').by(__.values('a').dedup().count())")),
-    // full TextP.* / P.without predicate family in one traversal:
-    // agents (containing) → neighbors that are not tools
-    // (notStartingWith), not system/assistant (without), oid ending '1'
-    "tg_gremlin_textp" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.containing('gent')).out()" +
-          ".has('oid', TextP.notStartingWith('tool:'))" +
-          ".has('oid', P.without('system', 'assistant'))" +
-          ".has('oid', TextP.endingWith('1'))" +
-          ".groupCount().by('oid')")),
-    // coalesce (first non-empty branch per traverser): tools with user
-    // out-neighbors take those; the rest fall through to in-neighbors
-    "tg_gremlin_coalesce" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('tool:'))" +
-          ".coalesce(__.out().has('oid', TextP.startingWith('u')), __.in())" +
-          ".groupCount().by('oid')" +
-          ".order().by('n', desc).by('oid', asc).limit(20)")),
-    // graph-algorithm Gremlin steps (the reference's TinkerPop bridges
-    // tinkerpop/steps/PageRankStep/ConnectedComponentsStep/
-    // LabelPropagationStep.java): the traversal string invokes the
-    // engine's analytical app over the whole graph and annotates every
-    // traverser — results must equal the direct-app queries exactly, so
-    // these REUSE tg_pagerank/tg_wcc/tg_cdlp's oracle SQL verbatim
-    "tg_gremlin_pagerank_step" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.Gremlin.run(g, s"g.V().pageRank().times($PrRounds)")
-        .join(g.vertices.toDF.select(col("id").as("__v"), col("oid")), "__v")
-        .select(col("oid"), round(col("pageRank"), 6).as("pr"))
-    }),
-    "tg_gremlin_cc_step" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      WCC.canonical(g, graft.gie.Gremlin.run(g, "g.V().connectedComponent()")
-        .select(col("__v").as("id"), col("component").as("comp")))
-    }),
-    "tg_gremlin_lpa_step" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.Gremlin.run(g, s"g.V().labelPropagation().times($CdlpRounds)")
-        .join(g.vertices.toDF.select(col("id").as("__v"), col("oid")), "__v")
-        .join(g.vertices.toDF.select(col("id").as("communityLabel"),
-          col("oid").as("label_oid")), Seq("communityLabel"))
-        .select("oid", "label_oid")
-    }),
-    // ShortestPathStep through the text front-end — must equal the DSL
-    // queries tg_gie_shortest / tg_gie_weighted_shortest exactly, so
-    // these REUSE their oracle SQL verbatim
-    "tg_gremlin_shortest_step" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.Gremlin.run(g,
-        "g.V().has('oid','tool:t0').shortestPath(15)" +
-          ".has('oid', TextP.startingWith('tool:')).hops()")
-    }),
-    "tg_gremlin_weighted_shortest_step" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.Gremlin.run(g,
-        "g.V().has('oid','assistant').shortestPath('weight')" +
-          ".has('oid', TextP.startingWith('tool:')).dist()")
-    }),
-    // EstimateCountStep over the out-traverser stream — graft.ml.Hll's
-    // deterministic HyperLogLog (portable-hash registers), value-checked
-    // bit-for-bit by the DuckDB twin. ~16.6K distinct targets at sf0.01
-    // sit far above the 2.5·m linear-counting cutoff, so this exercises
-    // the raw harmonic-estimate branch
-    "tg_gremlin_hll" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir), "g.V().out().estimateCount()")),
-    "tg_gremlin_hits_step" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.Gremlin.run(g, "g.V().hits().times(5)")
-        .join(g.vertices.toDF.select(col("id").as("__v"), col("oid")), "__v")
-        .select(col("oid"), round(col("auth"), 6).as("auth"),
-          round(col("hub"), 6).as("hub"))
-    }),
-    // label-aware Gremlin over the multi-label property graph (the
-    // reference's QueryParams.tables label pushdown, algebra.proto:196/
-    // :254): hasLabel scan + label-filtered expand + vertex-label
-    // groupCount — labels prune the vertex/edge scans before any join
-    "tg_gremlin_haslabel" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().hasLabel('user').out('reply').groupCount().by('label')")),
-    // LDBC-shaped composites (the reference's own Gremlin workload,
-    // research/query_service/benchmark/queries/ir_ldbc/*.gremlin):
-    // q9's labeled range expand; q12's groupCount ordered by
-    // select(values)/select(keys); q3's correlated count predicate +
-    // predicate-connective edge filter
-    "tg_gremlin_ldbc_reach" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().hasLabel('user').both('1..2','reply').hops()")),
-    "tg_gremlin_ldbc_top" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().hasLabel('assistant').out('invoke').groupCount().by('oid')" +
-          ".order().by(select(values), desc).by(select(keys), asc).limit(10)")),
-    // per-traverser multi-projection (TinkerPop ProjectStep): each
-    // assistant projected to (oid, distinct invoked tool count)
-    "tg_gremlin_project" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().hasLabel('assistant').project('oid','n_tools')" +
-          ".by(values('oid')).by(__.out('invoke').dedup().count())")),
-    // if-then-else branch routing: assistants expand via invoke edges,
-    // everyone else via reply edges (TinkerPop choose(pred, yes, no))
-    "tg_gremlin_choose" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().choose(__.hasLabel('assistant'), __.out('invoke'), __.out('reply'))" +
-          ".groupCount().by('oid')")),
-    // value-routed branch (BranchTreeNode.java:49 / CaseWhenTreeNode):
-    // the router is the vertex LABEL column — pure map-side filters,
-    // zero joins before the option bodies run
-    "tg_gremlin_branch" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().branch(__.label())" +
-          ".option('user', __.out('reply'))" +
-          ".option('tool', __.in('invoke'))" +
-          ".option(none, __.identity())" +
-          ".groupCount().by('label')")),
-    "tg_gremlin_ldbc_filter" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().where(__.out('invoke').dedup().count().is(P.gte(12)))" +
-          ".outE('invoke').has('weight', P.gte(3).and(P.lt(10)))" +
-          ".inV().groupCount().by('oid')")),
-    // LDBC interactive-complex-1, shape-identical to the reference's
-    // published benchmark query (interactive_engine/benchmark/queries/
-    // interactive-complex-1.gremlin:1): 3-arg has() seed lookup,
-    // union(identity(), …)-nested 1..3-hop expansion, dedup().by('id')
-    // keeping the minimum-hop walk, property filter, step-level
-    // path().count(local) distance, tag-then-property ordering
-    // (select('b') then oid then id), paginated multi-tag select
-    "tg_gremlin_ldbc_cr1" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().has('user','oid','u1').out('reply')" +
-          ".union(identity(), out('reply').union(identity(), out('reply')))" +
-          ".dedup().by('id').has('oid', TextP.startingWith('u')).as('a')" +
-          ".path().count(local).as('b').select('a')" +
-          ".order().by(select('b'), incr).by('oid').by('id').limit(20)" +
-          ".select('a', 'b')")),
-    // LDBC interactive-complex-2, shape-identical to the reference's
-    // published benchmark query (interactive-complex-2.gremlin:1):
-    // seed lookup, tagged friend expand, reverse expand, ordered
-    // (lte) property filter, tag-then-property two-key ordering
-    // (message desc, friend asc — select('p') orders by the tag's
-    // dense id, which is by construction the oid rank), paginated
-    // multi-tag select
-    "tg_gremlin_ldbc_cr2" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().has('user','oid','u1').out('reply').as('p')" +
-          ".in('reply').has('oid', P.lte('u4')).as('m')" +
-          ".order().by('oid', desc).by(select('p'), asc).limit(20)" +
-          ".select('p', 'm')")),
-    // LDBC interactive-complex-4's defining steps (interactive-complex-4
-    // .gremlin:1): snapshot the friend set into a side effect
-    // (store('friends')), expand to their tools, and keep only tools
-    // with NO invoker outside the friend circle — the published
-    // anti-predicate spelling filter(<sub>.where(without('friends'))
-    // .count().is(0)), which requires zero-count origins to PASS the
-    // correlated count (whereCountIs left-joins the distinct origin set
-    // and coalesces absent counts to 0)
-    "tg_gremlin_ldbc_cr4" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().has('user','oid','u1').out('reply').store('friends')" +
-          ".out('invoke')" +
-          ".filter(__.inE('invoke').has('weight', P.gte(6)).outV()" +
-          ".where(P.without('friends')).count().is(0))" +
-          ".groupCount().by('oid')")),
-    // LDBC interactive-complex-5, shape-identical to the reference's
-    // published benchmark query (interactive-complex-5.gremlin:1):
-    // seed lookup, union(identity(), out()) expansion, dedup, tagged
-    // friend, weighted edge expand, then the defining step —
-    // group().by().by(<sub>.where(eq('p')).count()): a group keyed by
-    // the CURRENT element whose value sub is CORRELATED to each
-    // traverser's tag (the member whose container posts are counted),
-    // ordered (count desc, key asc) and limited
-    "tg_gremlin_ldbc_cr5" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().has('user','oid','u1').out('reply')" +
-          ".union(identity(), out('reply')).dedup().as('p')" +
-          ".outE('invoke').has('weight', P.gte(2)).inV()" +
-          ".group().by().by(__.in('invoke').where(eq('p')).count())" +
-          ".order().by(select(values), desc).by(select(keys), asc).limit(20)")),
-    // LDBC interactive-complex-6, shape-identical to the reference's
-    // published benchmark query (interactive-complex-6.gremlin:1):
-    // seed lookup, union(identity(), out())-nested expansion, dedup,
-    // has(P.neq(seed)), anonymous-traversal filter() (the reference
-    // spells the EXISTS applies as filter(), not where()), expand,
-    // groupCount ordered by (count desc, key asc), limited
-    "tg_gremlin_ldbc_cr6" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().has('user','oid','u1').out('reply')" +
-          ".union(identity(), out('reply')).dedup()" +
-          ".has('oid', P.neq('u1'))" +
-          ".filter(__.outE('invoke').has('weight', P.gte(2)))" +
-          ".out('invoke').groupCount().by('oid')" +
-          ".order().by(select(values), desc).by(select(keys), asc).limit(10)")),
-    // LDBC interactive-complex-12 shape (interactive-complex-12
-    // .gremlin:1): tagged friend expand, weighted edge filter, a
-    // correlated distinct-count filter() on the far vertex, select()
-    // back to the tag, groupCount over the TAGGED vertex
-    "tg_gremlin_ldbc_cr12" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().has('user','oid','u1').out('reply').as('friend')" +
-          ".outE('invoke').has('weight', P.gte(2)).inV()" +
-          ".filter(__.in('invoke').dedup().count().is(P.gte(3)))" +
-          ".select('friend').groupCount().by('oid')" +
-          ".order().by(select(values), desc).by(select(keys), asc).limit(20)")),
-    // LDBC interactive-complex-11, shape-identical to the reference's
-    // published benchmark query (interactive-complex-11.gremlin:1):
-    // seed, union(identity(), out()) + dedup + neq(seed), tagged
-    // friends, weighted edge expand with SCALAR VALUE TAGS —
-    // values('weight').as('works') / values('oid').as('orgname') stash
-    // property values that ride later expansions — select back to the
-    // friend, three-key mixed tag/property ordering (works asc, id asc,
-    // orgname desc), paginated three-tag select
-    "tg_gremlin_ldbc_cr11" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().has('user','oid','u1').out('reply')" +
-          ".union(identity(), out('reply')).dedup().has('oid', P.neq('u1'))" +
-          ".as('friends').outE('invoke').has('weight', P.lt(6))" +
-          ".values('weight').as('works').inV().values('oid').as('orgname')" +
-          ".select('friends')" +
-          ".order().by(select('works'), incr).by('id', incr).by(select('orgname'), desc)" +
-          ".limit(10).select('friends', 'orgname', 'works')")),
-    // g.E() edge-scan source (sourcestep/edge.rs:89; ScanOpt EDGE in
-    // algebra.proto:196): the weight predicate lands directly ON the
-    // edge scan (no vertex join before the filter), then GetV(START)
-    "tg_gremlin_esource" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.E().has('weight', P.gte(3)).outV().groupCount().by('oid')")),
-    // the reference's 1-hop/2-hop micro benchmark queries
-    // (benchmark/queries/1-hop.gremlin, 2-hop.gremlin:
-    // g.V($id).out()[.out()].count()) — with these, every file in the
-    // reference's published benchmark/queries/ dir runs end-to-end.
-    // "_micro" suffix: a tg_gremlin_2hop groupCount query predates the
-    // battery and Map literals silently last-win on duplicate keys
-    "tg_gremlin_1hop_micro" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir), "g.V('u1').out().count()")),
-    "tg_gremlin_2hop_micro" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir), "g.V('u1').out().out().count()")),
-    // order().by(shuffle) — the IR's third OrderBy direction
-    // (algebra.proto:116 ASC/DESC/SHUFFLE), lowered to the engine's
-    // deterministic portable pick order (same policy as sample(n)):
-    // resume-safe shuffle-order + page, never rand()
-    "tg_gremlin_shuffle" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u')).out()" +
-          ".order().by(shuffle).limit(40).values('oid')")),
-    // RangeGlobal pagination (RangeGlobalTreeNode.java:31; pegasus
-    // dedup.rs Range): ordered in-degree groupCount, page [5, 25)
-    "tg_gremlin_range" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().out().groupCount().by('oid')" +
-          ".order().by(select(values), desc).by(select(keys), asc).range(5, 25)")),
-    // math() per-traverser computed expression (MathTreeNode.java:36):
-    // IEEE-exact op subset (+ - * / sqrt abs) over the edge weight —
-    // bit-identical cross-engine, so no rounding needed
-    "tg_gremlin_math" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().outE().values('weight').math('sqrt(abs(_ - 3)) * 2 + 1 / (_ + 1)')")),
-    // sack() traverser-local accumulator: per 2-edge walk from the
-    // assistant hub, sack = w1 + w2 (integer-valued doubles — exact);
-    // the sack is a plain column riding the traverser, zero shuffles
-    "tg_gremlin_sack" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.withSack(0).V().has('oid', 'assistant')" +
-          ".outE().sack(sum).by('weight')" +
-          ".inV().outE().sack(sum).by('weight').sack()")),
-    // aggregate(tag) side-effect barrier + where(P.without(tag))
-    // membership anti-join (MaxGraph FoldStore, aggregate.rs:29-815):
-    // 2-hop walks from the hub whose endpoint is NOT a 1-hop neighbor —
-    // the classic visited-set expansion idiom
-    "tg_gremlin_aggregate" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'system').out().aggregate('x')" +
-          ".out().where(P.without('x')).groupCount().by('oid')")),
-    // cap(tag): the collected bulk set emitted as (oid, n)
-    "tg_gremlin_cap" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u')).out().aggregate('x').cap('x')")),
-    // step-form cyclicPath() over a tracked 2-hop walk (complement of
-    // the SimplePath filter, filter.rs:36-362): walks that return to a
-    // visited vertex, counted per landing oid
-    "tg_gremlin_cyclic" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u')).out().out()" +
-          ".cyclicPath().groupCount().by('oid')")),
-    // tree() sink: the 2-hop traverser histories from the hub merged by
-    // shared prefix — one row per distinct prefix (depth, path_str)
-    "tg_gremlin_tree" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'system').out().out().tree()")),
-    // predicated emit: only traversers matching the sub are copied out
-    // mid-loop; the final round halts everyone (RepeatStep order)
-    "tg_gremlin_emit" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'system').repeat(__.out())" +
-          ".emit(has('oid', TextP.startingWith('t'))).times(2)" +
-          ".groupCount().by('oid')")),
-    // g.V(ids) point lookup (GlobalIdsScan / id IndexPredicate): the
-    // explicit oid set lands ON the vertex scan; an unknown id matches
-    // nothing
-    "tg_gremlin_vids" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V('assistant', 'tool:t0', 'nosuch:x').out().groupCount().by('oid')")),
-    // mid-traversal hasId (global-id IndexPredicate as a FILTER, vs the
-    // g.V(ids) source form) composed with the closed-schema existence
-    // family: hasNot(non-schema key) keeps everything, has('oid') keeps
-    // non-null rows — both no-ops here by schema, real by semantics
-    "tg_gremlin_hasid" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().out().hasId('assistant', 'tool:t0').hasNot('nickname')" +
-          ".has('oid').in().groupCount().by('oid')")),
-    // elementMap(): id + full property map per traverser, one column
-    // per schema property — the TinkerPop ElementMapStep sink
-    "tg_gremlin_elementmap" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V('assistant', 'system', 'tool:t0', 'tool:t1').elementMap()")),
-    // properties(keys…): (key, value) rows per traverser, bag semantics
-    // (PropertiesStep) — here over a 1-hop expansion
-    "tg_gremlin_properties" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', 'system').out().properties('oid')")),
-    // local numeric fold: group().by(dst oid).by(values('weight')
-    // .fold()) then mean(local) — a pure array expression over the
-    // folded list, no extra shuffle
-    "tg_gremlin_localagg" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u')).outE()" +
-          ".group().by('oid').by(__.values('weight').fold()).mean(local)")),
-    // store(tag): the lazy sibling of aggregate — collected set read at
-    // the cap sink
-    "tg_gremlin_store" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('a')).out().store('x').out().cap('x')")),
-    // deterministic coin(p): portable-hash per-10000 gate on the vertex
-    // oid (resume-safe — never rand()), composed with an expansion
-    "tg_gremlin_coin" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().coin(0.37).out().groupCount().by('oid')")),
-    // profile(): per-step traverser counts (diagnostics sink — counts
-    // only, never wall time, so the result is oracle-checkable)
-    "tg_gremlin_profile" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('u')).out().out().profile()")),
-    // edge-label plane: outE() carries the edge label (__elabel);
-    // group().by('label').by(values('weight').sum()) = total per-label
-    // occurrence weight (reply vs invoke)
-    "tg_gremlin_edgelabel" -> ((s, dir) =>
-      graft.gie.Gremlin.run(
-        graft.graph.PropertyGraph.fromTranscripts(
-          Synth.transcripts(s, Synth.sfOfDir(dir)).toDF),
-        "g.V().outE().group().by('label').by(__.values('weight').sum())")),
-    // weighted ShortestPathExpand (algebra.proto:302 over the weight
-    // property vs the hop-count tg_gie_shortest): min total edge weight
-    // from the assistant hub to every tool vertex
-    "tg_gie_weighted_shortest" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.gie.G.V(g, col("oid") === "assistant").weightedShortestPathExpand()
-        .auxilia().where(col("oid").like("tool:%"))
-        .df.select(col("oid"), round(col("__dist"), 6).as("dist"))
-    }),
-
-    // ---- training-data pipeline plane: dedup / text / similarity ----
-    "d_dedup_norm" -> ((s, dir) =>
-      graft.text.Dedup.normalized(t(s, dir, "documents"), "doc_id", "text")),
-    "d_textstats" -> ((s, dir) =>
-      graft.text.TextOps.textStats(t(s, dir, "documents"), "text", "doc_id")),
-    "d_quality" -> ((s, dir) =>
-      graft.text.TextOps.qualityScore(t(s, dir, "documents"), "text", "doc_id")),
-    "d_langid" -> ((s, dir) =>
-      graft.text.TextOps.langId(t(s, dir, "documents"), "text", "doc_id")),
-    "d_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.text.TextOps.docFingerprint(col("text")).as("fp"))),
-    // end-to-end training-data prep: quality gate (>= 0.7) AND exact
-    // normalized-dedup survivor (canonical doc), then per-language
-    // corpus stats — the composed filter->dedup->langid->stats flow a
-    // real corpus build runs, in one declarative plan
-    "d_prep_pipeline" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val q = graft.text.TextOps.qualityScore(docs, "text", "doc_id")
-      val l = graft.text.TextOps.langId(docs, "text", "doc_id")
-      val canon = graft.text.Dedup.normalized(docs, "doc_id", "text")
-      val toks = docs.select(col("doc_id"),
-        size(graft.text.TextOps.tokens(col("text"))).as("n_tokens"))
-      q.join(l, "doc_id").join(canon, "doc_id").join(toks, "doc_id")
-        .where(col("quality") >= 0.7 && col("canonical_id") === col("doc_id"))
-        .groupBy(col("lang_guess").as("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("total_tokens"),
-          round(sum(col("quality")), 2).as("quality_sum"))
-    }),
-    // concat-and-chunk sequence packing (GPT-style: hash-bucketed token
-    // streams chunked at a fixed budget — the per-doc (seq, offset)
-    // assignment plus the per-chunk fill stats a training build monitors)
-    "d_pack_chunks" -> ((s, dir) =>
-      graft.text.Packing.packChunks(t(s, dir, "documents"), maxTokens = 512, buckets = 8)),
-    "d_pack_stats" -> ((s, dir) =>
-      graft.text.Packing.chunkStats(
-        graft.text.Packing.packChunks(t(s, dir, "documents"), maxTokens = 512, buckets = 8))),
-    // RAG token-window chunking (stride-overlapped retrieval chunks) and
-    // per-doc top-3 tf-idf terms (corpus keyword signal)
-    "d_chunk_windows" -> ((s, dir) =>
-      graft.text.Packing.tokenChunks(t(s, dir, "documents"), "doc_id", "text", 32, 24)),
-    "d_tfidf_top" -> ((s, dir) =>
-      graft.text.TextOps.tfidfTop(t(s, dir, "documents"), "doc_id", "text", 3)),
-    // benchmark decontamination: train-split docs sharing >= 2 distinct
-    // word 3-grams with any test-split doc (the train-vs-eval overlap
-    // scrub run before pretraining), over the same deterministic split
-    "d_decontaminate" -> ((s, dir) =>
-      graft.text.Dedup.decontaminate(
-        graft.text.TextOps.hashSplit(t(s, dir, "documents"), "doc_id"),
-        "doc_id", "text", "split")),
-    // deterministic train/valid/test split (portable-hash buckets, no
-    // rand() — resume-safe and cluster-size-stable) + per-(split, lang)
-    // stratified corpus stats: the split step of a training-data build
-    "d_split_stratified" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val split = graft.text.TextOps.hashSplit(
-        docs.select(col("doc_id"), col("text")), "doc_id")
-      val lang = graft.text.TextOps.langId(docs, "text", "doc_id")
-      split.join(lang, "doc_id")
-        .groupBy(col("split"), col("lang_guess"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(graft.text.TextOps.tokens(col("text")))).as("tot_tokens"))
-    }),
-    // MinHash near-dup groups — full-value oracle via the portable hash
-    // family (LshSql twin restates the whole pipeline in DuckDB SQL)
-    "d_minhash_groups" -> ((s, dir) =>
-      graft.text.Dedup.minhashGroups(t(s, dir, "documents"), "doc_id", "text",
-        numHashes = 16, bands = 8, shingleSize = 3, threshold = 0.5)),
-    "d_simhash_pairs" -> ((s, dir) =>
-      graft.text.Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text", maxDist = 3)),
-    // PII scrub: the corpus is PII-free, so a deterministic PII suffix is
-    // injected from doc_id (identically in the SQL twin) — the redaction
-    // regexes then have real matches to count and mask cross-engine
-    "d_pii_redact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val injected = docs.select(col("doc_id"),
-        concat(col("text"),
-          lit(" contact user"), col("doc_id").cast("string"),
-          lit("@example.com call 555-"),
-          lpad(pmod(col("doc_id"), lit(10000L)).cast("string"), 4, "0"),
-          lit(" from 10.0."), pmod(col("doc_id"), lit(200L)).cast("string"),
-          lit(".7")).as("text"))
-      graft.text.TextOps.piiRedact(injected, "doc_id", "text")
-    }),
-    // Gopher-style repetition signals (dup/top 2-gram fractions)
-    "d_repetition" -> ((s, dir) =>
-      graft.text.TextOps.repetitionSignals(t(s, dir, "documents"), "doc_id", "text")),
-    // Gopher §A1.1 rule battery: word-count bounds, mean word length,
-    // symbol ratio, alpha-word fraction, stopword floor + keep flag
-    "d_gopher_rules" -> ((s, dir) =>
-      graft.text.TextOps.gopherRules(t(s, dir, "documents"), "doc_id", "text")),
-    // corpus-unigram LM log-prob quality proxy (KenLM stand-in)
-    "d_unigram_lp" -> ((s, dir) =>
-      graft.text.TextOps.unigramLogProb(t(s, dir, "documents"), "doc_id", "text")),
-    // deterministic domain-mixture resampling audit (hash-gated, no rand)
-    "d_mixture_sample" -> ((s, dir) =>
-      graft.text.TextOps.mixtureSample(t(s, dir, "documents"), "doc_id", "source",
-        MixtureRates, MixtureDefaultRate)),
-    // ANN quality audit: recall@5 of the sign-LSH index vs the exact
-    // brute-force top-k, per query — the measurement a pipeline runs
-    // before trusting an approximate index
-    "s_ann_recall" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = (0L until 10L).toSeq
-      val bf = graft.ml.Similarity.bruteForceTopK(e, "vec_id", "embedding", q, 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val ann = graft.ml.Similarity.lshTopK(e, "vec_id", "embedding", q, 5)
-        .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
-      bf.join(ann, col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-        .groupBy(col("query_id"))
-        .agg(round(count(col("an")).cast("double") / 5.0, 4).as("recall5"))
-    }),
-    // fuzzy-dedup survivor selection: MinHash near-dup groups reduced to
-    // (group, canonical doc, size) — the keep-list step after grouping
-    "d_fuzzy_survivors" -> ((s, dir) =>
-      graft.text.Dedup.minhashGroups(t(s, dir, "documents"), "doc_id", "text",
-        numHashes = 16, bands = 8, shingleSize = 3, threshold = 0.5)
-        .groupBy(col("group_id"))
-        .agg(min(col("doc_id")).as("survivor_id"), count(lit(1)).as("group_size"))),
-    "s_cosine_topk" -> ((s, dir) =>
-      graft.ml.Similarity.bruteForceTopK(
-        t(s, dir, "embeddings"), "vec_id", "embedding", (0L until 10L).toSeq, 5)),
-    "s_lsh_topk" -> ((s, dir) =>
-      graft.ml.Similarity.lshTopK(
-        t(s, dir, "embeddings"), "vec_id", "embedding", (0L until 10L).toSeq, 5)),
-    // SQ8 compressed-domain ANN (FAISS SQ8-flat analog): exact top-k by
-    // INTEGER dot product over int8 codes — no float rounding policy
-    // crosses the engine boundary at all
-    "s_sq8_topk" -> ((s, dir) =>
-      graft.ml.Quantize.sq8TopK(
-        t(s, dir, "embeddings"), "vec_id", "embedding", (0L until 10L).toSeq, 5)),
-    // PQ-ADC ANN (FAISS PQ-flat analog): per-subspace strided
-    // codebooks, integer-scaled sub-L2² encode + sub-dot ADC scores —
-    // order-free integer sums across engines
-    "s_pq_topk" -> ((s, dir) =>
-      graft.ml.Quantize.pqTopK(
-        t(s, dir, "embeddings"), "vec_id", "embedding", (0L until 10L).toSeq, 5)),
-    // IVF coarse-quantizer ANN (the second scale path beside sign-LSH):
-    // strided centroids, one argmax assignment pass, probe-partition
-    // candidates as bare ids
-    // Lloyd k-means corpus clustering (cosine, deterministic init +
-    // rounded-mean updates — the domain-balancing cluster step)
-    "s_kmeans" -> ((s, dir) =>
-      graft.ml.KMeans.assignments(t(s, dir, "embeddings"), "vec_id", "embedding", 8, 2)),
-    // int8 scalar quantization audit (FAISS SQ8 analog): per-dim corpus
-    // bounds → 1-row broadcast → pure map stage; order-free outputs
-    "s_quantize" -> ((s, dir) =>
-      graft.ml.Quantize.scalarQuantizeAudit(t(s, dir, "embeddings"), "vec_id", "embedding")),
-    "s_ivf_topk" -> ((s, dir) =>
-      graft.ml.Similarity.ivfTopK(
-        t(s, dir, "embeddings"), "vec_id", "embedding", (0L until 10L).toSeq, 5)),
-    // bipartite weighted label diffusion (gs::LPAU2I): users seed a
-    // 2-dim label vector by oid parity; 2 u2i+i2u rounds; long-format
-    // (oid, pos, v) output
-    "tg_lpau2i" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val users = g.vertices.toDF.where(col("oid").like("u%"))
-        .select(col("id"),
-          when(substring(col("oid"), 2, 18).cast("long") % 2 === 0,
-            array(lit(1.0), lit(0.0)))
-            .otherwise(array(lit(0.0), lit(1.0))).as("labels"))
-      graft.algos.LPAU2I.run(g, users, propNum = 2, rounds = 2)
-        .select(col("id"), posexplode(col("labels")))
-        .join(g.vertices.toDF, Seq("id"))
-        .select(col("oid"), col("pos"), round(col("col"), 6).as("v"))
-    }),
-    // deterministic sampling walks (gs::SamplingPath) — portable pick
-    // hash, so the walk itself is oracle-checked
-    "tg_sampling" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.Paths3.samplingPaths(g, Seq("system", "assistant", "tool:t0"), steps = 3)
-        .select(col("start_oid"), concat_ws(">", col("path")).as("path_str"))
-    }),
-    // GNN mini-batch neighbor-fanout sampling (graphlearn k-hop sampler
-    // analog): 2 hops × fanout 2, seeded at the hub + two normal
-    // vertices — slot picks are map-side-combined min_by (hub-safe)
-    "tg_neighbor_sample" -> ((s, dir) =>
-      graft.ml.NeighborSample.sample(graphFor(s, dir),
-        Seq("system", "assistant", "u1"), Seq(2, 2))),
-    // GNN negative sampling (graphlearn negative_sampler / GSL outNeg):
-    // per seed, 4 slots of deterministic rejection draws over the dense
-    // id space — first non-neighbor candidate per slot survives
-    "tg_negative_sample" -> ((s, dir) =>
-      graft.ml.NegativeSample.sample(graphFor(s, dir),
-        Seq("system", "assistant", "u1", "tool:t0"), f = 4)),
-    // graphlearn negative strategy="in_degree": draw probability
-    // proportional to in-degree via disjoint integer intervals over
-    // [0,|E|) — bucket-partitioned prefix sum + binned range join,
-    // never a global window or an all-pairs inequality join
-    "tg_negative_indeg" -> ((s, dir) =>
-      graft.ml.NegativeSample.sampleInDegree(graphFor(s, dir),
-        Seq("system", "assistant", "u1", "tool:t0"), f = 4)),
-    // graphlearn negative strategy="node_weight": vertex weight =
-    // weighted in-strength (Σ incoming occurrence counts) — same
-    // portable interval machinery, different mass function
-    "tg_negative_nodew" -> ((s, dir) =>
-      graft.ml.NegativeSample.sampleNodeWeight(graphFor(s, dir),
-        Seq("system", "assistant", "u1", "tool:t0"), f = 4)),
-    // graphlearn strategy="topk": strongest-weight neighbors first, per
-    // (seed, parent) — salted two-phase top-k, never a hub window
-    "tg_neighbor_topk" -> ((s, dir) =>
-      graft.ml.NeighborSample.sampleTopK(graphFor(s, dir),
-        Seq("system", "assistant", "u1"), Seq(3, 2))),
-    // graphlearn strategy="random_without_replacement": first f
-    // avalanche-hash-ranked neighbors — distinct by construction
-    "tg_neighbor_noreplace" -> ((s, dir) =>
-      graft.ml.NeighborSample.sampleWithoutReplacement(graphFor(s, dir),
-        Seq("system", "assistant", "u1"), Seq(3, 2))),
-    // graphlearn strategy="edge_weight": per-slot draw probability
-    // exactly weight/Σweights via integer intervals (weights are
-    // occurrence counts) — two-phase sub-bucketed prefix sum + binned
-    // range join, never a hub-wide window or inequality join
-    "tg_neighbor_wprob" -> ((s, dir) =>
-      graft.ml.NeighborSample.sampleEdgeWeight(graphFor(s, dir),
-        Seq("system", "assistant", "u1"), Seq(2, 2))),
-    // graphlearn strategy="in_degree" (neighbor form): child draw
-    // probability proportional to its global in-degree
-    "tg_neighbor_indeg" -> ((s, dir) =>
-      graft.ml.NeighborSample.sampleByInDegree(graphFor(s, dir),
-        Seq("system", "assistant", "u1"), Seq(2, 2))),
-    // GSL mini-batch stream (gsl_en.rst): shuffled by_order batch →
-    // topk neighbor hop → negative hop, one parsed pipeline
-    "tg_gsl" -> ((s, dir) =>
-      graft.ml.Gsl.run(graphFor(s, dir),
-        "g.V().shuffle().batch(6).outV().sample(2).by('topk')" +
-          ".outNeg().sample(3).by('random')")),
-    // GSL edge-source stream (the edge_sampler positive-example +
-    // per-source negative pattern of the gsl_en.rst example)
-    "tg_gsl_edge" -> ((s, dir) =>
-      graft.ml.Gsl.run(graphFor(s, dir),
-        "g.E().shuffle().batch(8).outV().outNeg().sample(2).by('random')")),
-    // bounded all-simple-paths enumeration (gs::AllSimplePaths)
-    "tg_simple_paths" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.Paths3.allSimplePaths(g, "system", "tool:t0", cutoff = 2)
-        .select(concat_ws(">", col("path")).as("path_str"))
-    }),
-    // nx all_simple_edge_paths: the same enumeration as edge tuples
-    "tg_simple_edge_paths" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.Paths3.allSimpleEdgePaths(g, "system", "tool:t0", cutoff = 2)
-    }),
-    // multimodal plane: frame-sampling plumbing (flatMap/Unfold shape)
-    // over the deterministic media table — per-media frame count + last
-    // sampled timestamp have closed arithmetic forms, so even this plane
-    // gets a full-value oracle (codec itself stays stubbed)
-    "m_frames" -> ((s, dir) => {
-      val media = graft.multimodal.Multimodal.syntheticMedia(s, 500L)
-      graft.multimodal.Multimodal.sampleFrames(media, 5000L)
-        .groupBy(col("media_id"))
-        .agg(count(lit(1)).as("n_frames"), max(col("ts_ms")).as("max_ts_ms"))
-    }),
-    // REAL image decode (javax.imageio): hash-pixel PNGs → ImageIO
-    // decode → exact order-sensitive pixel checksum; the oracle
-    // recomputes the pixels from the generator formula, so any codec
-    // error (wrong channel order, transpose, lossy write) breaks the hash
-    "m_image_decode" -> ((s, dir) =>
-      graft.multimodal.Multimodal.decodeImages(
-        graft.multimodal.Multimodal.syntheticImages(s, 200L)).toDF),
-    // decode → nearest-neighbor resize to 8×8 → PNG re-encode → decode
-    // again: the checksum proves the full round trip pixel-exactly
-    "m_image_resize" -> ((s, dir) =>
-      graft.multimodal.Multimodal.decodeImages(
-        graft.multimodal.Multimodal.resizeImages(
-          graft.multimodal.Multimodal.syntheticImages(s, 200L), 8, 8))
-        .toDF.select(col("media_id"), col("checksum"))),
-    // REAL audio decode (javax.sound.sampled): hash-sample 16-bit PCM
-    // WAVs → RIFF container decode → exact order-sensitive sample
-    // checksum; the oracle recomputes samples from the generator
-    // formula, so any codec error (endianness, header offset, width)
-    // breaks the hash
-    "m_audio_decode" -> ((s, dir) =>
-      graft.multimodal.Multimodal.decodeAudio(
-        graft.multimodal.Multimodal.syntheticWavs(s, 300L)).toDF),
-    // session plane: REPORT_GRAPH (fragment_reporter.h:56-116)
-    "tg_report" -> ((s, dir) =>
-      graft.graph.GraphOps.report(graphFor(s, dir))),
-    // ADD_COLUMN (dag_utils.py:912): join an algorithm result (here the
-    // out-degree table) back onto the vertex plane as a property
-    "q_add_column" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val outDeg = g.edges.toDF.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("od"))
-      graft.graph.GraphOps.addColumn(g, outDeg)
-        .select(col("oid"), coalesce(col("od"), lit(0L)).cast("long").as("out_deg"))
-    }),
-    // TO_UNDIRECTED (types.proto TO_UNDIRECTED): symmetrize + weight
-    // merge, then per-vertex undirected degree/mass
-    "tg_to_undirected" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.graph.GraphBuilder.toUndirected(g.edges).toDF
-        .groupBy(col("src"))
-        .agg(count(lit(1)).cast("long").as("deg"), sum(col("weight")).as("w_sum"))
-        .join(g.vertices.toDF.select(col("id").as("src"), col("oid")), "src")
-        .select(col("oid"), col("deg"), col("w_sum"))
-    }),
-    // INDUCE_SUBGRAPH (dag_utils.py:698): tools + assistants + system,
-    // edges with both endpoints inside
-    "tg_induce" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val keep = g.vertices.toDF.where(
-        col("oid").like("tool:%") || col("oid").like("assistant%") || col("oid") === "system")
-      val g2 = graft.graph.GraphBuilder.induceSubgraph(g, keep.select(col("id")))
-      g2.edges.toDF
-        .join(g2.vertices.toDF.select(col("id").as("src"), col("oid").as("src_oid")), "src")
-        .join(g2.vertices.toDF.select(col("id").as("dst"), col("oid").as("dst_oid")), "dst")
-        .select(col("src_oid"), col("dst_oid"), col("weight"))
-    }),
-    // MODIFY_VERTICES (dag_utils.py:289): delete tool:t0 (incident edges
-    // prune — induced-delete semantics), add a fresh isolated vertex,
-    // commit both planes to a scratch SnapshotStore, report the
-    // post-commit out-degrees
-    "q_modify_vertices" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val sess = s; import sess.implicits._
-      val root = java.nio.file.Files.createTempDirectory("graft-mod")
-      val store = new graft.ingest.SnapshotStore(root.toString)
-      val delId = g.vertices.toDF.where(col("oid") === "tool:t0")
-        .select(col("id")).head().getLong(0)
-      val (g2, _, _) = graft.graph.GraphOps.modifyVertices(g,
-        add = Seq(graft.schema.Vertex(10000000L, "added:x")).toDS(),
-        delete = Seq(graft.schema.Vertex(delId, "tool:t0")).toDS(),
-        store, "mod_vs", "mod_es")
-      val out = Engine.checkpoint(g2.vertices.toDF
-        .join(g2.edges.toDF.groupBy(col("src").as("id")).agg(count(lit(1)).as("od")),
-          Seq("id"), "left")
-        .select(col("oid"), coalesce(col("od"), lit(0L)).cast("long").as("out_deg")))
-      out.rdd.count()
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-      out
-    }),
-    // MODIFY_EDGES (dag_utils.py:317): delete every out-edge of the
-    // system vertex, add one assistant→system edge (the merge's
-    // groupBy(src,dst).sum folds it into any surviving parallel weight),
-    // commit to a scratch SnapshotStore, report post-commit per-src-oid
-    // degree + weight mass
-    "q_modify_edges" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val sess = s; import sess.implicits._
-      val root = java.nio.file.Files.createTempDirectory("graft-mode")
-      val store = new graft.ingest.SnapshotStore(root.toString)
-      val sysId = g.vertices.toDF.where(col("oid") === "system")
-        .select(col("id")).head().getLong(0)
-      val asstId = g.vertices.toDF.where(col("oid") === "assistant")
-        .select(col("id")).head().getLong(0)
-      val (g2, _) = graft.graph.GraphOps.modifyEdges(g,
-        add = Seq(graft.schema.Edge(asstId, sysId, 99.0)).toDS(),
-        delete = g.edges.toDF.where(col("src") === sysId).as[graft.schema.Edge],
-        store, "mod_es2")
-      val out = Engine.checkpoint(g2.edges.toDF.groupBy(col("src"))
-        .agg(count(lit(1)).cast("long").as("out_deg"), sum(col("weight")).as("w_sum"))
-        .join(g.vertices.toDF.select(col("id").as("src"), col("oid")), "src")
-        .select(col("oid"), col("out_deg"), col("w_sum")))
-      out.rdd.count()
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-      out
-    }),
-    // Gremlin mutation plane (groot realtime write, record.py:22-82):
-    // addV + property, addE().to() with an explicit weight, and a
-    // vertex drop() — three write groups, three snapshot versions; the
-    // output re-reads the LATEST committed snapshot (read-your-writes)
-    "q_gremlin_mutate" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val root = java.nio.file.Files.createTempDirectory("graft-gmut")
-      val store = new graft.ingest.SnapshotStore(root.toString)
-      val (g1, _) = graft.gie.Gremlin.mutate(g,
-        "g.addV().property('oid', 'added:x')", store, "gmut_vs", "gmut_es")
-      val (g2, _) = graft.gie.Gremlin.mutate(g1,
-        "g.V().has('oid', 'assistant').addE()" +
-          ".to(V().has('oid', 'added:x')).property('weight', 99)",
-        store, "gmut_vs", "gmut_es")
-      graft.gie.Gremlin.mutate(g2,
-        "g.V().has('oid', 'tool:t3').drop()", store, "gmut_vs", "gmut_es")
-      val vs = store.readLatest(s, "gmut_vs").get._2
-      val es = store.readLatest(s, "gmut_es").get._2
-      val out = Engine.checkpoint(es
-        .join(vs.select(col("id").as("src"), col("oid").as("src_oid")), "src")
-        .join(vs.select(col("id").as("dst"), col("oid").as("dst_oid")), "dst")
-        .select(col("src_oid"), col("dst_oid"), col("weight")))
-      out.rdd.count()
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-      out
-    }),
-    // CLEAR_EDGES (dag_utils.py:676): commit an empty edge snapshot,
-    // REPORT_GRAPH the cleared graph (vertices survive, zero edges)
-    "q_clear_edges" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val root = java.nio.file.Files.createTempDirectory("graft-clear")
-      val store = new graft.ingest.SnapshotStore(root.toString)
-      val (g2, _) = graft.graph.GraphOps.clearEdges(g, store, "clear_es")
-      val out = Engine.checkpoint(graft.graph.GraphOps.report(g2))
-      out.rdd.count()
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-      out
-    }),
-    // VIEW/COPY via projection (dag_utils.py:417): weight-filtered edge
-    // view over the shared immutable base (frames are immutable — the
-    // view IS a zero-copy graph; the base is provably untouched because
-    // every other query reuses the cached graph after this one runs)
-    "q_project_view" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val g2 = graft.graph.GraphOps.projectEdges(g, col("weight") >= 3.0)
-      g2.edges.toDF.groupBy(col("src"))
-        .agg(count(lit(1)).cast("long").as("out_deg"), sum(col("weight")).as("w_sum"))
-        .join(g.vertices.toDF.select(col("id").as("src"), col("oid")), "src")
-        .select(col("oid"), col("out_deg"), col("w_sum"))
-    }),
-    // closeness for the hub set — ONE batched reverse multi-source SSSP
-    "tg_closeness" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.Paths2.closeness(g, Seq("assistant", "tool:t0", "system"))
-        .select(col("oid"), round(col("closeness"), 6).as("closeness"))
-    }),
-    // harmonic centrality (nx harmonic_centrality, Σ 1/d incoming) for
-    // the same hub set — same batched multi-source state, different fold
-    "tg_harmonic" -> ((s, dir) =>
-      graft.algos.Paths2.harmonic(graphFor(s, dir),
-        Seq("assistant", "tool:t0", "system"))),
-    // all-sources closeness capped to the top-128-degree vertices (the
-    // reference's AllPairsShortestPathLength runs every vertex; the cap
-    // keeps the |S|·|V| pair state sandbox-sized — 128×16.6K ≈ 2.1M pairs
-    // at sf0.01 — while stressing the batched-state design in the source
-    // dimension)
-    "tg_closeness_all" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.Paths2.closenessTop(g, 128)
-        .select(col("oid"), round(col("closeness"), 6).as("closeness"))
-    }),
-    // heavy deterministic algorithms — full-value oracles via unrolled
-    // CTE chains (SynthSql3)
-    "tg_betweenness" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.Betweenness.run(g, Seq("assistant", "tool:t0", "system"))
-        .select(col("id"), round(col("betweenness"), 4).as("betweenness")), "betweenness")
-    }),
-    // multi-level Louvain (phase-1 sweeps + community coarsening +
-    // re-sweep, louvain_app_base.h:43's structure)
-    "tg_louvain" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.Louvain.runMultiLevel(g, roundsPerLevel = 5, levels = 2)
-        .join(g.vertices.toDF, Seq("id"))
-        .join(g.vertices.toDF.select(col("id").as("community"), col("oid").as("community_oid")),
-          Seq("community"))
-        .select(col("oid"), col("community_oid"))
-    }),
-    // k=30 so the peel actually cascades on this dense graph (4 rounds,
-    // ~half the vertices survive at sf0.01); k=3 peeled nothing.
-    "tg_kcore" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.Cores.kcore(g, KcoreK).select(col("id"), col("deg")), "deg")
-    }),
-    // full shell decomposition (gs::KShell) — Spark peels k = 1, 2, …;
-    // the SQL twin reaches the same core numbers via the H-index fixpoint
-    "tg_kshell" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      withOid(g, graft.algos.Cores.kshell(g).select(col("id"), col("shell")), "shell")
-    }),
-    // SSSP parent pointers (gs::SSSPPath) — min-id tight-edge predecessor
-    "tg_sssp_path" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.Paths2.withParents(g, "assistant")
-        .join(g.vertices.toDF, Seq("id"))
-        .join(g.vertices.toDF.select(col("id").as("parent"), col("oid").as("parent_oid")),
-          Seq("parent"), "left")
-        .select(col("oid"), round(col("dist"), 6).as("dist"), col("parent_oid"))
-    }),
-    // sampled mean shortest-path length (gs::SSSPAverageLength) over the
-    // hub source set — one batched multi-source SSSP
-    "tg_avg_path_len" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val sess = s; import sess.implicits._
-      Seq(graft.algos.Paths2.averageLength(g, Seq("assistant", "tool:t0", "system")))
-        .toDF("avg_len").select(round(col("avg_len"), 6).as("avg_len"))
-    }),
-    // bfs_generic predecessors mode (apps/bfs/bfs_generic.h): ALL
-    // shortest-path predecessor pairs of the BFS DAG, not just the tree
-    "tg_bfs_preds" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.BFSGeneric.predecessors(g, "assistant")
-        .join(g.vertices.toDF, Seq("id"))
-        .join(g.vertices.toDF.select(col("id").as("pred"), col("oid").as("pred_oid")),
-          Seq("pred"))
-        .select(col("oid"), col("pred_oid"))
-    }),
-    // bfs_generic successors mode: every BFS-DAG edge as (oid, succ_oid)
-    "tg_bfs_succs" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      graft.algos.BFSGeneric.successors(g, "assistant")
-        .join(g.vertices.toDF, Seq("id"))
-        .join(g.vertices.toDF.select(col("id").as("succ"), col("oid").as("succ_oid")),
-          Seq("succ"))
-        .select(col("oid"), col("succ_oid"))
-    }),
-    // versioned snapshot sink (groot analog): two atomic commits of the
-    // out-degree table, read-back at the _latest pointer, manifest row
-    // count checked against the table's own cardinality
-    "q_snapshot_sink" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val root = java.nio.file.Files.createTempDirectory("graft-snap")
-      val store = new graft.ingest.SnapshotStore(root.toString)
-      val deg = g.edges.toDF.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        .join(g.vertices.toDF.select(col("id").as("src"), col("oid")), "src")
-        .select(col("oid"), col("outdeg"))
-      store.write("degrees", deg.where(col("oid").like("agent:%")), Map("commit" -> 0.0))
-      store.write("degrees", deg, Map("commit" -> 1.0))
-      val (v, back) = store.readLatest(s, "degrees").get
-      val m = store.readManifest("degrees", v)
-      // eager checkpoint so the scratch snapshot dir can be deleted right
-      // away — repeated driver runs would otherwise accumulate /tmp parquet
-      val out = Engine.checkpoint(back.withColumn("version", lit(v))
-        .withColumn("manifest_rows", lit(m.rows)))
-      out.rdd.count()
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
-      out
-    }),
-    // sssp_has_path (apps/sssp/sssp_has_path.h): reachability for the
-    // probe set (mixes reachable and unreachable pairs) — ONE batched
-    // multi-source fixpoint for all pairs, not a fixpoint per pair
-    "tg_has_path" -> ((s, dir) =>
-      graft.algos.Paths2.hasPaths(graphFor(s, dir), HasPathPairs)),
-    // is_simple_path (gs::IsSimplePath): literal oid walks — edge
-    // existence is the data-dependent part the oracle exercises
-    "tg_is_simple_path" -> ((s, dir) => {
-      val g = graphFor(s, dir)
-      val sess = s; import sess.implicits._
-      SimplePathCases.map(p => (p.mkString(">"), graft.algos.Paths3.isSimplePath(g, p)))
-        .toDF("path_str", "is_simple")
-    }),
-    // As/select tag jump via the Gremlin string front-end: tag the agent,
-    // expand to a user, jump back — one bag row per agent→user edge
-    "tg_gremlin_tags" -> ((s, dir) =>
-      graft.gie.Gremlin.run(graphFor(s, dir),
-        "g.V().has('oid', TextP.startingWith('agent:')).as('a').out()" +
-          ".has('oid', TextP.startingWith('u')).select('a').values('oid')")),
-    // embedding-cosine near-dup pairs (bucket-guarded sign-LSH candidates)
-    "s_cosine_pairs" -> ((s, dir) =>
-      graft.ml.Similarity.cosineNearDupPairs(
-        t(s, dir, "embeddings"), "vec_id", "embedding", threshold = 0.35)),
-    // token-set Jaccard of adjacent doc ids (the n-gram Jaccard op in a
-    // SQL-checkable form)
-    "d_jaccard_adj" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"),
-          array_distinct(graft.text.TextOps.tokens(col("text"))).as("tk"))
-      docs.as("a").join(docs.as("b"), col("b.doc_id") === col("a.doc_id") + 1)
-        .select(col("a.doc_id").as("doc_id"),
-          round(
-            size(array_intersect(col("a.tk"), col("b.tk"))).cast("double") /
-              size(array_union(col("a.tk"), col("b.tk"))).cast("double"), 5).as("jaccard"))
-    })
-  )
-
-  /** k vs k+1 convergence probes for every fixed-unroll FIXPOINT oracle
-    * in [[oracleSql]]: each entry pairs the baked round count with one
-    * extra round; `tools/check_convergence.py` asserts the two results
-    * are identical, replacing the manual re-check the unrolled chains
-    * previously relied on. Schedule-parameterized twins (fixed-round
-    * PageRank/CDLP/eigen/Katz/HITS/LPA, Louvain sweep counts) are
-    * excluded — there the round count is the algorithm's input, not a
-    * convergence horizon.
-    */
-  def convergenceSql: Map[String, (String, String)] = {
-    val srcs = Seq("assistant", "tool:t0", "system")
-    Map(
-      "tg_wcc" -> (SynthSql.wccSql(OracleSf, 30), SynthSql.wccSql(OracleSf, 31)),
-      "tg_sssp" -> (SynthSql2.ssspSql(OracleSf, 25), SynthSql2.ssspSql(OracleSf, 26)),
-      "tg_bfs" -> (SynthSql2.bfsSql(OracleSf, 15), SynthSql2.bfsSql(OracleSf, 16)),
-      "tg_bfs_tree" -> (SynthSql3.bfsTreeSql(OracleSf, 15), SynthSql3.bfsTreeSql(OracleSf, 16)),
-      "tg_bfs_preds" -> (SynthSql3.bfsPredsSql(OracleSf, 15), SynthSql3.bfsPredsSql(OracleSf, 16)),
-      "tg_bfs_succs" -> (SynthSql3.bfsSuccsSql(OracleSf, 15), SynthSql3.bfsSuccsSql(OracleSf, 16)),
-      "tg_has_path" -> (SynthSql3.hasPathSql(OracleSf, HasPathPairs, 18),
-        SynthSql3.hasPathSql(OracleSf, HasPathPairs, 19)),
-      "tg_kcore" -> (SynthSql2.kcoreSql(OracleSf, KcoreK, 8), SynthSql2.kcoreSql(OracleSf, KcoreK, 9)),
-      "tg_kshell" -> (graft.synth.SynthSql4.kshellSql(OracleSf, 18),
-        graft.synth.SynthSql4.kshellSql(OracleSf, 19)),
-      "tg_betweenness" -> (SynthSql3.betweennessSql(OracleSf, srcs, 15),
-        SynthSql3.betweennessSql(OracleSf, srcs, 16)),
-      "tg_pagerank_tol" -> (SynthSql3.pageRankTolSql(OracleSf, 25), SynthSql3.pageRankTolSql(OracleSf, 26)),
-      "tg_closeness" -> (SynthSql3.closenessSql(OracleSf, srcs, 30), SynthSql3.closenessSql(OracleSf, srcs, 31)),
-      "tg_harmonic" -> (SynthSql3.harmonicSql(OracleSf, srcs, 30), SynthSql3.harmonicSql(OracleSf, srcs, 31)),
-      "tg_apsp" -> (SynthSql3.apspSql(OracleSf, srcs, 30), SynthSql3.apspSql(OracleSf, srcs, 31)),
-      "tg_ml_wcc_reply" -> (SynthSql3.mlWccReplySql(OracleSf, 22), SynthSql3.mlWccReplySql(OracleSf, 23)),
-      "tg_sssp_path" -> (graft.synth.SynthSql4.ssspPathSql(OracleSf, 25),
-        graft.synth.SynthSql4.ssspPathSql(OracleSf, 26)),
-      "tg_avg_path_len" -> (graft.synth.SynthSql4.avgPathLenSql(OracleSf, srcs, 30),
-        graft.synth.SynthSql4.avgPathLenSql(OracleSf, srcs, 31)),
-      "d_minhash_groups" -> (
-        graft.synth.LshSql.minhashGroupsSql(16, 8, 3, 0.5, 1000, wccRounds = 10),
-        graft.synth.LshSql.minhashGroupsSql(16, 8, 3, 0.5, 1000, wccRounds = 11)),
-      "tg_gie_weighted_shortest" -> (
-        graft.synth.SynthSql5.gieWeightedShortestSql(OracleSf, "assistant", "tool:%", 25),
-        graft.synth.SynthSql5.gieWeightedShortestSql(OracleSf, "assistant", "tool:%", 26)),
-      "tg_closeness_all" -> (
-        graft.synth.SynthSql5.closenessTopSql(OracleSf, 128, 30),
-        graft.synth.SynthSql5.closenessTopSql(OracleSf, 128, 31)),
-      "tg_ppr" -> (graft.synth.SynthSql5.pprSql(OracleSf, "tool:t0", 65),
-        graft.synth.SynthSql5.pprSql(OracleSf, "tool:t0", 66)),
-      "tg_ppr_sparse" -> (graft.synth.SynthSql5.pprSql(OracleSf, "tool:t0", 65),
-        graft.synth.SynthSql5.pprSql(OracleSf, "tool:t0", 66))
-    )
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "tg_edges" -> SynthSql.edgesSql(OracleSf),
-    "tg_degrees" -> SynthSql.degreesSql(OracleSf),
-    "tg_salted_hub" -> graft.synth.SynthSql5.saltedHubSql(OracleSf),
-    "tg_pagerank" -> SynthSql.pageRankSql(OracleSf, PrRounds),
-    // the resumed run must reproduce the uninterrupted run EXACTLY —
-    // same twin as tg_pagerank, no resume-specific tolerance
-    "tg_pagerank_resume" -> SynthSql.pageRankSql(OracleSf, PrRounds),
-    "tg_pagerank_w" -> SynthSql.pageRankWeightedSql(OracleSf, PrRounds),
-    "tg_wcc" -> SynthSql.wccSql(OracleSf),
-    // resumed WCC must reach the identical fixpoint — same twin
-    "tg_wcc_resume" -> SynthSql.wccSql(OracleSf),
-    "tg_pregel_wcc" -> SynthSql.wccSql(OracleSf),
-    "tg_cdlp" -> SynthSql.cdlpSql(OracleSf, CdlpRounds),
-    "tg_triangles" -> SynthSql.trianglesSql(OracleSf),
-    "q_scan_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_quantity > 45 AND l_returnflag = 'R'""".stripMargin,
-    "q_csv_load" ->
-      """SELECT c_mktsegment, count(*) AS n,
-        |  CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS acctbal_sum
-        |FROM customer GROUP BY c_mktsegment""".stripMargin,
-    "q_group_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS sum_price,
-        |  min(l_discount) AS min_disc,
-        |  max(l_tax) AS max_tax,
-        |  count(*) AS n,
-        |  count(DISTINCT l_orderkey) AS n_orders
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "q_join_agg" ->
-      """SELECT n_name,
-        |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DECIMAL(18,4)) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "q_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-    "q_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_totalprice > 400000)""".stripMargin,
-    "q_dedup" -> "SELECT DISTINCT c_nationkey, c_mktsegment FROM customer",
-    "q_outer" ->
-      """SELECT coalesce(c.nk, s.nk) AS nk, c.nc, s.ns FROM
-        |  (SELECT c_nationkey AS nk, count(*) AS nc FROM customer WHERE c_nationkey < 13 GROUP BY 1) c
-        |FULL JOIN
-        |  (SELECT s_nationkey AS nk, count(*) AS ns FROM supplier WHERE s_nationkey > 10 GROUP BY 1) s
-        |ON c.nk = s.nk""".stripMargin,
-    "q_cross" -> "SELECT r_name, n_name FROM region CROSS JOIN nation",
-    "q_window" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |  FROM orders) z WHERE rn = 1""".stripMargin,
-    "q_explode" ->
-      """SELECT word, count(*) AS n FROM (
-        |  SELECT unnest(string_split(p_name, ' ')) AS word FROM part) z
-        |GROUP BY word""".stripMargin,
-    "q_union" ->
-      """SELECT nk, count(*) AS n FROM (
-        |  SELECT c_nationkey AS nk FROM customer
-        |  UNION ALL SELECT s_nationkey AS nk FROM supplier) z GROUP BY nk""".stripMargin,
-    "q_apply" ->
-      """SELECT o_orderkey, o_custkey FROM orders o
-        |JOIN (SELECT o_custkey AS ck, avg(o_totalprice) AS avg_price FROM orders GROUP BY o_custkey) a
-        |  ON o.o_custkey = a.ck
-        |WHERE o.o_totalprice > a.avg_price * 2""".stripMargin,
-    // gaps-and-islands twin of session_window: a session breaks where
-    // the inter-event gap reaches 30 min (micro-precision, matching
-    // Spark's end-exclusive session windows)
-    "q_event_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS tus, CAST(value AS DECIMAL(18,4)) AS v FROM events),
-        |m AS (
-        |  SELECT user_id, tus, v,
-        |    CASE WHEN lag(tus) OVER w IS NULL
-        |           OR tus - lag(tus) OVER w >= 1800000000 THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
-        |s AS (
-        |  SELECT user_id, tus, v,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY tus ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM m)
-        |SELECT user_id, CAST(min(tus) // 1000000 AS BIGINT) AS sess_start,
-        |       count(*) AS n_events,
-        |       CAST(CAST(sum(v) AS DECIMAL(18,4)) AS DOUBLE) AS total_value
-        |FROM s GROUP BY user_id, sid""".stripMargin,
-    "q_event_window" ->
-      """SELECT ((epoch_ms(ts) // 1000) - ((epoch_ms(ts) // 1000) % 3600)) AS win_start, event_type,
-        |  count(*) AS n,
-        |  CAST(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    // hopping windows: slide 1800s ⇒ event t belongs to starts
-    // {floor(t/1800)·1800, that − 1800} (Spark window() epoch alignment)
-    "q_event_hopping" ->
-      """WITH e AS (SELECT (epoch_ms(ts) // 1000) AS t, event_type FROM events),
-        |w AS (
-        |  SELECT ((t // 1800) * 1800) AS win_start, event_type FROM e
-        |  UNION ALL
-        |  SELECT ((t // 1800) * 1800 - 1800) AS win_start, event_type FROM e)
-        |SELECT win_start, event_type, count(*) AS n FROM w GROUP BY 1, 2""".stripMargin,
-    "s_ann_recall" ->
-      s"""SELECT bf.query_id AS query_id,
-         |       round(CAST(count(lsh.neighbor_id) AS DOUBLE) / 5, 4) AS recall5
-         |FROM (${SynthSql2.cosineTopKSql((0L until 10L).toSeq, 5)}) bf
-         |LEFT JOIN (${graft.synth.LshSql.lshTopKSql((0L until 10L).toSeq, 5)}) lsh
-         |  ON bf.query_id = lsh.query_id AND bf.neighbor_id = lsh.neighbor_id
-         |GROUP BY 1""".stripMargin,
-    "d_fuzzy_survivors" ->
-      s"""SELECT group_id, min(doc_id) AS survivor_id, count(*) AS group_size
-         |FROM (${graft.synth.LshSql.minhashGroupsSql(
-             numHashes = 16, bands = 8, shingleSize = 3, threshold = 0.5)}) g
-         |GROUP BY 1""".stripMargin,
-    "tg_sssp" -> SynthSql2.ssspSql(OracleSf),
-    "tg_bfs" -> SynthSql2.bfsSql(OracleSf),
-    "tg_bfs_tree" -> SynthSql3.bfsTreeSql(OracleSf),
-    "tg_ml_wcc_reply" -> SynthSql3.mlWccReplySql(OracleSf),
-    "tg_ml_invoke_deg" -> SynthSql3.mlInvokeDegSql(OracleSf),
-    "tg_gie_2hop" -> SynthSql3.gie2hopSql(OracleSf),
-    "tg_gie_pathexpand" -> SynthSql3.giePathExpandSql(OracleSf, "system", 1, 3),
-    "tg_gie_shortest" -> SynthSql3.gieShortestSql(OracleSf, "tool:t0", 15, "tool:%"),
-    "tg_gie_exists" -> SynthSql3.gieExistsSql(OracleSf),
-    "tg_gie_topk" -> SynthSql3.gieTopkSql(OracleSf, 10),
-    "tg_gie_segment" -> SynthSql3.gieSegmentSql(OracleSf, "agent:%", 2),
-    // Gremlin-string queries lower to the same algebra ⇒ same twins
-    "tg_gremlin_2hop" -> SynthSql3.gie2hopSql(OracleSf),
-    "tg_gremlin_pathexpand" -> SynthSql3.giePathExpandSql(OracleSf, "system", 1, 3),
-    "tg_gremlin_exists" -> SynthSql3.gieExistsSql(OracleSf),
-    "tg_gremlin_topk" -> SynthSql3.gieTopkSql(OracleSf, 10),
-    "tg_gremlin_union" -> SynthSql3.gieUnionSql(OracleSf, "system", 20),
-    "tg_gremlin_both" -> SynthSql3.giePathExpandSql(OracleSf, "tool:t0", 1, 2, dir = "both"),
-    "tg_gremlin_bothe" -> graft.synth.SynthSql5.gieBothEOtherSql(OracleSf, "u%"),
-    "tg_gremlin_local" -> graft.synth.SynthSql5.gieFoldLocalSql(OracleSf, "assistant", 3),
-    "tg_gie_paths" -> graft.synth.SynthSql4.giePathsSql(OracleSf, "system"),
-    "tg_gremlin_paths" -> graft.synth.SynthSql4.giePathsTopSql(OracleSf, "system", 50),
-    "tg_gremlin_repeat" -> graft.synth.SynthSql5.gieRepeatSql(OracleSf, "system", "tool:t0", 4),
-    "tg_gremlin_group" -> graft.synth.SynthSql5.gieGroupSumSql(OracleSf, "u%"),
-    "tg_gremlin_numeric" -> graft.synth.SynthSql5.gieNumericSql(OracleSf, 2, 5),
-    "tg_gremlin_coalesce" -> graft.synth.SynthSql5.gieCoalesceSql(OracleSf, 20),
-    "tg_gremlin_haslabel" -> graft.synth.SynthSql5.gieHasLabelSql(OracleSf),
-    "tg_gremlin_ldbc_reach" -> graft.synth.SynthSql5.gieLdbcReachSql(OracleSf),
-    "tg_gremlin_choose" -> graft.synth.SynthSql5.gieChooseSql(OracleSf),
-    "tg_gremlin_branch" -> graft.synth.SynthSql6.branchSql(OracleSf),
-    "tg_gremlin_project" -> graft.synth.SynthSql5.gieProjectSql(OracleSf),
-    "tg_gremlin_ldbc_top" -> graft.synth.SynthSql5.gieLdbcTopSql(OracleSf),
-    "tg_gremlin_ldbc_filter" -> graft.synth.SynthSql5.gieLdbcFilterSql(OracleSf, 12, 3.0, 10.0),
-    "tg_gremlin_ldbc_cr1" -> graft.synth.SynthSql6.cr1Sql(OracleSf, "u1", 20),
-    "tg_gremlin_ldbc_cr2" -> graft.synth.SynthSql6.cr2Sql(OracleSf, "u1", "u4", 20),
-    "tg_gremlin_ldbc_cr4" -> graft.synth.SynthSql6.cr4Sql(OracleSf, "u1", 6.0),
-    "tg_gremlin_ldbc_cr5" -> graft.synth.SynthSql6.cr5Sql(OracleSf, "u1", 2.0, 20),
-    "tg_gremlin_ldbc_cr6" -> graft.synth.SynthSql6.cr6Sql(OracleSf, "u1", 2.0, 10),
-    "tg_gremlin_1hop_micro" -> graft.synth.SynthSql6.hop1Sql(OracleSf, "u1"),
-    "tg_gremlin_2hop_micro" -> graft.synth.SynthSql6.hop2Sql(OracleSf, "u1"),
-    "tg_gremlin_ldbc_cr11" -> graft.synth.SynthSql6.cr11Sql(OracleSf, "u1", 6.0, 10),
-    "tg_gremlin_ldbc_cr12" -> graft.synth.SynthSql6.cr12Sql(OracleSf, "u1", 2.0, 3, 20),
-    "tg_gremlin_esource" -> graft.synth.SynthSql6.esourceSql(OracleSf, 3.0),
-    "tg_gremlin_range" -> graft.synth.SynthSql6.rangeSql(OracleSf, 5, 25),
-    "tg_gremlin_shuffle" -> graft.synth.SynthSql6.shuffleOrderSql(OracleSf, "u%", 40),
-    "tg_gremlin_math" -> graft.synth.SynthSql6.mathSql(OracleSf),
-    "tg_gremlin_sack" -> graft.synth.SynthSql6.sackSql(OracleSf, "assistant"),
-    "tg_gremlin_aggregate" -> graft.synth.SynthSql7.aggregateSql(OracleSf, "system"),
-    "tg_gremlin_cap" -> graft.synth.SynthSql7.capSql(OracleSf, "u"),
-    "tg_gremlin_cyclic" -> graft.synth.SynthSql7.cyclicSql(OracleSf, "u"),
-    "tg_gremlin_tree" -> graft.synth.SynthSql7.treeSql(OracleSf, "system"),
-    "tg_gremlin_vids" -> graft.synth.SynthSql7.vidsSql(OracleSf,
-      Seq("assistant", "tool:t0", "nosuch:x")),
-    "tg_gremlin_emit" -> graft.synth.SynthSql7.emitSql(OracleSf, "system", "t"),
-    "tg_gremlin_hasid" -> graft.synth.SynthSql7.hasIdSql(OracleSf,
-      Seq("assistant", "tool:t0")),
-    "tg_gremlin_elementmap" -> graft.synth.SynthSql7.elementMapSql(OracleSf,
-      Seq("assistant", "system", "tool:t0", "tool:t1")),
-    "tg_gremlin_properties" -> graft.synth.SynthSql7.propertiesSql(OracleSf, "system"),
-    "tg_gremlin_localagg" -> graft.synth.SynthSql7.localMeanSql(OracleSf, "u"),
-    "tg_gremlin_store" -> graft.synth.SynthSql7.capSql(OracleSf, "a"),
-    "tg_gremlin_coin" -> graft.synth.SynthSql7.coinSql(OracleSf, 0.37),
-    "tg_gremlin_profile" -> graft.synth.SynthSql7.profileSql(OracleSf, "u"),
-    "tg_gremlin_edgelabel" -> graft.synth.SynthSql5.gieEdgeLabelSumSql(OracleSf),
-    // algorithm-step bridges: same result contract as the direct apps
-    "tg_gremlin_pagerank_step" -> SynthSql.pageRankSql(OracleSf, PrRounds),
-    "tg_gremlin_cc_step" -> SynthSql.wccSql(OracleSf),
-    "tg_gremlin_lpa_step" -> SynthSql.cdlpSql(OracleSf, CdlpRounds),
-    "tg_gremlin_hits_step" -> SynthSql2.hitsSql(OracleSf),
-    "tg_gremlin_shortest_step" -> SynthSql3.gieShortestSql(OracleSf, "tool:t0", 15, "tool:%"),
-    "tg_gremlin_weighted_shortest_step" ->
-      graft.synth.SynthSql5.gieWeightedShortestSql(OracleSf, "assistant", "tool:%"),
-    "tg_gremlin_hll" -> graft.synth.SynthSql5.hllEstimateCountSql(OracleSf),
-    "tg_ppr" -> graft.synth.SynthSql5.pprSql(OracleSf, "tool:t0", 65),
-    "tg_ppr_sparse" -> graft.synth.SynthSql5.pprSql(OracleSf, "tool:t0", 65),
-    "tg_gremlin_select" -> graft.synth.SynthSql5.gieSelectSql(OracleSf, 50),
-    "tg_gremlin_textp" -> graft.synth.SynthSql5.gieTextpSql(OracleSf),
-    "tg_gremlin_subgraph" -> graft.synth.SynthSql5.gieSubgraphSql(OracleSf),
-    "tg_gremlin_sample" -> graft.synth.SynthSql5.gieSampleSql(OracleSf, 7),
-    "tg_gremlin_distinct" -> graft.synth.SynthSql5.gieDistinctCountSql(OracleSf),
-    "tg_gremlin_bool" -> graft.synth.SynthSql5.gieBoolSql(OracleSf),
-    "tg_gremlin_match" -> graft.synth.SynthSql5.gieMatchSql(OracleSf),
-    "tg_gie_weighted_shortest" ->
-      graft.synth.SynthSql5.gieWeightedShortestSql(OracleSf, "assistant", "tool:%"),
-    "tg_pagerank_tol" -> SynthSql3.pageRankTolSql(OracleSf),
-    "tg_betweenness" -> SynthSql3.betweennessSql(OracleSf, Seq("assistant", "tool:t0", "system")),
-    "tg_louvain" -> graft.synth.SynthSql4.louvainMultiSql(OracleSf, rounds = 5, levels = 2),
-    "tg_closeness" -> SynthSql3.closenessSql(OracleSf, Seq("assistant", "tool:t0", "system")),
-    "tg_closeness_all" -> graft.synth.SynthSql5.closenessTopSql(OracleSf, 128),
-    "q_add_column" -> graft.synth.SynthSql5.addColumnSql(OracleSf),
-    "tg_to_undirected" -> graft.synth.SynthSql5.toUndirectedSql(OracleSf),
-    "tg_induce" -> graft.synth.SynthSql5.induceSql(OracleSf),
-    "q_modify_vertices" -> graft.synth.SynthSql5.modifyVerticesSql(OracleSf, "tool:t0", "added:x"),
-    "q_modify_edges" -> graft.synth.SynthSql5.modifyEdgesSql(OracleSf),
-    "q_gremlin_mutate" -> graft.synth.SynthSql6.gremlinMutateSql(
-      OracleSf, "tool:t3", "added:x", 99.0),
-    "q_clear_edges" -> graft.synth.SynthSql5.clearEdgesSql(OracleSf),
-    "q_project_view" -> graft.synth.SynthSql5.projectViewSql(OracleSf, 3.0),
-    "tg_eigen" -> SynthSql3.eigenvectorSql(OracleSf, rounds = 15),
-    "tg_katz" -> SynthSql3.katzSql(OracleSf, rounds = 10, alpha = 0.005, beta = 1.0),
-    "tg_boundary" -> SynthSql3.nodeBoundarySql(OracleSf),
-    "tg_transitivity" -> SynthSql3.transitivitySql(OracleSf),
-    "tg_avgclustering" -> SynthSql3.avgClusteringSql(OracleSf),
-    "tg_apsp" -> SynthSql3.apspSql(OracleSf, Seq("assistant", "tool:t0", "system")),
-    "tg_harmonic" -> SynthSql3.harmonicSql(OracleSf, Seq("assistant", "tool:t0", "system")),
-    "tg_attr_assort" -> SynthSql3.attrAssortSql(OracleSf),
-    "tg_edge_boundary" -> SynthSql3.edgeBoundarySql(OracleSf),
-    "tg_lpau2i" -> SynthSql3.lpau2iSql(OracleSf, rounds = 2),
-    "tg_sampling" -> SynthSql3.samplingSql(OracleSf, Seq("system", "assistant", "tool:t0"), 3),
-    "tg_neighbor_sample" -> graft.synth.SynthSql5.neighborSampleSql(
-      OracleSf, Seq("system", "assistant", "u1"), Seq(2, 2)),
-    "tg_negative_sample" -> graft.synth.SynthSql5.negativeSampleSql(
-      OracleSf, Seq("system", "assistant", "u1", "tool:t0"), f = 4),
-    "tg_negative_indeg" -> graft.synth.SynthSql7.negativeInDegreeSql(
-      OracleSf, Seq("system", "assistant", "u1", "tool:t0"), f = 4),
-    "tg_negative_nodew" -> graft.synth.SynthSql7.negativeInDegreeSql(
-      OracleSf, Seq("system", "assistant", "u1", "tool:t0"), f = 4,
-      byNodeWeight = true),
-    "tg_neighbor_topk" -> graft.synth.SynthSql5.neighborRankedSql(
-      OracleSf, Seq("system", "assistant", "u1"), Seq(3, 2), byWeight = true),
-    "tg_neighbor_noreplace" -> graft.synth.SynthSql5.neighborRankedSql(
-      OracleSf, Seq("system", "assistant", "u1"), Seq(3, 2), byWeight = false),
-    "tg_neighbor_wprob" -> graft.synth.SynthSql7.neighborWeightedSql(
-      OracleSf, Seq("system", "assistant", "u1"), Seq(2, 2), byInDegree = false),
-    "tg_neighbor_indeg" -> graft.synth.SynthSql7.neighborWeightedSql(
-      OracleSf, Seq("system", "assistant", "u1"), Seq(2, 2), byInDegree = true),
-    "tg_gsl" -> graft.synth.SynthSql7.gslSql(OracleSf, batchN = 6, fTop = 2, fNeg = 3),
-    "tg_gsl_edge" -> graft.synth.SynthSql7.gslEdgeSql(OracleSf, batchN = 8, fNeg = 2),
-    "tg_simple_paths" -> SynthSql3.simplePathsSql(OracleSf, "system", "tool:t0"),
-    "tg_simple_edge_paths" -> SynthSql3.simpleEdgePathsSql(OracleSf, "system", "tool:t0"),
-    "tg_hits" -> SynthSql2.hitsSql(OracleSf),
-    "tg_degcent" -> SynthSql2.degCentralitySql(OracleSf),
-    "tg_degcent_in" -> SynthSql2.degCentralitySql(OracleSf, "in"),
-    "tg_degcent_out" -> SynthSql2.degCentralitySql(OracleSf, "out"),
-    "tg_numeric_assort" -> SynthSql2.numericAssortSql(OracleSf),
-    "tg_lcc" -> SynthSql2.lccSql(OracleSf),
-    "tg_avgdegconn" -> SynthSql2.avgDegConnectivitySql(OracleSf),
-    "tg_assortativity" -> SynthSql2.assortativitySql(OracleSf),
-    "tg_pattern" -> SynthSql2.patternSql(OracleSf),
-    "tg_pathexpand" -> SynthSql2.pathExpandSql(OracleSf),
-    "d_dedup_norm" -> SynthSql2.dedupNormSql,
-    "d_textstats" -> SynthSql2.textStatsSql,
-    "d_quality" -> SynthSql2.qualitySql,
-    "d_langid" -> SynthSql2.langIdSql(graft.text.TextOps.Stopwords),
-    "d_fingerprint" -> SynthSql2.fingerprintSql,
-    "d_prep_pipeline" -> SynthSql2.prepPipelineSql(graft.text.TextOps.Stopwords),
-    "d_split_stratified" -> SynthSql2.splitStratifiedSql(graft.text.TextOps.Stopwords),
-    "d_pack_chunks" -> SynthSql2.packChunksSql(512, 8),
-    "d_decontaminate" -> graft.synth.LshSql.decontaminateSql(),
-    "d_chunk_windows" -> SynthSql2.tokenChunksSql(32, 24),
-    "d_tfidf_top" -> SynthSql2.tfidfTopSql(3),
-    "d_pack_stats" -> SynthSql2.packStatsSql(512, 8),
-    "d_minhash_groups" -> graft.synth.LshSql.minhashGroupsSql(
-      numHashes = 16, bands = 8, shingleSize = 3, threshold = 0.5),
-    "d_simhash_pairs" -> graft.synth.LshSql.simhashPairsSql(maxDist = 3),
-    "d_pii_redact" -> SynthSql2.piiRedactSql(
-      graft.text.TextOps.EmailRe, graft.text.TextOps.Ipv4Re, graft.text.TextOps.PhoneRe),
-    "d_repetition" -> SynthSql2.repetitionSql,
-    "d_gopher_rules" -> SynthSql2.gopherSql(),
-    "d_unigram_lp" -> SynthSql2.unigramLogProbSql,
-    "d_mixture_sample" -> SynthSql2.mixtureSampleSql(MixtureRates, MixtureDefaultRate),
-    "s_cosine_topk" -> SynthSql2.cosineTopKSql((0L until 10L).toSeq, 5),
-    "s_lsh_topk" -> graft.synth.LshSql.lshTopKSql((0L until 10L).toSeq, 5),
-    "s_sq8_topk" -> graft.synth.LshSql.sq8TopKSql((0L until 10L).toSeq, 5),
-    "s_pq_topk" -> graft.synth.LshSql.pqTopKSql((0L until 10L).toSeq, 5),
-    "s_ivf_topk" -> graft.synth.SynthSql5.ivfTopKSql((0L until 10L).toSeq, 5),
-    "s_kmeans" -> graft.synth.SynthSql5.kmeansSql(8, 2, 64),
-    "s_quantize" -> graft.synth.LshSql.quantizeSql,
-    "s_cosine_pairs" -> graft.synth.LshSql.cosinePairsSql(0.35),
-    "tg_bfs_preds" -> SynthSql3.bfsPredsSql(OracleSf),
-    "tg_bfs_succs" -> SynthSql3.bfsSuccsSql(OracleSf),
-    "q_snapshot_sink" -> SynthSql3.snapshotSinkSql(OracleSf),
-    "tg_has_path" -> SynthSql3.hasPathSql(OracleSf, HasPathPairs),
-    "tg_is_simple_path" -> SynthSql3.isSimplePathSql(OracleSf, SimplePathCases),
-    "tg_gremlin_tags" -> SynthSql3.gieTagsSql(OracleSf),
-    "tg_kcore" -> SynthSql2.kcoreSql(OracleSf, KcoreK),
-    "tg_kshell" -> graft.synth.SynthSql4.kshellSql(OracleSf),
-    "tg_sssp_path" -> graft.synth.SynthSql4.ssspPathSql(OracleSf),
-    "tg_avg_path_len" -> graft.synth.SynthSql4.avgPathLenSql(
-      OracleSf, Seq("assistant", "tool:t0", "system")),
-    // frame count = min(max(duration/5000, 1), 16), duration = 1000 +
-    // h(i,5) % 60000 — mirrors Multimodal.syntheticMedia + DecodeStub
-    "m_frames" ->
-      """WITH m AS (SELECT unnest(generate_series(0, 499)) AS i),
-        |d AS (SELECT i, 1000 + ((CAST(i AS BIGINT)*1000003 + 5*7919 + 12345) % 1000000007) % 60000 AS dur
-        |      FROM m WHERE i % 3 <> 0)
-        |SELECT CAST(i AS BIGINT) AS media_id,
-        |       CAST(least(greatest(dur // 5000, 1), 16) AS BIGINT) AS n_frames,
-        |       CAST((least(greatest(dur // 5000, 1), 16) - 1) * 5000 AS BIGINT) AS max_ts_ms
-        |FROM d""".stripMargin,
-    // real-ImageIO decode: pixels re-derived from the generator hash —
-    // pixel (p) of image c is rgb = (h(c,1e5+p), h(c,2e5+p), h(c,3e5+p))
-    // % 256 with h(c,i) = (c*1000003 + i*7919 + 12345) % 1000000007
-    "m_image_decode" ->
-      """WITH m AS (SELECT CAST(unnest(generate_series(0, 199)) AS BIGINT) AS c),
-        |dims AS (SELECT c,
-        |    8 + ((c*1000003 + CAST(30 AS BIGINT)*7919 + 12345) % 1000000007) % 9 AS w,
-        |    8 + ((c*1000003 + CAST(31 AS BIGINT)*7919 + 12345) % 1000000007) % 9 AS h
-        |  FROM m),
-        |ps AS (SELECT CAST(unnest(generate_series(0, 255)) AS BIGINT) AS p),
-        |px AS (SELECT d.c, d.w, d.h, ps.p,
-        |    ((d.c*1000003 + (100000 + ps.p)*7919 + 12345) % 1000000007) % 256 AS r,
-        |    ((d.c*1000003 + (200000 + ps.p)*7919 + 12345) % 1000000007) % 256 AS g,
-        |    ((d.c*1000003 + (300000 + ps.p)*7919 + 12345) % 1000000007) % 256 AS b
-        |  FROM dims d CROSS JOIN ps WHERE ps.p < d.w * d.h)
-        |SELECT c AS media_id, CAST(min(w) AS INT) AS width, CAST(min(h) AS INT) AS height,
-        |       CAST(sum((p + 1) * (r + 2*g + 4*b)) AS BIGINT) AS checksum
-        |FROM px GROUP BY c""".stripMargin,
-    // nearest-neighbor resample to 8x8: out pixel q picks source pixel
-    // p = ((q//8)*h//8)*w + ((q%8)*w//8) — floor-div, same as the Scala
-    "m_image_resize" ->
-      """WITH m AS (SELECT CAST(unnest(generate_series(0, 199)) AS BIGINT) AS c),
-        |dims AS (SELECT c,
-        |    8 + ((c*1000003 + CAST(30 AS BIGINT)*7919 + 12345) % 1000000007) % 9 AS w,
-        |    8 + ((c*1000003 + CAST(31 AS BIGINT)*7919 + 12345) % 1000000007) % 9 AS h
-        |  FROM m),
-        |qs AS (SELECT CAST(unnest(generate_series(0, 63)) AS BIGINT) AS q),
-        |src AS (SELECT d.c, qs.q,
-        |    ((qs.q // 8) * d.h // 8) * d.w + ((qs.q % 8) * d.w // 8) AS p
-        |  FROM dims d CROSS JOIN qs),
-        |px AS (SELECT c, q,
-        |    ((c*1000003 + (100000 + p)*7919 + 12345) % 1000000007) % 256 AS r,
-        |    ((c*1000003 + (200000 + p)*7919 + 12345) % 1000000007) % 256 AS g,
-        |    ((c*1000003 + (300000 + p)*7919 + 12345) % 1000000007) % 256 AS b
-        |  FROM src)
-        |SELECT c AS media_id, CAST(sum((q + 1) * (r + 2*g + 4*b)) AS BIGINT) AS checksum
-        |FROM px GROUP BY c""".stripMargin,
-    // real-WAV decode: samples re-derived from the generator hash —
-    // sample p of clip c is (h(c, 5e5+p) % 65536) - 32768, n_samples =
-    // 64 + h(c,40) % 129; checksum sums (p+1)*(s_p + 32768)
-    "m_audio_decode" ->
-      """WITH m AS (SELECT CAST(unnest(generate_series(0, 299)) AS BIGINT) AS c),
-        |ns AS (SELECT c, 64 + ((c*1000003 + CAST(40 AS BIGINT)*7919 + 12345) % 1000000007) % 129 AS ns
-        |  FROM m),
-        |ps AS (SELECT CAST(unnest(generate_series(0, 192)) AS BIGINT) AS p),
-        |sm AS (SELECT n.c, n.ns, ps.p,
-        |    ((n.c*1000003 + (500000 + ps.p)*7919 + 12345) % 1000000007) % 65536 AS su
-        |  FROM ns n CROSS JOIN ps WHERE ps.p < n.ns)
-        |SELECT c AS media_id, CAST(min(ns) AS INT) AS n_samples,
-        |       CAST(8000 AS INT) AS sample_rate,
-        |       CAST(sum((p + 1) * su) AS BIGINT) AS checksum
-        |FROM sm GROUP BY c""".stripMargin,
-    "tg_report" ->
-      s"""WITH ${SynthSql.graphCtes(OracleSf)}
-         |SELECT (SELECT count(*) FROM vertices) AS nodes,
-         |       (SELECT count(*) FROM dedges) AS edges,
-         |       (SELECT count(*) FROM dedges WHERE src = dst) AS self_loops""".stripMargin,
-    "d_jaccard_adj" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |         list_distinct(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS tk
-        |  FROM documents)
-        |SELECT a.doc_id AS doc_id,
-        |       round(CAST(len(list_intersect(a.tk, b.tk)) AS DOUBLE) /
-        |             len(list_distinct(list_concat(a.tk, b.tk))), 5) AS jaccard
-        |FROM tk a JOIN tk b ON b.doc_id = a.doc_id + 1""".stripMargin
-  )
+  def convergenceSql: Map[String, (String, String)] =
+    registry.cases.flatMap(c => c.twin.probe.map(c.name -> _)).toMap
 }

@@ -22,7 +22,7 @@ object PlanAudit {
     spark.sparkContext.setLogLevel("ERROR")
 
     def audit(name: String): Unit = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val df = SparkEntry.registry.byName(name).run(spark, sfDir)
       val plan = df.queryExecution.executedPlan.toString
       println(s"==== $name ====")
       println(plan.take(4000))
