@@ -35,24 +35,6 @@ object Louvain {
         .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
       .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("w"))
 
-  /** [[Engine.checkpoint]] plus a stats reset, for states the next
-    * round's plan references MORE THAN ONCE (the community frame rides
-    * four joins per sweep round). A checkpoint seeds the new LogicalRDD's
-    * sizeInBytes from the child plan's stats, and Catalyst's join-stats
-    * visitor multiplies children — so a state with k self-references
-    * compounds sizeInBytes bits by k× PER ROUND (measured: a 30-round
-    * sweep wedged the driver for 20+ min in BigInteger.multiply around
-    * round ~25; states with one self-reference grow linearly and never hit
-    * this). Rebuilding the frame over the checkpointed RDD resets the
-    * stats to the session default each round. Join planning is unaffected
-    * — the sweep's joins are hinted — and the Row round-trip is bounded by
-    * the state's |V| rows.
-    */
-  private def checkpointReset(df: DataFrame): DataFrame = {
-    val ck = Engine.checkpoint(df)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
   /** One synchronous first-phase sweep pass over an explicit
     * (adjacency, degree) pair — shared by the flat [[run]] and the
     * coarsened levels of [[runMultiLevel]].
@@ -88,10 +70,9 @@ object Louvain {
       ids: DataFrame, und: DataFrame, deg: DataFrame, m2: Double,
       maxRounds: Int, resolution: Double
   ): DataFrame = {
-    // comm rides FOUR joins per round — use the stats-resetting
-    // checkpoint or Catalyst's sizeInBytes product quadruples its bit
-    // length every round (see checkpointReset)
-    var comm = checkpointReset(
+    // comm rides FOUR joins per round: Engine.checkpoint's capped size
+    // estimate keeps Catalyst's sizeInBytes product from compounding
+    var comm = Engine.checkpoint(
       ids.select(col("id"), col("id").as("community")).repartition(col("id")))
     var round = 0
     var moved = 1L
@@ -132,7 +113,7 @@ object Louvain {
         .join(best.hint("shuffle_hash"), Seq("id"), "left")
         .select(col("id"), coalesce(col("newc"), col("community")).as("community"),
           (col("newc").isNotNull && col("newc") =!= col("community")).as("changed"))
-      val nextM = checkpointReset(next)
+      val nextM = Engine.checkpoint(next)
       movedPrev = moved
       moved = {
         val r = nextM.agg(sum(when(col("changed"), 1L))).head()
@@ -192,11 +173,11 @@ object Louvain {
         // coarsen: super-vertex = community id; kdeg aggregated over
         // members (keeps self-loop mass); adjacency between distinct
         // communities only
-        val cdeg = checkpointReset(
+        val cdeg = Engine.checkpoint(
           assign.join(deg, Seq("id"), "left")
             .groupBy(col("community").as("id"))
             .agg(sum(coalesce(col("kdeg"), lit(0.0))).as("kdeg")))
-        val cund = checkpointReset(
+        val cund = Engine.checkpoint(
           und
             .join(assign.select(col("id").as("src"), col("community").as("cs")).hint("shuffle_hash"), "src")
             .join(assign.select(col("id").as("dst"), col("community").as("cd")).hint("shuffle_hash"), "dst")
@@ -206,7 +187,7 @@ object Louvain {
         val cids = cdeg.select(col("id"))
         val cassign = sweep(cids, cund, cdeg, m2, roundsPerLevel, resolution)
         // compose: orig -> community -> super-community
-        assign = checkpointReset(
+        assign = Engine.checkpoint(
           assign.join(
             cassign.select(col("id").as("community"), col("community").as("cc")).hint("shuffle_hash"),
             Seq("community"))

@@ -1,9 +1,9 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Engine, Superstep}
+import graft.engine.{Engine, Pregel, Superstep}
 import graft.engine.Engine.MetricsLog
 import graft.graph.LinkGraph
 
@@ -13,10 +13,10 @@ import graft.graph.LinkGraph
   * weight property, frontier-driven (only vertices whose distance improved
   * re-relax), until no distance changes. Unreachable vertices report null.
   *
-  * Spark shape mirrors WCC: frontier join on src (co-partitioned, no
-  * exchange on the edge side) → `min(dist + w)` per dst (partial agg) →
-  * one [[Superstep]] job that checkpoints the state and counts the
-  * changed vertices.
+  * Spark shape: the [[Pregel.relax]] frontier loop WCC runs — frontier
+  * join on src (co-partitioned, no exchange on the edge side) →
+  * `min(dist + w)` per dst (partial agg) → one [[Superstep]] job that
+  * checkpoints the state and counts the changed vertices.
   */
 object SSSP {
 
@@ -25,36 +25,17 @@ object SSSP {
       g: LinkGraph,
       sourceOid: String,
       log: MetricsLog = new MetricsLog
-  ): DataFrame = Superstep.run(g.vertices.sparkSession, log = log) {
-    val e = Engine.checkpoint(g.edges.toDF.select(col("src"), col("dst"), col("weight"))
-      .repartition(col("src")))
-    val eCount = e.count()
-    // the state carries last round's `changed` flag; the frontier is the
-    // changed rows, initially the source
-    Superstep.Loop(
-      init = g.vertices.toDF
-        .select(col("id"), when(col("oid") === sourceOid, 0.0).otherwise(lit(null)).as("dist"))
-        .select(col("id"), col("dist"), col("dist").isNotNull.as("changed"))
-        .repartition(col("id")),
-      scalars = Superstep.UntilUnchanged.scalars,
-      step = (state, _) => {
-        val msgs = e
-          .join(state.where(col("changed"))
-            .select(col("id").as("src"), col("dist").as("sd")).hint("shuffle_hash"), "src")
-          .groupBy(col("dst").as("id"))
-          .agg(min(col("sd") + col("weight")).as("nd"))
-        val improved = col("nd").isNotNull && (col("dist").isNull || col("nd") < col("dist"))
-        state
-          .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
-          .select(col("id"), when(improved, col("nd")).otherwise(col("dist")).as("dist"),
-            improved.as("changed"))
-      },
-      stats = Superstep.UntilUnchanged.stats,
-      fold = Superstep.UntilUnchanged.fold,
-      halt = Superstep.UntilUnchanged.halt,
-      edges = eCount,
-      result = (state, _) => state.select(col("id"), col("dist")))
-  }
+  ): DataFrame =
+    Pregel.run(g.vertices.toDF, g.edges.toDF.select(col("src"), col("dst"), col("weight")),
+      program(when(col("oid") === sourceOid, 0.0)), log)
+      .select(col("id"), col("state").as("dist"))
+
+  /** The relaxation as a vertex program: `init` is the distance before
+    * round 1 (0.0 at the sources, null elsewhere); a vertex sends
+    * `dist + weight` along its out-edges.
+    */
+  def program(init: Column, maxIter: Int = Int.MaxValue): Pregel.Program =
+    Pregel.relax(init, col("state") + col("weight"), maxIter)
 
   /** Batched multi-source SSSP: ALL sources relax simultaneously with
     * state keyed by (source s, vertex id) — the same batching shape as
@@ -155,37 +136,11 @@ object BFSGeneric {
   */
 object BFS {
 
-  def run(g: LinkGraph, sourceOid: String): DataFrame = {
-    val spark = g.vertices.sparkSession
-    Superstep.run(spark) {
-      val e = Engine.checkpoint(g.edges.toDF.select(col("src"), col("dst"))
-        .repartition(col("src")))
-      e.count()
-      Superstep.Loop(
-        init = g.vertices.toDF
-          .select(col("id"), when(col("oid") === sourceOid, 0L).otherwise(lit(null)).as("level"))
-          .select(col("id"), col("level"), col("level").isNotNull.as("changed"))
-          .repartition(col("id")),
-        scalars = Superstep.UntilUnchanged.scalars + ("level" -> 0.0),
-        step = (state, s) => {
-          // iteration-varying scalar via a 1-row frame (identical
-          // codegen every superstep; see Engine.scalar)
-          val nl = Engine.scalarLong(spark, "__nl", s("level").toLong + 1L)
-          val msgs = e
-            .join(state.where(col("changed")).select(col("id").as("src")).hint("shuffle_hash"), "src")
-            .select(col("dst").as("id")).distinct()
-          state
-            .join(msgs.withColumn("__hit", lit(true)).hint("shuffle_hash"), Seq("id"), "left")
-            .crossJoin(nl)
-            .select(
-              col("id"),
-              when(col("level").isNull && col("__hit"), col("__nl")).otherwise(col("level")).as("level"),
-              (col("level").isNull && col("__hit").isNotNull && col("__hit")).as("changed"))
-        },
-        stats = Superstep.UntilUnchanged.stats,
-        fold = (r, s) => Superstep.UntilUnchanged.fold(r, s) + ("level" -> (s("level") + 1)),
-        halt = Superstep.UntilUnchanged.halt,
-        result = (state, _) => state.select(col("id"), col("level")))
-    }
-  }
+  /** Returns (id: Long, level: Long nullable): a vertex sends
+    * `level + 1` along its out-edges, and the first (least) level wins.
+    */
+  def run(g: LinkGraph, sourceOid: String): DataFrame =
+    Pregel.run(g.vertices.toDF, g.edges.toDF.select(col("src"), col("dst")),
+      Pregel.relax(when(col("oid") === sourceOid, 0L), col("state") + 1L))
+      .select(col("id"), col("state").as("level"))
 }

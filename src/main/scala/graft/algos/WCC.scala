@@ -3,7 +3,7 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.{CheckpointConfig, Engine, Superstep}
+import graft.engine.{CheckpointConfig, Pregel}
 import graft.engine.Engine.MetricsLog
 import graft.graph.LinkGraph
 
@@ -16,9 +16,9 @@ import graft.graph.LinkGraph
   * ids are exact (deterministic min of dense ids = min oid per component,
   * since dense ids are oid-sorted ranks).
   *
-  * Spark shape: symmetrized edge table persisted once; each superstep
-  * scatters from the *changed* frontier only (the reference's
-  * `curr_modified` set) — a join of edges against the frontier, then
+  * Spark shape: a [[Pregel.relax]] program over the symmetrized edge
+  * table. Only the *changed* frontier sends (the reference's
+  * `curr_modified` set): a join of edges against the frontier, then
   * partial+final `min` per destination (hub skew absorbed by map-side
   * combine), then one [[Superstep]] job that checkpoints the state and
   * counts the changed vertices.
@@ -33,39 +33,19 @@ object WCC {
       maxIter: Int = Int.MaxValue,
       log: MetricsLog = new MetricsLog,
       ckpt: Option[CheckpointConfig] = None
-  ): DataFrame = Superstep.run(g.vertices.sparkSession, maxIter, log, ckpt) {
-    val und = Engine.checkpoint(g.edges.toDF
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"))
-      .unionAll(g.edges.toDF.where(col("src") =!= col("dst"))
-        .select(col("dst").as("src"), col("src").as("dst")))
+  ): DataFrame =
+    Pregel.run(g.vertices.toDF, symmetrized(g),
+      Pregel.relax(init = col("id"), message = col("state"), maxIter), log, ckpt)
+      .select(col("id"), col("state").as("comp"))
+
+  /** The undirected closure's edge table: every non-loop edge in both
+    * directions, once per `(src, dst)` pair.
+    */
+  def symmetrized(g: LinkGraph): DataFrame = {
+    val e = g.edges.toDF.where(col("src") =!= col("dst"))
+    e.select(col("src"), col("dst"))
+      .unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .repartition(col("src")))
-    val undCount = und.count()
-    // The state carries last round's `changed` flag: the frontier is the
-    // changed rows, initially all.
-    Superstep.Loop(
-      init = g.vertices.toDF.select(col("id"), col("id").as("comp"), lit(true).as("changed"))
-        .repartition(col("id")),
-      scalars = Superstep.UntilUnchanged.scalars,
-      step = (state, _) => {
-        val msgs = und
-          .join(state.where(col("changed"))
-            .select(col("id").as("src"), col("comp").as("scomp")).hint("shuffle_hash"), "src")
-          .groupBy(col("dst").as("id"))
-          .agg(min(col("scomp")).as("mc"))
-        state
-          .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
-          .select(
-            col("id"),
-            least(col("comp"), coalesce(col("mc"), col("comp"))).as("comp"),
-            (col("mc").isNotNull && col("mc") < col("comp")).as("changed"))
-      },
-      stats = Superstep.UntilUnchanged.stats,
-      fold = Superstep.UntilUnchanged.fold,
-      halt = Superstep.UntilUnchanged.halt,
-      edges = undCount,
-      result = (state, _) => state.select(col("id"), col("comp")))
   }
 
   /** Canonicalized output for cross-engine comparison: component labeled

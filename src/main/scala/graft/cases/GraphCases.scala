@@ -113,19 +113,13 @@ object GraphCases {
         .join(g.vertices.toDF.select(col("id").as("label"), col("oid").as("label_oid")), Seq("label"))
         .select("oid", "label_oid")
     },
-    // the Pregel vertex-program UDF surface (engine/Pregel.scala) driven
-    // through the SAME HashMin-WCC oracle as tg_wcc — a second engine
-    // path must reach the identical fixpoint
+    // the Pregel vertex-program UDF surface (engine/Pregel.scala) with a
+    // hand-written HashMin program over WCC's symmetrized edges, driven
+    // through the SAME oracle as tg_wcc
     query("tg_pregel_wcc", wcc.sql) { (s, dir) =>
       val g = graphFor(s, dir)
       import s.implicits._
-      val und = g.edges.toDF.where(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"))
-        .unionAll(g.edges.toDF.where(col("src") =!= col("dst"))
-          .select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .select(col("src"), col("dst"), lit(1.0).as("weight"))
-        .as[Edge]
+      val und = WCC.symmetrized(g).withColumn("weight", lit(1.0)).as[Edge]
       val comps = Pregel.run(
         LinkGraph(g.vertices, und),
         Pregel.Program(

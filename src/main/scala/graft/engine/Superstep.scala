@@ -94,7 +94,7 @@ object Superstep {
     loop.result(state, s)
   }
 
-  /** Convergence of the frontier loops (WCC, SSSP, BFS, Pregel): the
+  /** Convergence of the frontier loops ([[Pregel]], `SSSP.multiSource`): the
     * state carries a boolean `changed` column, the frontier is its changed
     * rows, a round's stats count them (also logged as the round's delta),
     * and the loop halts after a round that changed nothing.

@@ -3,7 +3,7 @@ package graft.gie
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Adjacency, Engine}
+import graft.engine.{Adjacency, Engine, Pregel}
 import graft.graph.{LinkGraph, PropertyGraph}
 
 /** Graph handle for the traversal plane. Plain graphs come from
@@ -670,38 +670,19 @@ final class Traversal private[gie] (
 
   /** Weighted ShortestPathExpand (`algebra.proto:302` with the weight
     * property as the distance metric, vs [[shortestPathExpand]]'s
-    * hop-count form): SSSP relaxation from the current traverser SET —
-    * every reachable vertex at its minimum total edge weight over all
-    * starts, `__dist` (the start set itself at 0.0). Sparse
-    * frontier-driven state, one message exchange per round, same shape
-    * as `SSSP.run`.
+    * hop-count form): the [[graft.algos.SSSP.program]] relaxation from
+    * the current traverser SET for at most `maxRounds` rounds — every
+    * reachable vertex at its minimum total edge weight over all starts,
+    * `__dist` (the start set itself at 0.0). It relaxes over the raw edge
+    * rows, so a labeled graph's pair takes its lightest per-label row.
     */
   def weightedShortestPathExpand(maxRounds: Int = 64): Traversal = {
-    val rel = edges.select(col("src").as("__v"), col("dst"), col("weight"))
-    var state = Engine.checkpoint(
-      df.select(col("__v")).distinct().withColumn("__dist", lit(0.0)))
-    var frontier = state
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
-      round += 1
-      val msgs = frontier.join(rel, Seq("__v"))
-        .groupBy(col("dst").as("__v"))
-        .agg(min(col("__dist") + col("weight")).as("nd"))
-      val upd = Engine.checkpoint(
-        msgs.join(state.withColumnRenamed("__dist", "old").hint("shuffle_hash"),
-          Seq("__v"), "left")
-          .where(col("old").isNull || col("nd") < col("old"))
-          .select(col("__v"), col("nd").as("__dist")))
-      changed = upd.rdd.count()
-      if (changed > 0) {
-        state = Engine.checkpoint(
-          state.join(upd.select(col("__v")), Seq("__v"), "left_anti").unionByName(upd))
-        state.rdd.count()
-        frontier = upd
-      }
-    }
-    next(state)
+    val starts = df.select(col("__v").as("id"), lit(0.0).as("__d")).distinct()
+    val dist = Pregel.run(
+      g.vertices.select(col("id")).join(starts, Seq("id"), "left"),
+      edges.select(col("src"), col("dst"), col("weight")),
+      graft.algos.SSSP.program(col("__d"), maxRounds))
+    next(dist.where(col("state").isNotNull).select(col("id").as("__v"), col("state").as("__dist")))
   }
 
   /** Declarative Pattern/match (`algebra.proto:350`; reference planner

@@ -456,16 +456,22 @@ object SynthSql3 {
 
   /** 2-hop EdgeExpand chain with a mid-hop Select: user → agent → any,
     * path-multiplicity counts per endpoint oid (traverser multiplicity
-    * is preserved through EdgeExpand, as in Gremlin/GIE).
+    * is preserved through EdgeExpand, as in Gremlin/GIE). The first hop
+    * is filtered and counted per middle vertex before the second hop
+    * joins it, so no unfiltered edge pair is ever built.
     */
   def gie2hopSql(sf: Double): String =
-    s"""WITH ${SynthSql.graphCtes(sf)}
-       |SELECT vd.oid AS oid, count(*) AS n
-       |FROM dedges e1 JOIN dedges e2 ON e1.dst = e2.src
-       |JOIN vertices vs ON vs.id = e1.src
-       |JOIN vertices vm ON vm.id = e1.dst
+    s"""WITH ${SynthSql.graphCtes(sf)},
+       |hop1 AS (
+       |  SELECT e1.dst AS mid, count(*) AS c
+       |  FROM dedges e1
+       |  JOIN vertices vs ON vs.id = e1.src
+       |  JOIN vertices vm ON vm.id = e1.dst
+       |  WHERE vs.oid LIKE 'u%' AND vm.oid LIKE 'agent:%'
+       |  GROUP BY e1.dst)
+       |SELECT vd.oid AS oid, CAST(sum(h.c) AS BIGINT) AS n
+       |FROM hop1 h JOIN dedges e2 ON e2.src = h.mid
        |JOIN vertices vd ON vd.id = e2.dst
-       |WHERE vs.oid LIKE 'u%' AND vm.oid LIKE 'agent:%'
        |GROUP BY vd.oid""".stripMargin
 
   /** First-visit level chain shared by the PathExpand /

@@ -63,6 +63,23 @@ class Algo2Spec extends SparkSpec {
     (0 until n).foreach(i => assert(got(i) == want(i), s"vertex $i: ${got(i)} vs ${want(i)}"))
   }
 
+  test("kcore and kshell: isolated vertices, a clique with a tail, a core above the max degree") {
+    // K4 on 0..3 (one edge given both ways, plus a self-loop), the tail
+    // 3-4-5-6, and isolated 7 and 8
+    val fixture = Seq((0, 1), (1, 0), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (2, 2),
+      (3, 4), (5, 4), (5, 6))
+    val gf = graphFrom(9, fixture)
+    def core(k: Int) = Cores.kcore(gf, k).collect().map(r => r.getLong(0).toInt -> r.getLong(1).toInt).toMap
+    val k4 = Map(0 -> 3, 1 -> 3, 2 -> 3, 3 -> 3)
+    assert(core(1) == Map(0 -> 3, 1 -> 3, 2 -> 3, 3 -> 4, 4 -> 2, 5 -> 2, 6 -> 1))
+    assert(core(2) == k4 && core(3) == k4)
+    assert(core(4).isEmpty && core(10).isEmpty)
+    Seq(1, 2, 3, 4, 10).foreach(k => assert(core(k) == Oracle2.kcore(9, fixture, k), s"k = $k"))
+    val shells = Cores.kshell(gf).collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    assert(shells == Map(0 -> 3L, 1 -> 3L, 2 -> 3L, 3 -> 3L, 4 -> 1L, 5 -> 1L, 6 -> 1L, 7 -> 0L, 8 -> 0L))
+    assert(shells == Oracle2.kshell(9, fixture).zipWithIndex.map { case (sh, v) => v -> sh }.toMap)
+  }
+
   test("lcc + avg clustering + transitivity match oracle") {
     val got = Clustering.lcc(g).collect().map(r => r.getLong(0).toInt -> r.getDouble(1)).toMap
     val want = Oracle2.lcc(n, edges)

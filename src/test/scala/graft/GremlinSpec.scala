@@ -483,6 +483,15 @@ class GremlinSpec extends SparkSpec {
     graft.graph.PropertyGraph(vs, es)
   }
 
+  test("weightedShortestPathExpand takes the lightest per-label row of a pair") {
+    // a0 → t0 has a reply row of weight 1.0 and an invoke row of 3.0: the
+    // distance is the minimum row (1.0), not their sum (4.0, which the
+    // a0 → a1 → t0 detour of 2.0 would then undercut)
+    val got = G.V(pg, col("oid") === "a0").weightedShortestPathExpand()
+      .auxilia().df.select(col("oid"), col("__dist"))
+    assert(rows(got) == Set("a0|0.0", "a1|1.0", "t0|1.0"))
+  }
+
   test("hasLabel scan + label-filtered expand over a labeled graph") {
     val got = Gremlin.run(pg,
       "g.V().hasLabel('user').out('reply').groupCount().by('label')")

@@ -35,9 +35,26 @@ class PregelMmSpec extends SparkSpec {
       message = col("state"),
       combine = c => sum(c),
       update = lit(1.0) + coalesce(col("msg"), lit(0.0)),
-      maxIter = 1, haltOnNoChange = false)
+      maxIter = 1)
     val got = Pregel.run(g, prog).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got == Map(0L -> 2.0, 1L -> 2.0, 2L -> 2.0, 3L -> 2.0))
+  }
+
+  test("pregel vote-to-halt: a vertex whose state did not change sends nothing") {
+    // 0 → 1 → 2, each vertex adds the messages it receives to its state.
+    // Round 1: every vertex sends 1.0; 0 receives nothing and keeps 1.0,
+    // 1 and 2 become 2.0. Round 2: only 1 and 2 send, so 1 keeps 2.0 and
+    // 2 becomes 4.0. Round 3: only 2 sends (to no one); nothing changes.
+    // Were unchanged vertices still sending, 1 and 2 would keep growing.
+    val g = graphFrom(3, Seq((0, 1), (1, 2)))
+    val prog = Pregel.Program(
+      init = lit(1.0),
+      message = col("state"),
+      combine = c => sum(c),
+      update = col("state") + coalesce(col("msg"), lit(0.0)),
+      maxIter = 10)
+    val got = Pregel.run(g, prog).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got == Map(0L -> 1.0, 1L -> 2.0, 2L -> 4.0))
   }
 
   test("lpau2i diffuses weighted label vectors on a bipartite graph") {

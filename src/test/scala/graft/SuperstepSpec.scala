@@ -41,6 +41,19 @@ class SuperstepSpec extends SparkSpec {
     assert((fixed, tol, wcc, cdlp) == ((1.0, 1.0, 1.0, 1.0)))
   }
 
+  test("one Spark job per round: SSSP, BFS, kcore, kshell") {
+    // these take no round limit, so the round count comes from the graph:
+    // from v0 down a path of k + 1 vertices SSSP and BFS run k + 1 rounds;
+    // on a path of 2k vertices the 2-core peels both ends each round (k
+    // rounds) and kshell first raises k once (k + 1 rounds)
+    def path(n: Int) = graphFrom(n, (0 until n - 1).map(i => (i, i + 1)))
+    val sssp = jobsPerRound("sssp") { k => graft.algos.SSSP.run(path(k + 1), "v000000").collect() }
+    val bfs = jobsPerRound("bfs") { k => graft.algos.BFS.run(path(k + 1), "v000000").collect() }
+    val kcore = jobsPerRound("kcore") { k => graft.algos.Cores.kcore(path(2 * k), 2).collect() }
+    val kshell = jobsPerRound("kshell") { k => graft.algos.Cores.kshell(path(2 * k)).collect() }
+    assert((sssp, bfs, kcore, kshell) == ((1.0, 1.0, 1.0, 1.0)))
+  }
+
   /** Runs `f` and returns the executed plans of the queries it ran, in
     * order (a lazy checkpoint reports its plan as `localCheckpoint`).
     */
