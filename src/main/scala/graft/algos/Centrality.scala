@@ -30,41 +30,48 @@ object Centrality {
     d.select(col("id"), (expr.cast("double") / (n - 1).toDouble).as("centrality"))
   }
 
-  /** Keeps its own loop: a round takes two aggregates in sequence (the L2
-    * norm of the raw vector, then the L1 delta of the normalized one), so
-    * it cannot be one [[Superstep]] round without changing when it halts.
+  /** One [[Superstep]] round per iteration, normalization deferred as in
+    * [[HITS]]: round k + 1 divides iteration k's raw vector by the L2 norm
+    * round k's stats row folded, and carries the result `x` with its L1
+    * delta `d`, so a tol stop returns the carried `x`.
     */
   def eigenvector(g: LinkGraph, maxIter: Int = 100, tol: Double = 1e-6): DataFrame = {
-    val e = Engine.checkpoint(g.edges.toDF.select(col("src"), col("dst"))
-      .repartition(col("src")))
-    e.count()
-    val n = g.numVertices
-    var x = Engine.checkpoint(
-      g.vertices.toDF.select(col("id"), lit(1.0 / n).as("x")).repartition(col("id")))
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < maxIter && delta >= n * tol) {
-      val msg = e
-        .join(x.select(col("id").as("src"), col("x").as("sx")).hint("shuffle_hash"), "src")
-        .groupBy(col("dst").as("id")).agg(sum(col("sx")).as("m"))
-      val raw = x.join(msg.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"), (col("x") + coalesce(col("m"), lit(0.0))).as("raw"), col("x").as("prev"))
-      val rawM = Engine.checkpoint(raw)
-      val norm = {
-        val r = rawM.agg(sum(col("raw") * col("raw"))).head()
-        val v = if (r.isNullAt(0)) 0.0 else math.sqrt(r.getDouble(0))
-        if (v == 0.0) 1.0 else v
-      }
-      val nextM = Engine.checkpoint(
-        rawM.select(col("id"), (col("raw") / norm).as("x"), col("prev")))
-      delta = {
-        val r = nextM.agg(sum(abs(col("x") - col("prev")))).head()
-        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      }
-      x = nextM.select(col("id"), col("x"))
-      iter += 1
+    val spark = g.vertices.sparkSession
+    Superstep.run(spark, maxIter) {
+      val e = Engine.checkpoint(g.edges.toDF.select(col("src"), col("dst"))
+        .repartition(col("src")))
+      val eCount = e.count()
+      val n = g.numVertices
+      def normalized(state: DataFrame, s: Superstep.Scalars): DataFrame = state
+        .crossJoin(Engine.scalar(spark, "__norm", s("norm")))
+        .select(col("id"), (col("raw") / col("__norm")).as("xN"), col("x").as("prev"))
+      Superstep.Loop(
+        // x starts at 1/n (not unit length); round 0's delta reads the
+        // null `x` and stays unknown
+        init = g.vertices.toDF.select(col("id"), lit(1.0 / n).as("raw"),
+          lit(null).cast("double").as("x")).repartition(col("id")),
+        scalars = Map("norm" -> 1.0, "delta" -> Double.MaxValue),
+        step = (state, s) => {
+          val prev = normalized(state, s)
+          val msg = e
+            .join(prev.select(col("id").as("src"), col("xN").as("sx")).hint("shuffle_hash"), "src")
+            .groupBy(col("dst").as("id")).agg(sum(col("sx")).as("m"))
+          prev.join(msg.hint("shuffle_hash"), Seq("id"), "left")
+            .select(col("id"), (col("xN") + coalesce(col("m"), lit(0.0))).as("raw"),
+              col("xN").as("x"), abs(col("xN") - col("prev")).as("d"))
+        },
+        stats = _.agg(sum(col("raw") * col("raw")), sum(col("d"))),
+        fold = (r, _) => {
+          val norm = math.sqrt(Superstep.orZero(r, 0))
+          Map("norm" -> (if (norm == 0.0) 1.0 else norm),
+            "delta" -> (if (r.isNullAt(1)) Double.MaxValue else r.getDouble(1)))
+        },
+        halt = _("delta") < n * tol,
+        edges = eCount,
+        result = (state, s) =>
+          if (s("delta") < n * tol) state.select(col("id"), col("x").as("centrality"))
+          else normalized(state, s).select(col("id"), col("xN").as("centrality")))
     }
-    x.withColumnRenamed("x", "centrality")
   }
 
   def katz(

@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.engine.Engine
+import graft.engine.{Engine, Superstep}
 import graft.graph.LinkGraph
 
 /** Louvain-style modularity community detection (reference
@@ -35,11 +34,11 @@ object Louvain {
         .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
       .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("w"))
 
-  /** One synchronous first-phase sweep pass over an explicit
-    * (adjacency, degree) pair — shared by the flat [[run]] and the
-    * coarsened levels of [[runMultiLevel]].
+  /** One synchronous first-phase sweep over an explicit (adjacency,
+    * degree) pair — one [[Superstep]] loop per level of [[runMultiLevel]].
     *
-    * @param und  symmetric self-loop-free adjacency (src, dst, w)
+    * @param und  symmetric self-loop-free adjacency (src, dst, w),
+    *             hash-partitioned by src
     * @param deg  per-vertex modularity degree (id, kdeg). At coarse
     *             levels this INCLUDES intra-community (self-loop)
     *             weight — kdeg of a super-vertex is the sum of its
@@ -69,77 +68,63 @@ object Louvain {
   private def sweep(
       ids: DataFrame, und: DataFrame, deg: DataFrame, m2: Double,
       maxRounds: Int, resolution: Double
-  ): DataFrame = {
-    // comm rides FOUR joins per round: Engine.checkpoint's capped size
-    // estimate keeps Catalyst's sizeInBytes product from compounding
-    var comm = Engine.checkpoint(
-      ids.select(col("id"), col("id").as("community")).repartition(col("id")))
-    var round = 0
-    var moved = 1L
-    var movedPrev = 1L
-    while (round < maxRounds && (moved > 0 || movedPrev > 0)) {
-      val commTot = comm.join(deg, Seq("id"), "left")
-        .groupBy(col("community"))
-        .agg(sum(coalesce(col("kdeg"), lit(0.0))).as("tot"))
-      // weight from each vertex to each neighbor community
-      val wvc = und
-        .join(comm.select(col("id").as("dst"), col("community").as("c")).hint("shuffle_hash"), "dst")
-        .groupBy(col("src").as("id"), col("c"))
-        .agg(sum(col("w")).as("wvc"))
-      val cand = wvc
-        .join(deg, Seq("id"))
-        .join(comm, Seq("id")) // current community
-        .join(commTot.withColumnRenamed("community", "c"), Seq("c"))
-        .select(col("id"), col("c"), col("community"),
-          (col("wvc") - lit(resolution) * col("kdeg") *
-            (col("tot") - when(col("c") === col("community"), col("kdeg")).otherwise(0.0)) / m2)
-            .as("gain"))
-      // round parity rides a 1-row frame, not a lit(): an
-      // iteration-varying literal would recompile codegen every round
-      // (project invariant; see Engine.scalar)
-      val parity = Engine.scalarLong(ids.sparkSession, "__par", (round % 2).toLong)
-      val best = cand
-        .groupBy(col("id"))
-        .agg(max(struct(col("gain"), (-col("c")).as("negc"), col("c").as("cc"))).as("m"),
-          max(when(col("c") === col("community"), col("gain"))).as("stay"),
-          first(col("community")).as("cur"))
-        .crossJoin(parity)
-        .select(col("id"),
-          when(pmod(col("id"), lit(2L)) === col("__par") &&
-            col("m.gain") > coalesce(col("stay"), lit(0.0)) + lit(1e-12), col("m.cc"))
-            .otherwise(col("cur")).as("newc"),
-          col("cur"))
-      val next = comm
-        .join(best.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("newc"), col("community")).as("community"),
-          (col("newc").isNotNull && col("newc") =!= col("community")).as("changed"))
-      val nextM = Engine.checkpoint(next)
-      movedPrev = moved
-      moved = {
-        val r = nextM.agg(sum(when(col("changed"), 1L))).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
-      comm = nextM.select(col("id"), col("community"))
-      round += 1
-    }
-    comm
+  ): DataFrame = Superstep.run(ids.sparkSession, maxRounds) {
+    Superstep.Loop(
+      init = ids.select(col("id"), col("id").as("community"), lit(false).as("changed"))
+        .repartition(col("id")),
+      scalars = Map("round" -> 0.0, "moved" -> 1.0, "movedPrev" -> 1.0),
+      // the state rides four joins per round: Engine.checkpoint's capped
+      // size estimate keeps Catalyst's sizeInBytes product from compounding
+      step = (state, s) => {
+        // every join is hinted: a broadcast would cost a job of its own
+        val comm = state.select(col("id"), col("community"))
+          .join(deg.hint("shuffle_hash"), Seq("id"), "left")
+        val commTot = comm.groupBy(col("community"))
+          .agg(sum(coalesce(col("kdeg"), lit(0.0))).as("tot"))
+        val neighbor = comm.join(commTot.hint("shuffle_hash"), Seq("community"))
+          .select(col("id").as("src"), col("community").as("c"), col("tot"))
+        // weight from each vertex to each neighbor community: `und` is
+        // symmetric, so a vertex's weights are the rows whose dst it is,
+        // and the join stays co-partitioned with `und` on src
+        val cand = und
+          .join(neighbor.hint("shuffle_hash"), "src")
+          .groupBy(col("dst").as("id"), col("c"), col("tot"))
+          .agg(sum(col("w")).as("wvc"))
+          .join(comm.hint("shuffle_hash"), Seq("id")) // current community and kdeg
+          .select(col("id"), col("c"), col("community"),
+            (col("wvc") - lit(resolution) * col("kdeg") *
+              (col("tot") - when(col("c") === col("community"), col("kdeg")).otherwise(0.0)) / m2)
+              .as("gain"))
+        // round parity rides a 1-row frame, not a lit(): an
+        // iteration-varying literal would recompile codegen every round
+        // (project invariant; see Engine.scalar)
+        val parity = Engine.scalarLong(ids.sparkSession, "__par", s("round").toLong % 2)
+        val best = cand
+          .groupBy(col("id"))
+          .agg(max(struct(col("gain"), (-col("c")).as("negc"), col("c").as("cc"))).as("m"),
+            max(when(col("c") === col("community"), col("gain"))).as("stay"),
+            first(col("community")).as("cur"))
+          .crossJoin(parity)
+          .select(col("id"),
+            when(pmod(col("id"), lit(2L)) === col("__par") &&
+              col("m.gain") > coalesce(col("stay"), lit(0.0)) + lit(1e-12), col("m.cc"))
+              .otherwise(col("cur")).as("newc"),
+            col("cur"))
+        comm
+          .join(best.hint("shuffle_hash"), Seq("id"), "left")
+          .select(col("id"), coalesce(col("newc"), col("community")).as("community"),
+            (col("newc").isNotNull && col("newc") =!= col("community")).as("changed"))
+      },
+      stats = _.agg(sum(when(col("changed"), 1L))),
+      fold = (r, s) => Map("round" -> (s("round") + 1), "moved" -> Superstep.orZero(r, 0),
+        "movedPrev" -> s("moved"), "delta" -> Superstep.orZero(r, 0)),
+      halt = s => s("moved") == 0 && s("movedPrev") == 0,
+      result = (state, _) => state.select(col("id"), col("community")))
   }
 
   /** Returns (id, community) — single-level synchronous sweeps. */
-  def run(g: LinkGraph, maxRounds: Int = 10, resolution: Double = 1.0): DataFrame = {
-    val spark = g.vertices.sparkSession
-    Engine.withoutAQE(spark) {
-      val und = Engine.checkpoint(symmetrize(g).repartition(col("src")))
-      val m2 = und.agg(sum(col("w"))).head() match {
-        case r if r.isNullAt(0) => 1.0
-        case r => r.getDouble(0)
-      }
-      val deg = Engine.checkpoint(und.groupBy(col("src").as("id")).agg(sum(col("w")).as("kdeg")))
-      deg.count()
-      val comm = sweep(g.vertices.toDF.select(col("id")), und, deg, m2, maxRounds, resolution)
-      comm
-    }
-  }
+  def run(g: LinkGraph, maxRounds: Int = 10, resolution: Double = 1.0): DataFrame =
+    runMultiLevel(g, maxRounds, levels = 1, resolution)
 
   /** Multi-level Louvain (the reference's phase-2 structure,
     * `louvain_app_base.h:43`): sweep, then compress each community into
@@ -158,18 +143,16 @@ object Louvain {
   ): DataFrame = {
     val spark = g.vertices.sparkSession
     Engine.withoutAQE(spark) {
-      var und = Engine.checkpoint(symmetrize(g).repartition(col("src")))
+      val und = Engine.checkpoint(symmetrize(g).repartition(col("src")))
       val m2 = und.agg(sum(col("w"))).head() match {
         case r if r.isNullAt(0) => 1.0
         case r => r.getDouble(0)
       }
-      var deg = Engine.checkpoint(und.groupBy(col("src").as("id")).agg(sum(col("w")).as("kdeg")))
+      val deg = Engine.checkpoint(und.groupBy(col("src").as("id")).agg(sum(col("w")).as("kdeg")))
       deg.count()
-      var ids = g.vertices.toDF.select(col("id"))
       // orig vertex -> current community (composed across levels)
-      var assign = sweep(ids, und, deg, m2, roundsPerLevel, resolution)
-      var level = 1
-      while (level < levels) {
+      val assign = sweep(g.vertices.toDF.select(col("id")), und, deg, m2, roundsPerLevel, resolution)
+      (1 until levels).foldLeft((assign, und, deg)) { case ((assign, und, deg), _) =>
         // coarsen: super-vertex = community id; kdeg aggregated over
         // members (keeps self-loop mass); adjacency between distinct
         // communities only
@@ -183,29 +166,23 @@ object Louvain {
             .join(assign.select(col("id").as("dst"), col("community").as("cd")).hint("shuffle_hash"), "dst")
             .where(col("cs") =!= col("cd"))
             .groupBy(col("cs").as("src"), col("cd").as("dst"))
-            .agg(sum(col("w")).as("w")))
-        val cids = cdeg.select(col("id"))
-        val cassign = sweep(cids, cund, cdeg, m2, roundsPerLevel, resolution)
+            .agg(sum(col("w")).as("w"))
+            .repartition(col("src")))
+        val cassign = sweep(cdeg.select(col("id")), cund, cdeg, m2, roundsPerLevel, resolution)
         // compose: orig -> community -> super-community
-        assign = Engine.checkpoint(
+        val composed = Engine.checkpoint(
           assign.join(
             cassign.select(col("id").as("community"), col("community").as("cc")).hint("shuffle_hash"),
             Seq("community"))
             .select(col("id"), col("cc").as("community")))
-        und = cund; deg = cdeg
-        level += 1
-      }
-      assign
+        (composed, cund, cdeg)
+      }._1
     }
   }
 
   /** Modularity of a community assignment. */
   def modularity(g: LinkGraph, comm: DataFrame, resolution: Double = 1.0): Double = {
-    val und = Engine.checkpoint(g.edges.toDF.where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("weight"))
-      .unionAll(g.edges.toDF.where(col("src") =!= col("dst"))
-        .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-      .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("w")))
+    val und = Engine.checkpoint(symmetrize(g))
     val m2 = und.agg(sum(col("w"))).head().getDouble(0)
     val in = und
       .join(comm.select(col("id").as("src"), col("community").as("cs")), "src")

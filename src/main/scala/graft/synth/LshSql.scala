@@ -238,28 +238,27 @@ object LshSql {
     * per subspace (the IVF init policy), encode by integer-scaled
     * sub-L2² argmin (ties → smaller centroid id), ADC score = Σ over
     * subspaces of integer-scaled sub-dots — order-free integer sums,
-    * so no float summation order crosses engines.
+    * so no float summation order crosses engines. The subspace width
+    * `sw` is the vector dimension over `m`, read from the data.
     */
-  def pqTopKSql(queryIds: Seq[Long], k: Int,
-                m: Int = 8, nCentroids: Int = 16, dim: Int = 64): String = {
+  def pqTopKSql(queryIds: Seq[Long], k: Int, m: Int = 8, nCentroids: Int = 16): String = {
     val ids = queryIds.mkString(", ")
-    val sw = dim / m
     val d2i =
-      s"""CAST(floor(list_aggregate(list_transform(generate_series(1, $sw),
-         | i -> (v[j*$sw+i] - cvj[i]) * (v[j*$sw+i] - cvj[i])), 'sum') * 100000.0 + 0.5) AS BIGINT)"""
+      """CAST(floor(list_aggregate(list_transform(generate_series(1, cb.sw),
+         | i -> (v[cb.j*cb.sw+i] - cvj[i]) * (v[cb.j*cb.sw+i] - cvj[i])), 'sum') * 100000.0 + 0.5) AS BIGINT)"""
         .stripMargin.replace("\n", " ")
     val sji =
-      s"""CAST(floor(list_aggregate(list_transform(generate_series(1, $sw),
-         | i -> qv[cb.j*$sw+i] * cvj[i]), 'sum') * 100000.0 + 0.5) AS BIGINT)"""
+      """CAST(floor(list_aggregate(list_transform(generate_series(1, cb.sw),
+         | i -> qv[cb.j*cb.sw+i] * cvj[i]), 'sum') * 100000.0 + 0.5) AS BIGINT)"""
         .stripMargin.replace("\n", " ")
     s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |nn AS (SELECT count(*) AS n FROM e),
+       |nn AS (SELECT count(*) AS n, max(len(v)) // $m AS sw FROM e),
        |cents AS (SELECT id AS cid, v AS cv FROM e, nn
        |          WHERE id % greatest(1, n // $nCentroids) = 0
        |          ORDER BY id LIMIT $nCentroids),
        |cb AS MATERIALIZED (
-       |  SELECT j, cid, list_slice(cv, j*$sw+1, j*$sw+$sw) AS cvj
-       |  FROM cents, (SELECT unnest(generate_series(0, ${m - 1})) AS j) js),
+       |  SELECT j, cid, sw, list_slice(cv, j*sw+1, j*sw+sw) AS cvj
+       |  FROM cents, nn, (SELECT unnest(generate_series(0, ${m - 1})) AS j) js),
        |codes AS MATERIALIZED (
        |  SELECT id, j, cid FROM (
        |    SELECT e.id, cb.j, cb.cid,

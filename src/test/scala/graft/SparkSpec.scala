@@ -56,12 +56,13 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** Jobs per round: the difference between two calls that differ only
-    * in their round count, so set-up jobs cancel out.
+    * in their round count, so set-up jobs cancel out. `call(k)` runs
+    * `rounds(k)` rounds.
     */
-  protected def jobsPerRound(name: String)(call: Int => Unit): Double = {
+  protected def jobsPerRound(name: String, rounds: Int => Int = k => k)(call: Int => Unit): Double = {
     val (a, b) = (jobsOf(call(1)), jobsOf(call(3)))
-    val perRound = (b - a) / 2.0
-    info(f"$name: $a jobs for 1 round, $b for 3 → $perRound%.2f per round")
+    val perRound = (b - a).toDouble / (rounds(3) - rounds(1))
+    info(f"$name: $a jobs for ${rounds(1)} rounds, $b for ${rounds(3)} → $perRound%.2f per round")
     perRound
   }
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.algos.{CDLP, PageRank, WCC}
+import graft.algos.{Betweenness, CDLP, Centrality, Cores, HITS, LPAU2I, Louvain, PageRank, SSSP, WCC}
 import graft.engine.{CheckpointConfig, CsrGatherExec}
 import graft.engine.Engine.MetricsLog
 import graft.graph.LinkGraph
@@ -20,9 +20,9 @@ import graft.ingest.SnapshotStore
 
 /** The superstep driver's contract: one Spark job per round, no
   * exchange on the checkpointed edge side of a gather (WCC's join, and
-  * below PageRank's CSR node after its first round), one snapshot per
-  * round at `every = 1`, resume that logs only the rounds it ran, and an
-  * atomic `_latest` commit.
+  * below PageRank's CSR node after its first round), no persisted loop
+  * input, one snapshot per round at `every = 1`, resume that logs only
+  * the rounds it ran, and an atomic `_latest` commit.
   */
 class SuperstepSpec extends SparkSpec {
 
@@ -41,17 +41,61 @@ class SuperstepSpec extends SparkSpec {
     assert((fixed, tol, wcc, cdlp) == ((1.0, 1.0, 1.0, 1.0)))
   }
 
+  private def path(n: Int): LinkGraph = graphFrom(n, (0 until n - 1).map(i => (i, i + 1)))
+
   test("one Spark job per round: SSSP, BFS, kcore, kshell") {
     // these take no round limit, so the round count comes from the graph:
     // from v0 down a path of k + 1 vertices SSSP and BFS run k + 1 rounds;
     // on a path of 2k vertices the 2-core peels both ends each round (k
     // rounds) and kshell first raises k once (k + 1 rounds)
-    def path(n: Int) = graphFrom(n, (0 until n - 1).map(i => (i, i + 1)))
     val sssp = jobsPerRound("sssp") { k => graft.algos.SSSP.run(path(k + 1), "v000000").collect() }
     val bfs = jobsPerRound("bfs") { k => graft.algos.BFS.run(path(k + 1), "v000000").collect() }
     val kcore = jobsPerRound("kcore") { k => graft.algos.Cores.kcore(path(2 * k), 2).collect() }
     val kshell = jobsPerRound("kshell") { k => graft.algos.Cores.kshell(path(2 * k)).collect() }
     assert((sssp, bfs, kcore, kshell) == ((1.0, 1.0, 1.0, 1.0)))
+  }
+
+  test("one Spark job per round: HITS, eigenvector, Louvain, betweenness") {
+    val hits = jobsPerRound("hits") { k => HITS.run(g, maxIter = k, tol = 0.0).collect() }
+    val eigen = jobsPerRound("eigenvector") { k =>
+      Centrality.eigenvector(g, maxIter = k, tol = 0.0).collect() }
+    // the sweep on g still moves vertices in its third round, so
+    // maxRounds sets the round count
+    val louvain = jobsPerRound("louvain") { k => Louvain.run(g, maxRounds = k).collect() }
+    // from v0 down a path of k + 1 vertices the forward wave settles k
+    // levels and halts on the round that adds none (k + 1 rounds), then
+    // the backward pass runs one round per level (k rounds)
+    val betweenness = jobsPerRound("betweenness", k => 2 * k + 1) { k =>
+      Betweenness.run(path(k + 1), Seq("v000000")).collect() }
+    assert((hits, eigen, louvain, betweenness) == ((1.0, 1.0, 1.0, 1.0)))
+  }
+
+  test("no loop persists its inputs: the cache manager stays empty") {
+    // the suites share one session, and some persist their fixture graphs
+    spark.catalog.clearCache()
+    val s = spark
+    import s.implicits._
+    val small = graphFrom(60, randomEdges(60, 240))
+    val uLabels = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("id", "labels")
+    val seeds = Seq("v000000", "v000001")
+    Seq[LinkGraph => org.apache.spark.sql.DataFrame](
+      PageRank.run(_, PageRank.Config(maxIter = 3)),
+      PageRank.personalized(_, 0L, 3),
+      PageRank.personalizedSparse(_, 0L, 3),
+      Centrality.katz(_, maxIter = 3),
+      HITS.run(_, maxIter = 3, tol = 0.0),
+      Centrality.eigenvector(_, maxIter = 3, tol = 0.0),
+      WCC.run(_, maxIter = 3),
+      CDLP.run(_, rounds = 3),
+      Cores.kcore(_, 3),
+      Cores.kshell(_),
+      LPAU2I.run(_, uLabels, propNum = 2, rounds = 2),
+      SSSP.multiSource(_, seeds),
+      Louvain.run(_, maxRounds = 3),
+      Louvain.runMultiLevel(_, roundsPerLevel = 3, levels = 2),
+      Betweenness.run(_, seeds)
+    ).foreach(_(small).collect())
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   /** Runs `f` and returns the executed plans of the queries it ran, in
