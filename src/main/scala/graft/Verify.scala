@@ -20,10 +20,9 @@ import java.nio.file.{Files, Paths}
   * and the session conf is FROZEN (graft.aqe.freeze) so
   * `Engine.withoutAQE`'s save/restore pairs — which would race across
   * threads on the shared session conf — become no-ops: AQE stays ON for
-  * the whole run, exactly the sequential judge-run environment. (AQE
-  * never changes results; and a graph cache materialized under AQE-off
-  * broke cached-plan substitution for the then persist-chained PageRank
-  * states — measured 19.5 s → 6+ min — so ON is also the fast setting.)
+  * the whole run. AQE never changes results, but it does change loop
+  * plans (checkpointed edge tables lose their hash partitioning), so a
+  * query's `wall_s` here is not its AQE-off time elsewhere.
   */
 object Verify {
   /** Longest-first submission: the multi-superstep fixpoints dominate

@@ -39,7 +39,8 @@ object Cores {
   private def peel(g: LinkGraph, fixedK: Option[Int]): DataFrame = {
     val spark = g.vertices.sparkSession
     Superstep.run(spark) {
-      val e = Engine.checkpoint(WCC.symmetrized(g).repartition(col("src")))
+      val e = Engine.checkpoint(
+        g.symmetricEdges.select(col("src"), col("dst")).repartition(col("src")))
       val eCount = e.count()
       val deg0 = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg0"))
       Superstep.Loop(

@@ -23,17 +23,6 @@ import graft.graph.LinkGraph
   */
 object Louvain {
 
-  /** Symmetric weighted adjacency of `g` without self-loops (each
-    * undirected edge in both directions; the two directions' weights
-    * merged).
-    */
-  private def symmetrize(g: LinkGraph): DataFrame =
-    g.edges.toDF.where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("weight"))
-      .unionAll(g.edges.toDF.where(col("src") =!= col("dst"))
-        .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-      .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("w"))
-
   /** One synchronous first-phase sweep over an explicit (adjacency,
     * degree) pair — one [[Superstep]] loop per level of [[runMultiLevel]].
     *
@@ -143,7 +132,8 @@ object Louvain {
   ): DataFrame = {
     val spark = g.vertices.sparkSession
     Engine.withoutAQE(spark) {
-      val und = Engine.checkpoint(symmetrize(g).repartition(col("src")))
+      val und = Engine.checkpoint(
+        g.symmetricEdges.withColumnRenamed("weight", "w").repartition(col("src")))
       val m2 = und.agg(sum(col("w"))).head() match {
         case r if r.isNullAt(0) => 1.0
         case r => r.getDouble(0)
@@ -182,7 +172,7 @@ object Louvain {
 
   /** Modularity of a community assignment. */
   def modularity(g: LinkGraph, comm: DataFrame, resolution: Double = 1.0): Double = {
-    val und = Engine.checkpoint(symmetrize(g))
+    val und = Engine.checkpoint(g.symmetricEdges.withColumnRenamed("weight", "w"))
     val m2 = und.agg(sum(col("w"))).head().getDouble(0)
     val in = und
       .join(comm.select(col("id").as("src"), col("community").as("cs")), "src")

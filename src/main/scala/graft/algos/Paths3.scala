@@ -110,12 +110,9 @@ object Paths3 {
     if (pathOids.size < 2) return pathOids.nonEmpty
     val spark = g.vertices.sparkSession
     import spark.implicits._
-    val hops = pathOids.zip(pathOids.tail).toDF("a", "b")
-    val oidEdges = g.edges.toDF
-      .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("a")), "src")
-      .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("b")), "dst")
-      .select("a", "b")
-    hops.join(oidEdges, Seq("a", "b"), "left_anti").count() == 0
+    val hops = pathOids.zip(pathOids.tail).toDF("src_oid", "dst_oid")
+    hops.join(g.oidEdges().select("src_oid", "dst_oid"), Seq("src_oid", "dst_oid"), "left_anti")
+      .count() == 0
   }
 
   /** Bounded all-simple-paths enumeration source→target with ≤ `cutoff`
@@ -124,11 +121,7 @@ object Paths3 {
     * general, bounded by the cutoff.
     */
   def allSimplePaths(g: LinkGraph, sourceOid: String, targetOid: String, cutoff: Int): DataFrame = {
-    val oidEdges = Engine.checkpoint(g.edges.toDF
-      .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("a")), "src")
-      .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("b")), "dst")
-      .select("a", "b"))
-    oidEdges.rdd.count()
+    val oidEdges = oidPairs(g)
     var frontier = g.vertices.toDF.where(col("oid") === sourceOid)
       .select(array(col("oid")).as("path"), col("oid").as("tip"))
     var found = frontier.where(col("tip") === targetOid).select("path")
@@ -173,11 +166,7 @@ object Paths3 {
     */
   def samplingPaths(g: LinkGraph, startOids: Seq[String], steps: Int, seed: Long = 42L): DataFrame = {
     val spark = g.vertices.sparkSession
-    val oidEdges = Engine.checkpoint(g.edges.toDF
-      .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("a")), "src")
-      .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("b")), "dst")
-      .select("a", "b"))
-    oidEdges.rdd.count()
+    val oidEdges = oidPairs(g)
     import spark.implicits._
     var walk = startOids.toDF("start")
       .select(col("start"), array(col("start")).as("path"), col("start").as("tip"))
@@ -185,6 +174,15 @@ object Paths3 {
       walk = Engine.checkpoint(samplingStep(walk, oidEdges, step, seed))
     }
     walk.select(col("start").as("start_oid"), col("path"))
+  }
+
+  /** The oid-keyed edge pairs `(a, b)`, eagerly checkpointed — the hop
+    * input of the path walks. Package-visible for PlanAudit.
+    */
+  private[graft] def oidPairs(g: LinkGraph): DataFrame = {
+    val e = Engine.checkpoint(g.oidEdges().select(col("src_oid").as("a"), col("dst_oid").as("b")))
+    e.rdd.count()
+    e
   }
 
   /** One sampling-walk step: deterministic argmin via `min_by`, NOT a

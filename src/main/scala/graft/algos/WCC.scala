@@ -16,9 +16,9 @@ import graft.graph.LinkGraph
   * ids are exact (deterministic min of dense ids = min oid per component,
   * since dense ids are oid-sorted ranks).
   *
-  * Spark shape: a [[Pregel.relax]] program over the symmetrized edge
-  * table. Only the *changed* frontier sends (the reference's
-  * `curr_modified` set): a join of edges against the frontier, then
+  * Spark shape: a [[Pregel.relax]] program over the pairs of
+  * [[LinkGraph.symmetricEdges]]. Only the *changed* frontier sends (the
+  * reference's `curr_modified` set): a join of edges against the frontier, then
   * partial+final `min` per destination (hub skew absorbed by map-side
   * combine), then one [[Superstep]] job that checkpoints the state and
   * counts the changed vertices.
@@ -34,19 +34,9 @@ object WCC {
       log: MetricsLog = new MetricsLog,
       ckpt: Option[CheckpointConfig] = None
   ): DataFrame =
-    Pregel.run(g.vertices.toDF, symmetrized(g),
+    Pregel.run(g.vertices.toDF, g.symmetricEdges.select(col("src"), col("dst")),
       Pregel.relax(init = col("id"), message = col("state"), maxIter), log, ckpt)
       .select(col("id"), col("state").as("comp"))
-
-  /** The undirected closure's edge table: every non-loop edge in both
-    * directions, once per `(src, dst)` pair.
-    */
-  def symmetrized(g: LinkGraph): DataFrame = {
-    val e = g.edges.toDF.where(col("src") =!= col("dst"))
-    e.select(col("src"), col("dst"))
-      .unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-  }
 
   /** Canonicalized output for cross-engine comparison: component labeled
     * by its minimum member oid (SURVEY.md §2.B.2 — gid assignment is

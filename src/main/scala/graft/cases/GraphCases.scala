@@ -54,8 +54,7 @@ object GraphCases {
   }
 
   val cases: Seq[Case] = Seq(
-    query("tg_edges", SynthSql.edgesSql(OracleSf))((s, dir) =>
-      GraphBuilder.oidEdges(transcripts(s, dir))),
+    graph("tg_edges", SynthSql.edgesSql(OracleSf))(_.oidEdges()),
     graph("tg_degrees", SynthSql.degreesSql(OracleSf))(_.degrees.select("oid", "out_deg", "in_deg")),
     // explicit hub-skew salting over the mega-hub tool vertices: salted
     // two-phase sum + salted collect (length) must equal the plain
@@ -114,14 +113,13 @@ object GraphCases {
         .select("oid", "label_oid")
     },
     // the Pregel vertex-program UDF surface (engine/Pregel.scala) with a
-    // hand-written HashMin program over WCC's symmetrized edges, driven
+    // hand-written HashMin program over the symmetric edge view, driven
     // through the SAME oracle as tg_wcc
     query("tg_pregel_wcc", wcc.sql) { (s, dir) =>
       val g = graphFor(s, dir)
       import s.implicits._
-      val und = WCC.symmetrized(g).withColumn("weight", lit(1.0)).as[Edge]
       val comps = Pregel.run(
-        LinkGraph(g.vertices, und),
+        LinkGraph(g.vertices, g.symmetricEdges.as[Edge]),
         Pregel.Program(
           init = col("id"),
           message = col("state"),
@@ -205,10 +203,7 @@ object GraphCases {
     // edge boundary of the tool vertex set
     graph("tg_edge_boundary", SynthSql3.edgeBoundarySql(OracleSf)) { g =>
       val tools = g.vertices.toDF.where(col("oid").like("tool:%")).select(col("id"))
-      Assortativity.edgeBoundary(g, tools)
-        .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("src_oid")), "src")
-        .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("dst_oid")), "dst")
-        .select(col("src_oid"), col("dst_oid"))
+      g.oidEdges(Assortativity.edgeBoundary(g, tools)).select(col("src_oid"), col("dst_oid"))
     },
     graph("tg_avgdegconn", SynthSql2.avgDegConnectivitySql(OracleSf))(
       Assortativity.averageDegreeConnectivity(_)
@@ -342,10 +337,7 @@ object GraphCases {
     graph("tg_induce", SynthSql5.induceSql(OracleSf)) { g =>
       val keep = g.vertices.toDF.where(
         col("oid").like("tool:%") || col("oid").like("assistant%") || col("oid") === "system")
-      val g2 = GraphBuilder.induceSubgraph(g, keep.select(col("id")))
-      g2.edges.toDF
-        .join(g2.vertices.toDF.select(col("id").as("src"), col("oid").as("src_oid")), "src")
-        .join(g2.vertices.toDF.select(col("id").as("dst"), col("oid").as("dst_oid")), "dst")
+      GraphBuilder.induceSubgraph(g, keep.select(col("id"))).oidEdges()
         .select(col("src_oid"), col("dst_oid"), col("weight"))
     },
     // MODIFY_VERTICES (dag_utils.py:289): delete tool:t0 (incident edges

@@ -8,8 +8,9 @@ import graft.SparkEntry.{CdlpRounds, OracleSf, PrRounds, graphFor}
 import graft.Twin.unrolled
 import graft.algos.WCC
 import graft.gie.{G, Gremlin}
-import graft.graph.GraphBuilder
+import graft.graph.LinkGraph
 import graft.ingest.SnapshotStore
+import graft.schema.{Edge, Vertex}
 import graft.synth.{SynthSql, SynthSql2, SynthSql3, SynthSql4, SynthSql5, SynthSql6, SynthSql7}
 
 /** GIE plane: hand-lowered pattern queries, the composable traversal DSL
@@ -25,7 +26,7 @@ object GremlinCases {
   val cases: Seq[Case] = Seq(
     // GIE Pattern (algebra.proto:350): user → assistant replica → tool
     query("tg_pattern", SynthSql2.patternSql(OracleSf)) { (s, dir) =>
-      val oe = GraphBuilder.oidEdges(transcripts(s, dir))
+      val oe = graphFor(s, dir).oidEdges()
       oe.as("e1").join(oe.as("e2"), col("e1.dst_oid") === col("e2.src_oid"))
         .where(col("e1.src_oid").like("u%") && col("e1.dst_oid").like("assistant%") &&
           col("e2.dst_oid").like("tool:%"))
@@ -34,7 +35,7 @@ object GremlinCases {
     },
     // GIE PathExpand (algebra.proto:287): 1..2 hops from tool:t0
     query("tg_pathexpand", SynthSql2.pathExpandSql(OracleSf)) { (s, dir) =>
-      val oe = GraphBuilder.oidEdges(transcripts(s, dir))
+      val oe = graphFor(s, dir).oidEdges()
       val h1 = oe.where(col("src_oid") === "tool:t0").select(col("dst_oid").as("oid")).distinct()
       val h2 = oe.join(h1.select(col("oid").as("src_oid")), Seq("src_oid"), "left_semi")
         .select(col("dst_oid").as("oid")).distinct()
@@ -502,11 +503,11 @@ object GremlinCases {
         store, "gmut_vs", "gmut_es")
       Gremlin.mutate(g2,
         "g.V().has('oid', 'tool:t3').drop()", store, "gmut_vs", "gmut_es")
-      val vs = store.readLatest(s, "gmut_vs").get._2
-      val es = store.readLatest(s, "gmut_es").get._2
-      es.join(vs.select(col("id").as("src"), col("oid").as("src_oid")), "src")
-        .join(vs.select(col("id").as("dst"), col("oid").as("dst_oid")), "dst")
-        .select(col("src_oid"), col("dst_oid"), col("weight"))
+      import s.implicits._
+      LinkGraph(
+        store.readLatest(s, "gmut_vs").get._2.as[Vertex],
+        store.readLatest(s, "gmut_es").get._2.as[Edge])
+        .oidEdges().select(col("src_oid"), col("dst_oid"), col("weight"))
     }
   )
 }

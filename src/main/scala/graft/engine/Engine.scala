@@ -87,12 +87,8 @@ object Engine {
     * wherever the session left it). The concurrent Verify driver sets it:
     * the session conf is SHARED across threads, so racing save/restore
     * pairs from parallel queries would flip AQE at arbitrary points in
-    * other queries' planning — and a session whose graph cache
-    * materializes under AQE-off loses cached-plan substitution for the
-    * then persist-chained fixed-round PageRank states (measured: every
-    * superstep re-derived the graph from the synth source; 19.5 s →
-    * 6+ min for tg_pagerank at sf0.01). At verify scale the forgone
-    * AQE-off saving is ~0.1 s per superstep — noise.
+    * other queries' planning. The price is that Verify's loops run with
+    * AQE on, so its wall times are not the engine's AQE-off loop times.
     */
   def withoutAQE[A](spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
     if (sys.props.get("graft.aqe.freeze").contains("true")) return f

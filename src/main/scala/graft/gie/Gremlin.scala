@@ -843,11 +843,7 @@ object Gremlin {
               s"subgraph('$tag') must be terminal or followed by cap('$tag')")
           }
           val sg = t.subgraph()
-          val vs = sg.vertices.toDF
-          st = Right(sg.edges.toDF
-            .join(vs.select(col("id").as("src"), col("oid").as("src_oid")), Seq("src"))
-            .join(vs.select(col("id").as("dst"), col("oid").as("dst_oid")), Seq("dst"))
-            .select(col("src_oid"), col("dst_oid"), col("weight")))
+          st = Right(sg.oidEdges().select(col("src_oid"), col("dst_oid"), col("weight")))
         // side-effect collection (TinkerPop aggregate/cap; MaxGraph
         // FoldStore, aggregate.rs:29-815): aggregate(tag) is an eager
         // barrier folding the traverser bag into a bulk set; cap(tag)

@@ -31,16 +31,15 @@ private[gie] object GGraphOps {
     * table merges per-(pair, label) weights (PropertyGraph.flatten
     * semantics); a plain one passes through.
     */
-  def linkView(g: GGraph): LinkGraph = {
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    val es = if (g.labeled)
-      g.edges.groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight"))
-    else g.edges
-    LinkGraph(
-      g.vertices.select(col("id"), col("oid")).as[graft.schema.Vertex],
-      es.select(col("src"), col("dst"), col("weight")).as[graft.schema.Edge])
-  }
+  def linkView(g: GGraph): LinkGraph =
+    if (g.labeled) PropertyGraph(g.vertices, g.edges).flatten
+    else {
+      val spark = g.vertices.sparkSession
+      import spark.implicits._
+      LinkGraph(
+        g.vertices.select(col("id"), col("oid")).as[graft.schema.Vertex],
+        g.edges.select(col("src"), col("dst"), col("weight")).as[graft.schema.Edge])
+    }
 }
 
 /** Composable GIE-style traversal algebra over a [[GGraph]] — the

@@ -41,6 +41,28 @@ final case class LinkGraph(vertices: Dataset[Vertex], edges: Dataset[Edge]) {
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
       .distinct()
 
+  /** The undirected closure's edge table: every non-loop edge in both
+    * directions, one `(src, dst, weight)` row per pair with the two
+    * directions' weights summed.
+    */
+  def symmetricEdges: DataFrame = {
+    val e = edges.toDF.where(col("src") =!= col("dst"))
+    e.select(col("src"), col("dst"), col("weight"))
+      .unionAll(e.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
+      .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight"))
+  }
+
+  /** An id-space edge frame (this graph's edges by default) relabeled to
+    * oids: `(src_oid, dst_oid, <its other columns>)`.
+    */
+  def oidEdges(e: DataFrame = edges.toDF): DataFrame = {
+    val vs = vertices.toDF
+    e.join(vs.select(col("id").as("src"), col("oid").as("src_oid")), "src")
+      .join(vs.select(col("id").as("dst"), col("oid").as("dst_oid")), "dst")
+      .select(Seq(col("src_oid"), col("dst_oid")) ++
+        e.columns.filterNot(Set("src", "dst")).map(col): _*)
+  }
+
   def persist(): LinkGraph = {
     vertices.persist(StorageLevel.MEMORY_AND_DISK)
     edges.persist(StorageLevel.MEMORY_AND_DISK)
@@ -70,39 +92,6 @@ object GraphBuilder {
     when(col("role") === "tool" && col("tool").isNotNull,
       concat(lit("tool:"), col("tool"))).otherwise(col("role"))
 
-  /** Edges in oid space: reply (lag(oid) → oid per conversation, ordered
-    * by turn_idx, self-loops dropped) + invocation (assistant → tool:<t>).
-    * Returns (src_oid, dst_oid, weight).
-    */
-  def oidEdges(turns: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-    val withOid = turns.select(
-      col("conv_id"), col("turn_idx"), col("role"), col("tool"),
-      oidOfTurn.as("oid"))
-    val reply = withOid
-      .withColumn("prev_oid", lag(col("oid"), 1).over(w))
-      .where(col("prev_oid").isNotNull && col("prev_oid") =!= col("oid"))
-      .select(col("prev_oid").as("src_oid"), col("oid").as("dst_oid"))
-    val invoke = withOid
-      .where(col("role").like("assistant%") && col("tool").isNotNull)
-      .select(col("oid").as("src_oid"), concat(lit("tool:"), col("tool")).as("dst_oid"))
-    reply.unionAll(invoke)
-      .groupBy(col("src_oid"), col("dst_oid"))
-      .agg(count(lit(1)).cast("double").as("weight"))
-  }
-
-  /** Vertices = distinct oids appearing as a turn author or an edge
-    * endpoint, densely ranked by oid ([[Ids.denseRank]]).
-    */
-  def vertices(turns: DataFrame, oidEdgesDf: DataFrame): Dataset[Vertex] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val oids = turns.select(oidOfTurn.as("oid"))
-      .unionAll(oidEdgesDf.select(col("src_oid").as("oid")))
-      .unionAll(oidEdgesDf.select(col("dst_oid").as("oid")))
-    Ids.denseRank(oids, "oid").select(col("id"), col("oid")).as[Vertex]
-  }
-
   /** Full derivation, shaped for the 50M-turn bench scale:
     *
     *  1. vertex universe = distinct turn oids ∪ invoke targets (reply
@@ -112,24 +101,41 @@ object GraphBuilder {
     *  2. turns are mapped to dense ids via a broadcast join *before*
     *     the reply window, so the expensive per-conversation sort
     *     carries a narrow (conv_id, turn_idx, id) row and the lag
-    *     comparison is a long, not a string;
+    *     comparison is a long, not a string (the oid→id map is
+    *     bijective, so prev_oid ≠ oid ⇔ prev_id ≠ id);
     *  3. edge weights aggregate on (src, dst) LONG keys — the
     *     string-keyed 50M-row pair aggregation was the single largest
     *     derivation cost (measured ~2× the long-keyed plan).
-    *
-    * Output is value-identical to `oidEdges` + dense relabeling (the
-    * oid→id map is bijective, so prev_oid ≠ oid ⇔ prev_id ≠ id).
     *
     * The oid→id map join is broadcast ONLY while the dense-id table is
     * small (`broadcastMaxVertices`); above that it degrades to a plain
     * shuffle join — an unconditional broadcast hint would be a driver
     * OOM the moment oid cardinality grows with the data (e.g. per-user
     * ids). The count is one cheap job on the already-persisted map.
+    * [[LinkGraph.oidEdges]] relabels the result to oids.
     */
   def fromTranscripts(
       turns: DataFrame,
       broadcastMaxVertices: Long = 10000000L
   ): LinkGraph = {
+    val spark = turns.sparkSession
+    import spark.implicits._
+    val (vs, links) = derive(turns, broadcastMaxVertices)
+    LinkGraph(vs, links
+      .groupBy(col("src"), col("dst"))
+      .agg(count(lit(1)).cast("double").as("weight")).as[Edge])
+  }
+
+  /** The one transcript → link rule, shared by [[fromTranscripts]] and
+    * [[PropertyGraph.fromTranscripts]]: the dense-id vertex table
+    * (persisted) and one `(src, dst, label)` row per link occurrence —
+    * `reply` (lag(id) → id per conversation, ordered by turn_idx,
+    * self-loops dropped) or `invoke` (assistant → tool:<t>). Counting the
+    * rows per pair is the weight; a caller that never reads `label` has
+    * it pruned from the plan.
+    */
+  private[graph] def derive(
+      turns: DataFrame, broadcastMaxVertices: Long): (Dataset[Vertex], DataFrame) = {
     val spark = turns.sparkSession
     import spark.implicits._
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
@@ -151,15 +157,12 @@ object GraphBuilder {
     val replyIds = turnIds
       .withColumn("prev", lag(col("id"), 1).over(w))
       .where(col("prev").isNotNull && col("prev") =!= col("id"))
-      .select(col("prev").as("src"), col("id").as("dst"))
+      .select(col("prev").as("src"), col("id").as("dst"), lit("reply").as("label"))
     val invokeIds = invoke
       .join(hint(vsDf.select(col("id").as("src"), col("oid").as("src_oid"))), "src_oid")
       .join(hint(vsDf.select(col("id").as("dst"), col("oid").as("dst_oid"))), "dst_oid")
-      .select(col("src"), col("dst"))
-    val es = replyIds.unionAll(invokeIds)
-      .groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).cast("double").as("weight")).as[Edge]
-    LinkGraph(vs, es)
+      .select(col("src"), col("dst"), lit("invoke").as("label"))
+    (vs, replyIds.unionAll(invokeIds))
   }
 
   /** Orientation change (reference TO_UNDIRECTED, `dag_utils.py:600`,

@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.schema.{Edge, Vertex}
@@ -22,9 +21,9 @@ import graft.schema.{Edge, Vertex}
   * (`arrow_projected_fragment.h:402-409`): select vertex/edge labels →
   * induced simple [[LinkGraph]]. [[flatten]] = `ArrowFlattenedFragment`
   * (`core/fragment/arrow_flattened_fragment.h`): fuse all labels into
-  * one vertex/edge space. Dense ids are shared with
-  * [[GraphBuilder.fromTranscripts]] (same oid universe, same ranking),
-  * so projected results are comparable across views.
+  * one vertex/edge space. [[PropertyGraph.fromTranscripts]] reads
+  * [[GraphBuilder.fromTranscripts]]' one derivation, so ids and
+  * projected results are comparable across views.
   */
 final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 
@@ -68,43 +67,20 @@ object PropertyGraph {
       .when(oid === "system", "system")
       .otherwise("user")
 
-  /** Derive the labeled property graph from transcripts: same vertex
-    * universe and dense ids as [[GraphBuilder.fromTranscripts]]; edges
-    * carry their derivation label — `reply` (consecutive-turn links) or
-    * `invoke` (assistant → tool) — with per-label occurrence-count
-    * weights (so [[flatten]] reproduces the single-label weights
-    * exactly). The oid→id map joins are broadcast only while the vertex
-    * table is small (same `broadcastMaxVertices` guard + shuffle-join
-    * fallback as [[GraphBuilder.fromTranscripts]]).
+  /** Derive the labeled property graph from transcripts: the vertex
+    * table and link occurrences of [[GraphBuilder.fromTranscripts]]
+    * (same ids, same broadcast guard), counted per `(src, dst, label)` —
+    * `reply` (consecutive-turn links) or `invoke` (assistant → tool) —
+    * so [[flatten]] reproduces the single-label weights exactly.
     */
   def fromTranscripts(
       turns: DataFrame,
       broadcastMaxVertices: Long = 10000000L
   ): PropertyGraph = {
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-    val withOid = turns.select(
-      col("conv_id"), col("turn_idx"), col("role"), col("tool"),
-      GraphBuilder.oidOfTurn.as("oid"))
-    val reply = withOid
-      .withColumn("prev_oid", lag(col("oid"), 1).over(w))
-      .where(col("prev_oid").isNotNull && col("prev_oid") =!= col("oid"))
-      .select(col("prev_oid").as("src_oid"), col("oid").as("dst_oid"), lit("reply").as("label"))
-    val invoke = withOid
-      .where(col("role").like("assistant%") && col("tool").isNotNull)
-      .select(col("oid").as("src_oid"), concat(lit("tool:"), col("tool")).as("dst_oid"),
-        lit("invoke").as("label"))
-    val labeled = reply.unionAll(invoke)
-      .groupBy(col("src_oid"), col("dst_oid"), col("label"))
-      .agg(count(lit(1)).cast("double").as("weight"))
-    val oe = GraphBuilder.oidEdges(turns)
-    val vs = GraphBuilder.vertices(turns, oe).toDF
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hint: DataFrame => DataFrame =
-      if (vs.count() <= broadcastMaxVertices) broadcast(_) else identity
-    val es = labeled
-      .join(hint(vs.select(col("id").as("src"), col("oid").as("src_oid"))), "src_oid")
-      .join(hint(vs.select(col("id").as("dst"), col("oid").as("dst_oid"))), "dst_oid")
-      .select(col("src"), col("dst"), col("label"), col("weight"))
-    PropertyGraph(vs.select(col("id"), col("oid"), labelOf(col("oid")).as("label")), es)
+    val (vs, links) = GraphBuilder.derive(turns, broadcastMaxVertices)
+    PropertyGraph(
+      vs.toDF.select(col("id"), col("oid"), labelOf(col("oid")).as("label")),
+      links.groupBy(col("src"), col("dst"), col("label"))
+        .agg(count(lit(1)).cast("double").as("weight")))
   }
 }

@@ -51,12 +51,11 @@ object NeighborSample {
 
   /** The oid-keyed adjacency (parent, child, weight), eagerly
     * checkpointed — the shared hop input for every sampler family.
+    * Package-visible for PlanAudit.
     */
-  private[ml] def oidEdges(g: LinkGraph): DataFrame = {
-    val e = Engine.checkpoint(g.edges.toDF
-      .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
-      .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
-      .select(col("parent"), col("child"), col("weight")))
+  private[graft] def oidEdges(g: LinkGraph): DataFrame = {
+    val e = Engine.checkpoint(g.oidEdges()
+      .select(col("src_oid").as("parent"), col("dst_oid").as("child"), col("weight")))
     e.rdd.count()
     e
   }

@@ -136,6 +136,8 @@ object EventStream {
 
   /** Merge newly-derived oid-space edges into the latest committed edge
     * snapshot; returns (merged edges in oid space, committed version).
+    * The new turns' dense ids exist only for the relabel, so their
+    * vertex table is dropped from the cache once the merge is written.
     */
   def appendConversations(
       spark: SparkSession,
@@ -143,7 +145,8 @@ object EventStream {
       table: String,
       newTurns: DataFrame
   ): (DataFrame, Int) = {
-    val newEdges = GraphBuilder.oidEdges(newTurns)
+    val g = GraphBuilder.fromTranscripts(newTurns)
+    val newEdges = g.oidEdges()
     val current = store.latestVersion(table)
       .map(v => store.read(spark, table, v))
       .getOrElse(spark.createDataFrame(
@@ -151,8 +154,9 @@ object EventStream {
     val merged = current.unionByName(newEdges)
       .groupBy(col("src_oid"), col("dst_oid"))
       .agg(sum(col("weight")).as("weight"))
-    val version = store.write(table, merged,
-      Map("appended_rows" -> newTurns.count().toDouble))
+    val version =
+      try store.write(table, merged, Map("appended_rows" -> newTurns.count().toDouble))
+      finally g.vertices.unpersist()
     (store.read(spark, table, version), version)
   }
 

@@ -195,7 +195,9 @@ object SynthSql5 {
 
   /** Gremlin multi-tag select() twin: two-sentence match (u→b, b→c with
     * b an assistant), structural distinctness a<>c, tag oids projected
-    * and ordered with a deterministic limit.
+    * and ordered with a deterministic limit. Dense ids are oid ranks, so
+    * the pairs are ordered and cut on ids and only the kept rows get
+    * their oids: an oid join over every pair is a multi-GB intermediate.
     */
   def gieSelectSql(sf: Double, limit: Int): String =
     s"""WITH ${SynthSql.graphCtes(sf)},
@@ -205,11 +207,13 @@ object SynthSql5 {
        |s2 AS (
        |  SELECT vb.id AS b, e.dst AS c FROM dedges e
        |  JOIN vertices vb ON vb.id = e.src WHERE vb.oid LIKE 'assistant%'),
-       |j AS (SELECT s1.a, s2.c FROM s1 JOIN s2 USING (b) WHERE s1.a <> s2.c)
+       |j AS (
+       |  SELECT s1.a, s2.c FROM s1 JOIN s2 USING (b) WHERE s1.a <> s2.c
+       |  ORDER BY s1.a, s2.c LIMIT $limit)
        |SELECT va.oid AS a, vc.oid AS c FROM j
        |JOIN vertices va ON va.id = j.a
        |JOIN vertices vc ON vc.id = j.c
-       |ORDER BY a, c LIMIT $limit""".stripMargin
+       |ORDER BY a, c""".stripMargin
 
   /** TextP/P predicate-family twin: agent sources (`containing 'gent'`
     * — only `agent:N` oids contain it), destination filtered by

@@ -70,11 +70,7 @@ object PlanAudit {
       // checkpoint the edge input so the audited plan is the STEP alone
       // (the derivation subtree legitimately contains the reply-lag
       // Window and would false-positive the assertion)
-      val oidEdges = graft.engine.Engine.checkpoint(g0.edges.toDF
-        .join(g0.vertices.toDF.select(col("id").as("src"), col("oid").as("a")), "src")
-        .join(g0.vertices.toDF.select(col("id").as("dst"), col("oid").as("b")), "dst")
-        .select("a", "b"))
-      oidEdges.rdd.count()
+      val oidEdges = graft.algos.Paths3.oidPairs(g0)
       import spark.implicits._
       val walk0 = Seq("system").toDF("start")
         .select(col("start"), array(col("start")).as("path"), col("start").as("tip"))
@@ -227,11 +223,7 @@ object PlanAudit {
     {
       val gm = SparkEntry.graphFor(spark, sfDir)
       import spark.implicits._
-      val oidE = graft.engine.Engine.checkpoint(gm.edges.toDF
-        .join(gm.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
-        .join(gm.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
-        .select(col("parent"), col("child"), col("weight")))
-      oidE.rdd.count()
+      val oidE = graft.ml.NeighborSample.oidEdges(gm)
       val cand = Seq("system").toDF("seed")
         .select(col("seed"), col("seed").as("parent"))
         .join(oidE, Seq("parent"))
@@ -278,11 +270,7 @@ object PlanAudit {
     {
       val gm = SparkEntry.graphFor(spark, sfDir)
       import spark.implicits._
-      val oidE = graft.engine.Engine.checkpoint(gm.edges.toDF
-        .join(gm.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
-        .join(gm.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
-        .select(col("parent"), col("child"), col("weight")))
-      oidE.rdd.count()
+      val oidE = graft.ml.NeighborSample.oidEdges(gm)
       val parents = Seq("system", "assistant").toDF("parent")
       val plan = graft.ml.NeighborSample.proportionalPicks(
         oidE, parents, 3, 42L, byInDegree = false)

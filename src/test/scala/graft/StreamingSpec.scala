@@ -150,11 +150,13 @@ class StreamingSpec extends SparkSpec {
     assert(v1 == 0 && v2 == 1)
 
     // merged incremental result == one-shot derivation over everything
-    val oneShot = graft.graph.GraphBuilder.oidEdges(all)
+    val oneShotGraph = graft.graph.GraphBuilder.fromTranscripts(all)
+    val oneShot = oneShotGraph.oidEdges()
     val diff = merged.as("a").join(oneShot.as("b"), Seq("src_oid", "dst_oid"), "full_outer")
       .where(col("a.weight").isNull || col("b.weight").isNull ||
         col("a.weight") =!= col("b.weight"))
     assert(diff.count() == 0)
+    oneShotGraph.vertices.unpersist()
 
     // and the rebuilt graph is usable by the algorithms
     val g = EventStream.graphFromSnapshot(spark, store, "oid_edges")

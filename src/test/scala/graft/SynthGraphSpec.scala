@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.graph.{GraphBuilder, Ids}
+import graft.graph.{GraphBuilder, Ids, PropertyGraph}
 import graft.ingest.SnapshotStore
 import graft.synth.Synth
 
@@ -117,6 +117,15 @@ class SynthGraphSpec extends SparkSpec {
       .where(!(col("a.weight") <=> col("b.weight")))
     assert(diff.count() == 0)
     assert(shuffled.vertices.count() == broadcasted.vertices.count())
+    val pShuffled = PropertyGraph.fromTranscripts(t, broadcastMaxVertices = 1L)
+    val pBroadcasted = PropertyGraph.fromTranscripts(t)
+    assert(pShuffled.edges.count() == pBroadcasted.edges.count())
+    val pDiff = pShuffled.edges.as("a")
+      .join(pBroadcasted.edges.as("b"), Seq("src", "dst", "label"), "full_outer")
+      .where(!(col("a.weight") <=> col("b.weight")))
+    assert(pDiff.count() == 0)
+    assert(pShuffled.vertices.exceptAll(pBroadcasted.vertices).count() == 0 &&
+      pShuffled.vertices.count() == pBroadcasted.vertices.count())
   }
 
   test("degrees and undirected edge set are consistent") {
