@@ -34,7 +34,7 @@ object Triangles {
 
   /** Returns (id: Long, triangles: Long) for every vertex. */
   def run(g: LinkGraph): DataFrame =
-    Adjacency.of(g).index(Nil)(g.edges.select(col("src"), col("dst"))) match {
+    Adjacency.of(g).index(Nil)(g.edges.toDF) match {
       case Some(ix) => intersect(g, ix.oriented)
       case None => joins(g)
     }

@@ -308,45 +308,102 @@ object Gremlin {
     go(steps, afterRange = false)
   }
 
-  /** Lower a has()/where() predicate over a concrete column. String
-    * predicates compare raw; the ordered family (`expr.proto:61-98` LT/
-    * LE/GT/GE + TinkerPop between/inside) reads each literal through
-    * [[ordCmp]]. `between(a,b)` is TinkerPop's [a, b); `inside(a,b)` is
-    * (a, b).
-    */
   /** A P-predicate literal: Right(double) when numeric, Left(raw
     * string) otherwise (TinkerPop P compares any Comparable).
     */
   private def ordCmp(v: String): Either[String, Double] =
     try Right(v.toDouble) catch { case _: NumberFormatException => Left(v) }
 
-  private def predOn(c: Column, p: Arg): Column = p match {
-    case Lit(v) => c === v
-    case Num(n) => c === n
-    case PredComb("and", a, b) => predOn(c, a) && predOn(c, b)
-    case PredComb("or", a, b) => predOn(c, a) || predOn(c, b)
-    case Pred("eq", Seq(v)) => c === v
-    case Pred("neq", Seq(v)) => c =!= v
-    case Pred("within", vs) => c.isin(vs: _*)
-    case Pred("without", vs) => !c.isin(vs: _*)
-    case Pred("startingWith", Seq(v)) => c.startsWith(v)
-    case Pred("notStartingWith", Seq(v)) => !c.startsWith(v)
-    case Pred("containing", Seq(v)) => c.contains(v)
-    case Pred("notContaining", Seq(v)) => !c.contains(v)
-    case Pred("endingWith", Seq(v)) => c.endsWith(v)
-    case Pred("notEndingWith", Seq(v)) => !c.endsWith(v)
-    // TinkerPop P.gt/lt/... compare any Comparable: numeric literals
-    // compare as doubles, everything else as raw strings (binary
-    // collation — identical in Spark UTF8String and DuckDB default
-    // collation for the ASCII oids; CR-2's has('creationDate',
-    // lte($maxDate)) is this ordered-property-filter shape)
-    case Pred("gt", Seq(v)) => ordCmp(v).fold(s => c > s, n => c > n)
-    case Pred("gte", Seq(v)) => ordCmp(v).fold(s => c >= s, n => c >= n)
-    case Pred("lt", Seq(v)) => ordCmp(v).fold(s => c < s, n => c < n)
-    case Pred("lte", Seq(v)) => ordCmp(v).fold(s => c <= s, n => c <= n)
-    case Pred("between", Seq(a, b)) => predOn(c, Pred("gte", Seq(a))) && predOn(c, Pred("lt", Seq(b)))
-    case Pred("inside", Seq(a, b)) => predOn(c, Pred("gt", Seq(a))) && predOn(c, Pred("lt", Seq(b)))
-    case other => throw new IllegalArgumentException(s"unsupported has predicate: $other")
+  /** Vertex properties of string type; the others (`id`, and the edge
+    * `weight` and counts) are numeric.
+    */
+  private val StringProps = Set("oid", "label")
+
+  /** Lower a has()/where() predicate over a concrete column. String
+    * predicates compare raw; the ordered family (`expr.proto:61-98` LT/
+    * LE/GT/GE + TinkerPop between/inside) compares by the property's
+    * type: as numbers on a `numeric` one (a literal that does not parse
+    * compares raw, [[ordCmp]]), as strings on a string one, so
+    * `has('oid', P.lte('5'))` is a string comparison. `between(a,b)` is
+    * TinkerPop's [a, b); `inside(a,b)` is (a, b).
+    */
+  private def predOn(c: Column, p: Arg, numeric: Boolean): Column = {
+    // binary collation on strings — identical in Spark UTF8String and
+    // DuckDB's default collation for the ASCII oids (CR-2's
+    // has('creationDate', lte($maxDate)) is this ordered-property shape)
+    def ord(v: String): Any = if (numeric) ordCmp(v).fold(identity, identity) else v
+    p match {
+      case Lit(v) => c === v
+      case Num(n) => c === n
+      case PredComb("and", a, b) => predOn(c, a, numeric) && predOn(c, b, numeric)
+      case PredComb("or", a, b) => predOn(c, a, numeric) || predOn(c, b, numeric)
+      case Pred("eq", Seq(v)) => c === v
+      case Pred("neq", Seq(v)) => c =!= v
+      case Pred("within", vs) => c.isin(vs: _*)
+      case Pred("without", vs) => !c.isin(vs: _*)
+      case Pred("startingWith", Seq(v)) => c.startsWith(v)
+      case Pred("notStartingWith", Seq(v)) => !c.startsWith(v)
+      case Pred("containing", Seq(v)) => c.contains(v)
+      case Pred("notContaining", Seq(v)) => !c.contains(v)
+      case Pred("endingWith", Seq(v)) => c.endsWith(v)
+      case Pred("notEndingWith", Seq(v)) => !c.endsWith(v)
+      case Pred("gt", Seq(v)) => c > ord(v)
+      case Pred("gte", Seq(v)) => c >= ord(v)
+      case Pred("lt", Seq(v)) => c < ord(v)
+      case Pred("lte", Seq(v)) => c <= ord(v)
+      case Pred("between", Seq(a, b)) => c >= ord(a) && c < ord(b)
+      case Pred("inside", Seq(a, b)) => c > ord(a) && c < ord(b)
+      case other => throw new IllegalArgumentException(s"unsupported has predicate: $other")
+    }
+  }
+
+  /** A correlated filter body that is ONE move on the adjacency index,
+    * as per-row arrays: `rows` holds the move's results (neighbour ids,
+    * or the edge structs an `outE`/`inE`/`bothE` move keeps after its
+    * `has` filters), and `ends`, when the body ends at the far endpoint,
+    * the ids it ends at.
+    */
+  private final case class Move(rows: Column, ends: Option[Column])
+
+  /** [[Move]] for a body `out|in|both(l…)` or `outE|inE|bothE([l])`
+    * followed by `has('weight'|'label', p)` filters and at most one of
+    * `inV`/`outV`/`otherV`; None for any other body, and over the
+    * broadcast threshold (the caller then plans the sub-traversal).
+    */
+  private def oneMove(t: Traversal, body: List[Step]): Option[Move] = {
+    def labels(args: List[Arg]): Option[Seq[String]] = {
+      val ls = args.collect { case Lit(l) if !RangeLit.matches(l) => l }
+      if (ls.size == args.size && (ls.isEmpty || t.labeled)) Some(ls) else None
+    }
+    body match {
+      case List(Step(dir @ ("out" | "in" | "both"), args)) =>
+        labels(args).flatMap(t.neighbourList(dir, _)).map(a => Move(a, Some(a)))
+      case Step(e @ ("outE" | "inE" | "bothE"), args) :: tl if args.size <= 1 =>
+        val (hasSteps, end) = tl.span(_.name == "has")
+        val preds = hasSteps.collect {
+          case Step("has", List(Lit("weight"), p)) => (x: Column) => predOn(x("weight"), p, numeric = true)
+          case Step("has", List(Lit("label"), p)) if t.labeled =>
+            (x: Column) => predOn(x("label"), p, numeric = false)
+        }
+        // the body ends at the far endpoint after outE[.inV], inE.outV
+        // and any otherV; at the traverser's own vertex, or a mix of
+        // both for bothE, after the other vertex steps
+        val far = (e, end) match {
+          case (_, List(Step("otherV", Nil))) | ("outE", Nil | List(Step("inV", Nil))) |
+              ("inE", List(Step("outV", Nil))) => Some(true)
+          case (_, Nil | List(Step("inV" | "outV", Nil))) => Some(false)
+          case _ => None
+        }
+        for {
+          ls <- labels(args) if preds.size == hasSteps.size
+          isFar <- far
+          all <- t.edgeList(e.stripSuffix("E"), ls)
+        } yield {
+          val rows = if (preds.isEmpty) all else filter(all, x => preds.map(_(x)).reduce(_ && _))
+          Move(rows, if (isFar) Some(transform(rows, _("nbr"))) else None)
+        }
+      case _ => None
+    }
   }
 
   /** Frame column for a Gremlin property name: `weight` is the edge
@@ -441,7 +498,7 @@ object Gremlin {
           s"$what sub-traversal must stay vertex-typed")
       }
     // property fetch for a group/value key: oid and (vertex) label are
-    // Auxilia joins; an edge-positioned traverser already carries its
+    // Auxilia fetches; an edge-positioned traverser already carries its
     // edge label (__elabel) and weight (__w)
     def fetch(tr: Traversal, f: String): Traversal = f match {
       case "oid" => tr.auxilia()
@@ -462,12 +519,12 @@ object Gremlin {
         case ("has", List(Lit(f), p)) =>
           // edge-property predicates filter the traverser frame (the
           // value rides the traverser after outE — weight as __w, label
-          // as __elabel); vertex-property predicates push down into the
-          // vertex scan semi-join (the labeled vertex table carries
-          // `label`, so has('label', …) pushes down like any property)
+          // as __elabel); vertex-property predicates go through
+          // Traversal.has (the labeled vertex table carries `label`, so
+          // has('label', …) lowers like any property)
           if (f == "weight" || (f == "label" && t.df.columns.contains("__elabel")))
-            st = Left(t.where(predOn(fieldColIn(t.df, f), p)))
-          else st = Left(t.has(predOn(col(f), p)))
+            st = Left(t.where(predOn(fieldColIn(t.df, f), p, numeric = f == "weight")))
+          else st = Left(t.has(predOn(col(f), p, numeric = !StringProps(f))))
         // existence form: edge-positioned weight/label checks ride the
         // traverser; vertex keys go through the closed-schema hasKey
         // (a key outside the schema drops everything, never an error)
@@ -489,7 +546,7 @@ object Gremlin {
         // seed lookup `has('person','id',$id)`): label scan + property
         // IndexPredicate, both pushed onto the vertex table
         case ("has", List(Lit(lbl), Lit(prop), p)) =>
-          st = Left(t.hasLabel(lbl).has(predOn(col(prop), p)))
+          st = Left(t.hasLabel(lbl).has(predOn(col(prop), p, numeric = !StringProps(prop))))
         // IdentityTreeNode: the no-op step (union(identity(), ...) is the
         // LDBC CR-1 1..3-hop union shape)
         case ("identity", Nil) => st = Left(t)
@@ -673,21 +730,29 @@ object Gremlin {
         // .gremlin:1)
         case ("where" | "filter", List(Sub(sub))) =>
           // a sub-traversal ending in [dedup().]count().is(<p>) is the
-          // correlated count predicate (LDBC q3); otherwise Apply-SEMI
-          sub.reverse match {
+          // correlated count predicate (LDBC q3); otherwise Apply-SEMI.
+          // A body that is one move on the index is a per-row array
+          // predicate instead, with no sub-plan.
+          st = Left(sub.reverse match {
             case Step("is", List(p)) :: Step("count", Nil) :: Step("dedup", Nil) :: body =>
-              st = Left(t.whereCountIs(
-                vertexFn(body.reverse, "where()"), distinctCount = true,
-                predOn(col("__cnt"), p)))
+              oneMove(t, body.reverse).flatMap(_.ends) match {
+                case Some(ends) => t.where(predOn(size(array_distinct(ends)), p, numeric = true))
+                case None => t.whereCountIs(
+                  vertexFn(body.reverse, "where()"), distinctCount = true,
+                  predOn(col("__cnt"), p, numeric = true))
+              }
             case Step("is", List(p)) :: Step("count", Nil) :: body =>
-              st = Left(t.whereCountIs(
-                vertexFn(body.reverse, "where()"), distinctCount = false,
-                predOn(col("__cnt"), p)))
+              oneMove(t, body.reverse) match {
+                case Some(m) => t.where(predOn(size(m.rows), p, numeric = true))
+                case None => t.whereCountIs(
+                  vertexFn(body.reverse, "where()"), distinctCount = false,
+                  predOn(col("__cnt"), p, numeric = true))
+              }
             case _ =>
-              st = Left(t.whereExists(vertexFn(sub, "where()")))
-          }
+              oneMove(t, sub).fold(t.whereExists(vertexFn(sub, "where()")))(m => t.where(size(m.rows) > 0))
+          })
         case ("not", List(Sub(sub))) =>
-          st = Left(t.whereNotExists(vertexFn(sub, "not()")))
+          st = Left(oneMove(t, sub).fold(t.whereNotExists(vertexFn(sub, "not()")))(m => t.where(size(m.rows) === 0)))
         case ("and", subs) if subs.nonEmpty && subs.forall(_.isInstanceOf[Sub]) =>
           st = Left(t.whereAnd(subs.map { case Sub(sub) => vertexFn(sub, "and()") }: _*))
         case ("or", subs) if subs.nonEmpty && subs.forall(_.isInstanceOf[Sub]) =>
@@ -953,7 +1018,8 @@ object Gremlin {
         // is(<p>): scalar predicate on a terminal value frame (LDBC
         // q3's count().is(2); expr.proto comparison over the fold)
         case ("is", List(p)) =>
-          st = Right(d.where(predOn(col(d.columns.head), p)))
+          st = Right(d.where(predOn(col(d.columns.head), p,
+            numeric = d.schema.head.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])))
         // valueMap(p1, p2, …): property-map projection (TinkerPop
         // valueMap, the LDBC sink shape select(...).by(valueMap(...)) —
         // one column per requested property; our property surface is

@@ -3,7 +3,7 @@ package graft.gie
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Adjacency, Engine, Pregel}
+import graft.engine.{Adjacency, AdjacencyIndex, Engine, Pregel, VertexIndex}
 import graft.graph.{LinkGraph, PropertyGraph}
 
 /** Graph handle for the traversal plane. Plain graphs come from
@@ -17,7 +17,33 @@ import graft.graph.{LinkGraph, PropertyGraph}
   * ([[Traversal.hasLabel]], label-filtered expands) require `labeled`.
   */
 final case class GGraph private[gie] (
-    vertices: DataFrame, edges: DataFrame, labeled: Boolean, adjacency: Adjacency)
+    vertices: DataFrame, edges: DataFrame, labeled: Boolean, adjacency: Adjacency) {
+
+  /** The edges of `labels` (all edges when empty). The reference's
+    * QueryParams.tables is a label LIST — an expand over several labels
+    * is the union of the label tables, expressed as one IN predicate on
+    * the (label-partitioned at scale) edge scan.
+    */
+  private[gie] def edgesOf(labels: Seq[String]): DataFrame =
+    if (labels.isEmpty) edges
+    else {
+      require(labeled,
+        s"out/in/both/outE(${labels.mkString("'", "','", "'")}) requires a labeled (property) graph")
+      edges.where(col("label").isin(labels: _*))
+    }
+
+  /** The index of `labels`' edges, or None over the broadcast threshold. */
+  private[gie] def edgeIndex(labels: Seq[String]): Option[AdjacencyIndex] =
+    adjacency.index(labels)(edgesOf(labels))
+
+  /** The vertex-property index, or None when the vertex or the edge
+    * table is over the broadcast threshold or the vertex table carries
+    * more than `id`, `oid` and `label`.
+    */
+  private[gie] def vertexIndex: Option[VertexIndex] =
+    if (vertices.columns.toSet.subsetOf(Set("id", "oid", "label"))) adjacency.vertices(vertices, edges)
+    else None
+}
 
 object GGraph {
   def apply(g: LinkGraph): GGraph =
@@ -57,12 +83,22 @@ private[gie] object GGraphOps {
   *
   * Columns: `__v` = current vertex id; user tags via [[as_]]; `__hops`
   * after a path expansion; `oid` after [[auxilia]] (property fetch).
+  *
+  * While the graph's indexes fit under the broadcast threshold
+  * ([[graft.engine.Adjacency]]), vertex moves and edge-positioned
+  * expands explode an index lookup, and property filters and fetches
+  * read a lookup column: the map/flatMap operators of the reference's
+  * in-memory store. Over it, each lowers to the equi-join it replaces.
+  * `ordering` is the sort order a following limit/range keeps, so a
+  * sink-side decode join can restore it.
   */
 final class Traversal private[gie] (
     g: GGraph, val df: DataFrame, private[gie] val track: Boolean = false,
-    private[gie] val sideEffects: Map[String, DataFrame] = Map.empty) {
+    private[gie] val sideEffects: Map[String, DataFrame] = Map.empty,
+    ordering: Seq[Column] = Nil) {
 
   private def next(d: DataFrame) = new Traversal(g, d, track, sideEffects)
+  private def nextOrdered(d: DataFrame, o: Seq[Column]) = new Traversal(g, d, track, sideEffects, o)
 
   /** Switch on step-level path tracking (TinkerPop `path()` used as a
     * mid-chain step, reference `PathTreeNode.java:39`): `__path` starts
@@ -176,17 +212,29 @@ final class Traversal private[gie] (
   private def sideEffect(tag: String): DataFrame =
     sideEffects.getOrElse(tag, throw new IllegalArgumentException(
       s"no aggregate('$tag') side effect collected before use"))
-  private def edges = g.edges
 
-  /** Select/IndexPredicate on the oid property (`algebra.proto:42,162`):
-    * a left-semi join against the *filtered vertex scan*, so the
-    * predicate pushes down to the vertex table instead of materializing
-    * properties onto every traverser.
+  /** Select/IndexPredicate on the vertex properties (`algebra.proto:42,
+    * 162`), `pred` naming them as vertex-table columns (`id`, `oid`,
+    * `label`). On the vertex index it is a map-side filter over lookup
+    * columns; over the threshold, a left-semi join against the
+    * *filtered vertex scan*, so the predicate pushes down to the vertex
+    * table.
     */
-  def has(pred: Column): Traversal =
-    next(df.join(
-      g.vertices.where(pred).select(col("id").as("__v")),
-      Seq("__v"), "left_semi"))
+  def has(pred: Column): Traversal = g.vertexIndex match {
+    case Some(ix) =>
+      // bind each property under its own name; a frame column of that
+      // name (a fetched oid, a tag) steps aside meanwhile
+      val props = "id" +: ix.properties
+      val aside = props.filter(df.columns.contains)
+      val bound = aside.foldLeft(df)((d, c) => d.withColumnRenamed(c, s"__aside_$c"))
+        .withColumns(props.map(p => p -> ix(p, col("__v"))).toMap)
+        .where(pred).drop(props: _*)
+      next(aside.foldLeft(bound)((d, c) => d.withColumnRenamed(s"__aside_$c", c)))
+    case None =>
+      next(df.join(
+        g.vertices.where(pred).select(col("id").as("__v")),
+        Seq("__v"), "left_semi"))
+  }
 
   /** Gremlin `hasLabel(l, …)` — the per-label Scan/IndexPredicate of the
     * reference's labeled scan (`algebra.proto:196` QueryParams.tables):
@@ -289,18 +337,6 @@ final class Traversal private[gie] (
 
   def both(label: String, more: String*): Traversal = expand("both", label +: more)
 
-  private def labeledEdges(label: String): DataFrame = labeledEdges(Seq(label))
-
-  /** The reference's QueryParams.tables is a label LIST — an expand over
-    * several labels is the union of the label tables, expressed as one
-    * IN predicate on the (label-partitioned at scale) edge scan.
-    */
-  private def labeledEdges(labels: Seq[String]): DataFrame = {
-    require(g.labeled,
-      s"out/in/both/outE(${labels.mkString("'", "','", "'")}) requires a labeled (property) graph")
-    edges.where(col("label").isin(labels: _*))
-  }
-
   private def expand(dir: String, labels: Seq[String]): Traversal =
     next(pathAppend(hop(carried, dir, labels, hopRel(dir, labels))
       .withColumn("__v", col("__to")).drop("__to")))
@@ -314,21 +350,18 @@ final class Traversal private[gie] (
     * otherwise it is an equi-join of `d` with the hop relation `rel`.
     */
   private def hop(d: DataFrame, dir: String, labels: Seq[String], rel: => DataFrame): DataFrame =
-    g.adjacency.index(labels)(edgesOf(labels).select(col("src"), col("dst"))) match {
+    g.edgeIndex(labels) match {
       case Some(ix) =>
         d.select((col("__v") +: d.columns.filter(_ != "__v").toSeq.map(col)) :+
           explode(ix.neighbours(dir, col("__v"))).as("__to"): _*)
       case None => d.join(rel, Seq("__v"))
     }
 
-  private def edgesOf(labels: Seq[String]): DataFrame =
-    if (labels.isEmpty) edges else labeledEdges(labels)
-
   /** Hop relation `(__v, __to)`, one row per edge row along `dir` — the
     * GIE EdgeExpand direction (`algebra.proto:254` Direction OUT/IN/BOTH).
     */
   private def hopRel(dir: String, labels: Seq[String]): DataFrame = {
-    val e = edgesOf(labels)
+    val e = g.edgesOf(labels)
     dir match {
       case "out" => e.select(col("src").as("__v"), col("dst").as("__to"))
       case "in" => e.select(col("dst").as("__v"), col("src").as("__to"))
@@ -361,21 +394,10 @@ final class Traversal private[gie] (
     * edge-property Auxilia fusion. On a labeled graph the edge label
     * rides as `__elabel`.
     */
-  def outE(): Traversal = outEOver(edges)
+  def outE(): Traversal = next(edgeHop("out", Nil))
 
   /** Label-filtered edge-positioned expand. */
-  def outE(label: String): Traversal = outEOver(labeledEdges(label))
-
-  private def outEOver(e0: DataFrame): Traversal = {
-    val e = if (e0.columns.contains("label"))
-      e0.withColumnRenamed("label", "__elabel") else e0
-    next(carried
-      .join(e.withColumnRenamed("src", "__v"), Seq("__v"))
-      .withColumn("__src", col("__v"))
-      .withColumn("__v", col("dst")).drop("dst")
-      .withColumnRenamed("weight", "__w")
-      .withColumn("__other", col("__v")))
-  }
+  def outE(label: String): Traversal = next(edgeHop("out", Seq(label)))
 
   /** EdgeExpand IN keeping the edge position (Gremlin `inE()`): the
     * traverser stays at the edge's END vertex (its own position) and
@@ -383,32 +405,53 @@ final class Traversal private[gie] (
     * `outV()`/`otherV()` jump upstream. Same representation as
     * [[outE]]: `__v` is always the edge END.
     */
-  def inE(): Traversal = inEOver(edges)
+  def inE(): Traversal = next(edgeHop("in", Nil))
 
   /** Label-filtered edge-positioned IN expand. */
-  def inE(label: String): Traversal = inEOver(labeledEdges(label))
-
-  private def inEOver(e0: DataFrame): Traversal = {
-    val e = if (e0.columns.contains("label"))
-      e0.withColumnRenamed("label", "__elabel") else e0
-    next(carried
-      .join(e.withColumnRenamed("dst", "__v"), Seq("__v"))
-      .withColumnRenamed("src", "__src")
-      .withColumnRenamed("weight", "__w")
-      .withColumn("__other", col("__src")))
-  }
+  def inE(label: String): Traversal = next(edgeHop("in", Seq(label)))
 
   /** EdgeExpand BOTH keeping the edge position (Gremlin `bothE()`):
     * bag union of the OUT and IN edge frames — one traverser per
     * incident edge, `__other` marking the far endpoint for
     * [[otherV]] (TinkerPop `EdgeOtherVertexTreeNode`).
     */
-  def bothE(): Traversal =
-    next(outEOver(edges).df.unionByName(inEOver(edges).df))
+  def bothE(): Traversal = next(edgeHop("out", Nil).unionByName(edgeHop("in", Nil)))
 
   /** Label-filtered edge-positioned BOTH expand. */
   def bothE(label: String): Traversal =
-    next(outEOver(labeledEdges(label)).df.unionByName(inEOver(labeledEdges(label)).df))
+    next(edgeHop("out", Seq(label)).unionByName(edgeHop("in", Seq(label))))
+
+  /** The edge-positioned frame of an OUT or IN expand over `labels`'
+    * edges: one row per (traverser, edge row), `__v` the edge END,
+    * `__src` its START, `__other` the far endpoint, `__w` the weight and
+    * (labeled) `__elabel` the label. On the index it explodes the
+    * vertex's [[AdjacencyIndex.entries]]; over the threshold it joins
+    * the edge table.
+    */
+  private def edgeHop(dir: String, labels: Seq[String]): DataFrame = {
+    val d = carried
+    val others = d.columns.filter(_ != "__v").toSeq.map(col)
+    val elabel = if (g.labeled) Seq(col("__elabel")) else Nil
+    val out = dir == "out"
+    val shape = (if (out) (col("__v") +: others) ++ elabel :+ col("__w") :+ col("__src")
+      else (col("__v") +: others :+ col("__src")) ++ elabel :+ col("__w")) :+ col("__other")
+    val rows = g.edgeIndex(labels) match {
+      case Some(ix) =>
+        val e = d.select((col("__v") +: others) :+ explode(ix.entries(dir, col("__v"))).as("__e"): _*)
+        val (here, far) = if (out) (col("__e.nbr"), col("__v")) else (col("__v"), col("__e.nbr"))
+        e.select((here.as("__v") +: others) ++ Seq(far.as("__src"), col("__e.weight").as("__w"),
+          col("__e.label").as("__elabel"), col("__e.nbr").as("__other")): _*)
+      case None =>
+        val e = g.edgesOf(labels).select((Seq(
+          col(if (out) "src" else "dst").as("__v"), col(if (out) "dst" else "src").as("__far"),
+          col("weight").as("__w")) ++ (if (g.labeled) Seq(col("label").as("__elabel")) else Nil)): _*)
+        d.join(e, Seq("__v"))
+          .withColumn("__src", if (out) col("__v") else col("__far"))
+          .withColumn("__v", if (out) col("__far") else col("__v"))
+          .withColumn("__other", col("__far"))
+    }
+    rows.select(shape: _*)
+  }
 
   /** GetV(END) from an edge-positioned traverser (Gremlin `inV()`): the
     * traverser already sits at the edge's end — drop the edge columns.
@@ -449,10 +492,10 @@ final class Traversal private[gie] (
     next(carried.withColumn("__v", col(tag)))
 
   /** Auxilia (`algebra.proto:247`): fetch the oid property for the
-    * current vertex (join against the vertex table).
+    * current vertex (a lookup column on the vertex index, else a join
+    * against the vertex table).
     */
-  def auxilia(): Traversal =
-    next(df.drop("oid").join(g.vertices.select(col("id").as("__v"), col("oid")), Seq("__v")))
+  def auxilia(): Traversal = fetch("oid")
 
   /** Auxilia for the vertex `label` property (Gremlin `label()` on a
     * vertex-positioned traverser). Requires a labeled graph; an
@@ -461,8 +504,12 @@ final class Traversal private[gie] (
     */
   def auxiliaLabel(): Traversal = {
     require(g.labeled, "label() requires a labeled (property) graph")
-    next(df.drop("label").join(
-      g.vertices.select(col("id").as("__v"), col("label")), Seq("__v")))
+    fetch("label")
+  }
+
+  private def fetch(p: String): Traversal = g.vertexIndex match {
+    case Some(ix) => next(df.drop(p).withColumn(p, ix(p, col("__v"))))
+    case None => next(df.drop(p).join(g.vertices.select(col("id").as("__v"), col(p)), Seq("__v")))
   }
 
   /** Dedup (`algebra.proto:135`) on the given keys (default: the
@@ -499,11 +546,11 @@ final class Traversal private[gie] (
     */
   def range(lo: Int, hi: Int): Traversal = {
     require(0 <= lo && lo < hi, "need 0 <= lo < hi")
-    next(df.offset(lo).limit(hi - lo))
+    nextOrdered(df.offset(lo).limit(hi - lo), ordering)
   }
 
   /** Skip the first `n` traversers (Gremlin `skip(n)` = range(n, ∞)). */
-  def skip(n: Int): Traversal = next(df.offset(n))
+  def skip(n: Int): Traversal = nextOrdered(df.offset(n), ordering)
 
   /** Last `n` traversers of the ordered stream (Gremlin `tail(n)`).
     * Needs the stream length — one count job (the reference's
@@ -511,8 +558,25 @@ final class Traversal private[gie] (
     */
   def tail(n: Int): Traversal = {
     val total = df.count()
-    next(df.offset(math.max(0, total - n).toInt))
+    nextOrdered(df.offset(math.max(0, total - n).toInt), ordering)
   }
+
+  /** The neighbours of each traverser's vertex along `dir` over
+    * `labels`' edges as a per-row array column (one entry per edge row),
+    * or None over the broadcast threshold: a correlated filter whose body
+    * is this one move reads it instead of running a sub-plan.
+    */
+  private[gie] def neighbourList(dir: String, labels: Seq[String]): Option[Column] =
+    g.edgeIndex(labels).map(_.neighbours(dir, col("__v")))
+
+  /** The incident edge rows of each traverser's vertex along `dir` as a
+    * per-row array of `(nbr, weight, label)` structs, or None over the
+    * broadcast threshold (see [[neighbourList]]).
+    */
+  private[gie] def edgeList(dir: String, labels: Seq[String]): Option[Column] =
+    g.edgeIndex(labels).map(_.entries(dir, col("__v")))
+
+  private[gie] def labeled: Boolean = g.labeled
 
   /** Apply-SEMI (`algebra.proto:330`): keep traversers whose current
     * vertex has at least one result under the sub-traversal. Correlated
@@ -679,7 +743,7 @@ final class Traversal private[gie] (
     val starts = df.select(col("__v").as("id"), lit(0.0).as("__d")).distinct()
     val dist = Pregel.run(
       g.vertices.select(col("id")).join(starts, Seq("id"), "left"),
-      edges.select(col("src"), col("dst"), col("weight")),
+      g.edges.select(col("src"), col("dst"), col("weight")),
       graft.algos.SSSP.program(col("__d"), maxRounds))
     next(dist.where(col("state").isNotNull).select(col("id").as("__v"), col("state").as("__dist")))
   }
@@ -989,10 +1053,12 @@ final class Traversal private[gie] (
 
   /** Multi-tag Sink projection (TinkerPop `select('a','b')` over a
     * match()/as() result; the GIE Sink's tag-column output,
-    * `algebra.proto:369`): one oid column per tag, each decoded with
-    * one join against the vertex table — the sink-side decode, same
-    * policy as [[pathOids]] (ids ride every upstream shuffle; strings
-    * exist only past this point).
+    * `algebra.proto:369`): one oid column per tag — the sink-side
+    * decode, same policy as [[pathOids]] (ids ride every upstream
+    * shuffle; strings exist only past this point). On the vertex index
+    * each tag is a lookup column, which keeps the row order; over the
+    * threshold each is one join against the vertex table, and an
+    * ordered stream (`order()…limit(n)`) is sorted again after them.
     */
   def selectTags(tags: Seq[String]): DataFrame = selectTags(tags, Set.empty)
 
@@ -1002,11 +1068,17 @@ final class Traversal private[gie] (
     */
   def selectTags(tags: Seq[String], scalar: Set[String]): DataFrame = {
     require(tags.nonEmpty, "select() needs at least one tag")
-    val vs = g.vertices
-    tags.filterNot(scalar.contains).foldLeft(df)((d, tg) =>
-      d.join(vs.select(col("id").as(tg), col("oid").as(s"__oid_$tg")), Seq(tg)))
-      .select(tags.map(tg =>
-        (if (scalar.contains(tg)) col(tg) else col(s"__oid_$tg")).as(tg)): _*)
+    g.vertexIndex match {
+      case Some(ix) =>
+        df.select(tags.map(tg => (if (scalar.contains(tg)) col(tg) else ix("oid", col(tg))).as(tg)): _*)
+      case None =>
+        val vs = g.vertices
+        val decoded = tags.filterNot(scalar.contains).foldLeft(df)((d, tg) =>
+          d.join(vs.select(col("id").as(tg), col("oid").as(s"__oid_$tg")), Seq(tg)))
+        (if (ordering.isEmpty) decoded else decoded.orderBy(ordering: _*))
+          .select(tags.map(tg =>
+            (if (scalar.contains(tg)) col(tg) else col(s"__oid_$tg")).as(tg)): _*)
+    }
   }
 
   /** Gremlin `sample(n)` (MaxGraph `MetapathSample`, `unarystep/
@@ -1105,14 +1177,14 @@ final class Traversal private[gie] (
     * TakeOrderedAndProject on the Spark side).
     */
   def topK(n: Int, ordering: Column*): Traversal =
-    next(df.orderBy(ordering: _*).limit(n))
+    nextOrdered(df.orderBy(ordering: _*).limit(n), ordering)
 
   /** OrderBy without the fused limit (a following [[limit]] restores
     * the TakeOrderedAndProject fusion — Catalyst collapses Sort+Limit).
     */
-  def ordered(ordering: Column*): Traversal = next(df.orderBy(ordering: _*))
+  def ordered(ordering: Column*): Traversal = nextOrdered(df.orderBy(ordering: _*), ordering)
 
-  def limit(n: Int): Traversal = next(df.limit(n))
+  def limit(n: Int): Traversal = nextOrdered(df.limit(n), ordering)
 
   /** Sink (`algebra.proto:369`): project out result columns. */
   def values(cols: String*): DataFrame = df.select(cols.map(col): _*)

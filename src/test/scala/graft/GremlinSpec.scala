@@ -937,4 +937,46 @@ class GremlinSpec extends SparkSpec {
         s"input: $bad → ${e.getMessage}")
     }
   }
+
+  test("select() after order().limit() keeps the requested order on the index and join paths") {
+    val s = spark
+    import s.implicits._
+    // users reply to assistants; dense ids follow the oid order
+    val users = Seq("u0", "u1", "u2", "u3")
+    val pg2 = graft.graph.PropertyGraph(
+      (Seq("a0" -> "assistant", "a1" -> "assistant") ++ users.map(_ -> "user")).zipWithIndex
+        .map { case ((o, l), i) => (i.toLong, o, l) }.toDF("id", "oid", "label"),
+      Seq((2, 0), (3, 0), (4, 1), (5, 1), (2, 1)).map { case (a, b) => (a.toLong, b.toLong, "reply", 1.0) }
+        .toDF("src", "dst", "label", "weight"))
+    // CR-2's sink: m's oid descending, then p ascending
+    val text = "g.V().hasLabel('user').out('reply').as('p').in('reply').as('m')" +
+      ".order().by('oid', desc).by(select('p'), asc).limit(10).select('p', 'm')"
+    def ordered(): Seq[(String, String)] =
+      Gremlin.run(pg2, text).collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val want = Seq.fill(3)(("a1", "u3")) ++ Seq.fill(3)(("a1", "u2")) ++ Seq.fill(2)(("a0", "u1")) ++
+      Seq.fill(2)(("a0", "u0"))
+    assert(ordered() == want, "index path order")
+    assert(viaJoin(ordered()) == want, "join path order")
+  }
+
+  test("ordered predicates compare string properties as strings, numeric ones as numbers") {
+    val s = spark
+    import s.implicits._
+    val names = Seq("3", "5", "12", "40", "a")
+    val vs = names.zipWithIndex.map { case (n, i) => graft.schema.Vertex(i.toLong, n) }.toDS()
+    val es = Seq((0, 1, 1.0), (1, 2, 2.0), (2, 3, 10.0), (3, 4, 3.0), (4, 0, 2.5))
+      .map { case (a, b, w) => graft.schema.Edge(a.toLong, b.toLong, w) }.toDS()
+    val sg = graft.graph.LinkGraph(vs, es)
+    for (path <- Seq("index", "join")) {
+      def run(q: String): Set[String] =
+        if (path == "index") rows(Gremlin.run(sg, q)) else viaJoin(rows(Gremlin.run(sg, q)))
+      // as strings "12" and "40" sort below "5" and "a" above it; as
+      // numbers every oid but "a" would fail to parse
+      assert(run("g.V().has('oid', P.lte('5')).values('oid')") == Set("3", "5", "12", "40"), path)
+      assert(run("g.V().out().has('oid', P.between('12', '5')).values('oid')") == Set("12", "3", "40"), path)
+      // weights and counts stay numeric: 10.0 > 3 although "10.0" < "3"
+      assert(run("g.V().outE().has('weight', P.gt(3)).inV().values('oid')") == Set("40"), path)
+      assert(run("g.V().out().count().is(P.gt(4))") == Set("5"), path)
+    }
+  }
 }

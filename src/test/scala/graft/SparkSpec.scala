@@ -26,6 +26,17 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
   locally { spark.sparkContext.setLogLevel("ERROR") }
 
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold = -1`, which
+    * turns the graph indexes off ([[graft.engine.Adjacency]]): every
+    * index-served step plans the join it replaces.
+    */
+  protected def viaJoin[A](f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, old)
+  }
+
   /** Runs `f` and returns the Spark jobs it started. Marker jobs before
     * and after bracket the listener's view, so events still queued from
     * earlier work are not counted and all of `f`'s events are.

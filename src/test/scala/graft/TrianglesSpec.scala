@@ -17,13 +17,6 @@ import graft.synth.Synth
   */
 class TrianglesSpec extends SparkSpec {
 
-  private def viaJoin[A](f: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try f finally spark.conf.set(key, old)
-  }
-
   private def joins(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
 
